@@ -19,28 +19,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from tiflow_spark.plans.parity import REGISTRY  # noqa: E402
 
-# The driver's correctness snapshot caps at 50 queries, taken in dict order.
-# With more than 50 registered, we rotate coverage across rounds so no query
-# goes more than ~4 rounds without a hard-signal row. Round 14 (per VERDICT
-# r13 next-round #5): FIRST the 28 queries whose latest driver check was
-# round 9 — after this round nothing in the registry is staler than r10.
-# Then the rows NEW in round 14: cdc_dispatch_index_name (named-index
-# dispatch config + VerifyTables create-time rejection parity,
-# pkg/config/sink.go:389-390, event_router.go:131-160,
-# partition/index_value.go:67-86 — VERDICT r13 #2) and cdc_topic_ddl (DDL
-# topic routing with the schema-scope→default-topic fallback,
-# GetTopicForDDL event_router.go:96-115 — VERDICT r13 #4). Re-checks for
-# CHANGED implementations: cdc_dispatch_inertia + cdc_handle_key_dispatch
-# (the dispatch()/partition_column rework — rule-resolution wiring, ts
-# message key, per-table handle-column plumbing, byte-preserving binary
-# writes, ADVICE r13 items 1-4), validate_chunk_tuple (tuple chunk
-# assignment now routes through with_tuple_chunk_id's binsearch switch,
-# VERDICT r13 #6), sink_storage_crlf_roundtrip (the header-mode rotation
-# guard's sentinel default, ADVICE r13 #5). The remaining 16 slots go to
-# the oldest r10-checked queries in name order; deferred names are
-# meanwhile covered by the sf0.001 oracle sweep on every pytest run
-# (tests/test_parity.py) and the opt-in sf0.1 full sweep. The remainder
-# follows in registration order as regression sentinels.
+# The driver's correctness snapshot keeps only the first 50 queries, in dict
+# order, so this list picks those 50; the rest follow in registration order.
 _PRIORITY = [
     # latest-checked round 9 — the full r9 cohort (VERDICT r13 #5)
     "olap_customer_distribution",

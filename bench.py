@@ -857,11 +857,12 @@ def _driver_queries(merged: dict, budget: int) -> dict[str, float]:
     per-query numbers must reach the driver's tail parse so PERF regains
     per_query/geomean/regression detection). The driver records a
     2000-char stdout tail and parses the LAST JSON line, so the whole line
-    must fit — values round to 2 decimals and, if the full registry set
-    still overflows ``budget``, entries are greedily kept shortest-name-
-    first to maximize coverage. The 11 legacy headline queries (present in
-    the parsed line since round 1) are always kept — entries may be added,
-    never removed."""
+    must fit — values keep 3 significant digits (a 4 ms query stays
+    0.004, not 0.0) and, if the full registry set still overflows
+    ``budget``, entries are greedily kept shortest-name-first to maximize
+    coverage; every entry left out is named on stderr. The 11 legacy
+    headline queries (present in the parsed line since round 1) are always
+    kept — entries may be added, never removed."""
     flat: dict[str, float] = {}
     for key in _QUERY_SECTION_KEYS:
         flat.update(merged.get(key) or {})
@@ -869,16 +870,21 @@ def _driver_queries(merged: dict, budget: int) -> dict[str, float]:
               "incremental_dedup_1to10_sec"):
         if isinstance(merged.get(k), (int, float)):
             flat[k] = merged[k]
-    flat = {k: round(float(v), 2) for k, v in flat.items()}
+    flat = {k: float(f"{float(v):.3g}") for k, v in flat.items()}
     mandatory = set((merged.get("queries") or {}).keys())
     out = {k: v for k, v in flat.items() if k in mandatory}
     used = len(json.dumps(out, separators=(",", ":")))
+    dropped = []
     for k in sorted(set(flat) - mandatory, key=lambda s: (len(s), s)):
         cost = len(json.dumps({k: flat[k]})) - 1  # {+} minus the comma
         if used + cost > budget:
+            dropped.append(k)
             continue
         out[k] = flat[k]
         used += cost
+    if dropped:
+        print(f"# headline line over its {budget}-char budget; left out: "
+              f"{', '.join(dropped)}", file=sys.stderr)
     return out
 
 
@@ -1019,7 +1025,8 @@ def main() -> None:
     # timings again (dropped in round 10 when the merged mega-line outgrew
     # the 2000-char tail — since then PERF per_query/geomean/regression
     # detection had no data). Budgeted so the WHOLE line always fits the
-    # tail: ≤ 1900 chars incl. the wrapper keys, per-query values at 2dp.
+    # tail: ≤ 1900 chars incl. the wrapper keys, per-query values at 3
+    # significant digits.
     slim = {
         "metric": "headline_queries_total_sec",
         "value": merged.get("value"),

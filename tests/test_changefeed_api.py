@@ -80,6 +80,38 @@ def test_changefeed_to_mq_kind(spark, source_dir, tmp_path):
     assert out.agg(F.max("partition")).collect()[0][0] <= 3
 
 
+def test_changefeed_to_mq_does_not_broadcast_the_payload(
+    spark, source_dir, tmp_path
+):
+    """The encoded messages join back to their routing columns by a
+    shuffled hash join: a broadcast would collect every message to the
+    driver and keep it on the driver heap until the context cleaner runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id():
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    bus.waitUntilEmpty()
+    before = last_id()
+    create_changefeed(
+        spark, source_dir, DEMO_CFG,
+        "kafka://broker:9092/cdc?protocol=canal-json&partition-num=4",
+        str(tmp_path / "wd"),
+    )
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).executionId() > before
+    ]
+    produce = [p for p in plans if "ShuffledHashJoin" in p]
+    assert produce
+    assert not any("BroadcastExchange" in p for p in produce)
+
+
 def test_changefeed_to_storage_kind(spark, source_dir, tmp_path):
     spec, files = create_changefeed(
         spark, source_dir, DEMO_CFG,

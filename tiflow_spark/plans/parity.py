@@ -847,6 +847,44 @@ _install_codec_oracles()
 
 CUSTOMER_COLS = ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
 
+
+def _stage_out_of_order(env: DataFrame, work: str) -> str:
+    """Stage ``env`` as a file-source directory whose three ``seq % 3``
+    chunks arrive out of order — 2, then 0, then 1 — so the changefeed
+    runs several micro-batches. The merge result is arrival-order
+    independent (last-(commit_ts, seq)-wins per key); the order is pinned
+    anyway so every run replays the same batches.
+
+    The chunks are written concurrently, each into its own directory
+    (concurrent appends into one directory would collide on the shared
+    ``_temporary`` committer dir), then renamed in with a chunk prefix.
+    The file source orders files by mtime and a rename keeps the write
+    time, so the files are restamped with strictly increasing mtimes in
+    arrival order."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _write_chunk(chunk: int) -> tuple[int, str]:
+        d = f"{work}/chunk{chunk}"
+        env.filter(F.col("seq") % 3 == chunk).write.parquet(d)
+        return chunk, d
+
+    src = f"{work}/source"
+    os.makedirs(src, exist_ok=True)
+    with ThreadPoolExecutor(max_workers=3) as ex:
+        done = dict(ex.map(_write_chunk, (2, 0, 1)))
+    staged = []
+    for chunk in (2, 0, 1):
+        for f in sorted(os.listdir(done[chunk])):
+            if f.startswith("part-"):
+                staged.append(os.path.join(src, f"c{chunk}-{f}"))
+                os.rename(os.path.join(done[chunk], f), staged[-1])
+    t0 = int(time.time()) - len(staged)
+    for i, path in enumerate(staged):
+        os.utime(path, (t0 + i, t0 + i))
+    return src
+
+
 @register(
     "stream_apply",
     f"""{SPLIT_CTE},
@@ -871,32 +909,7 @@ def q_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     env = _env(spark, sf_dir)
     work = _scratch_dir(prefix="tiflow_stream_q_")
-    src = f"{work}/source"
-    # three out-of-order drops → multiple micro-batches. r15 (guide
-    # §2.6): the three chunk writes are independent jobs — overlap them
-    # from a driver pool. Concurrent ``append`` jobs into ONE directory
-    # would collide on the shared ``_temporary`` committer dir, so each
-    # chunk writes its own dir and the driver renames the finished files
-    # in (chunk-prefixed, collision-free). The merge result is
-    # arrival-order independent (last-(commit_ts, seq)-wins per key), as
-    # the out-of-order drop order already demonstrates.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_chunk(chunk: int) -> tuple[int, str]:
-        d = f"{work}/chunk{chunk}"
-        env.filter(F.col("seq") % 3 == chunk).write.parquet(d)
-        return chunk, d
-
-    os.makedirs(src, exist_ok=True)
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        done = dict(ex.map(_write_chunk, (2, 0, 1)))
-    for chunk in (2, 0, 1):
-        for f in sorted(os.listdir(done[chunk])):
-            if f.startswith("part-"):
-                os.rename(
-                    os.path.join(done[chunk], f),
-                    os.path.join(src, f"c{chunk}-{f}"),
-                )
+    src = _stage_out_of_order(env, work)
     _, target = run_changefeed(spark, src, DEMO_CFG, work)
     from tiflow_spark.sinks.bucketed import read_state
 
@@ -6224,11 +6237,6 @@ def q_shardddl_optimistic_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(",", "joined_columns").alias("joined_csv"),
         "n_conflicts",
     )
-    # the envelope render feeds one decode branch per shard — persist the
-    # two-shard slice so the events scan + render runs once per
-    # invocation, not once per branch (r15, the §23/r14 idiom;
-    # batch-scale, the bench clears the cache per rep)
-    env = env.filter(F.col("schema").isin(*regs.keys())).persist()
     parts = []
     for shard, reg in regs.items():
         part = env.filter(F.col("schema") == shard)

@@ -107,14 +107,3 @@ def materialize_boundary(df, reliable: bool | None = None):
             or tempfile.mkdtemp(prefix="tiflow_reliable_ckpt_")
         )
     return df.checkpoint(eager=False)
-
-
-def ensure_engine_confs(spark: SparkSession) -> SparkSession:
-    """Set the runtime confs our operators rely on, on a session we did not
-    build (e.g. the correctness driver's). Only runtime-settable keys."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
-    return spark

@@ -77,10 +77,6 @@ _DEFAULT = re.compile(
 )
 
 
-def _split_ident(m_schema: str | None, m_table: str) -> tuple[str | None, str]:
-    return m_schema, m_table
-
-
 def _parse_default(clause: str) -> str | None:
     m = _DEFAULT.search(clause)
     if not m:

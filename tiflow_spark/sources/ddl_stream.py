@@ -79,11 +79,6 @@ _TEMPLATES = [
      "RENAME TABLE events_tmp TO events_new", None, None),
 ]
 
-_TEMPLATE_SCHEMA = (
-    "seq long, pos12 long, schema string, table string, ddl_type string, "
-    "query string, add_column string, default_value string"
-)
-
 
 def ddl_stream(events: DataFrame) -> DataFrame:
     """Synthesize the DDL side-channel from the events table's time range.

@@ -1,15 +1,13 @@
 """Chunked JDBC sources — snapshot reads of upstream MySQL/TiDB tables.
 
-Reference: sync_diff_inspector/source/{tidb,mysql_shard,chunks_iter}.go
-(chunk iterators with snapshot ts; sharded MySQL = union of shards),
-dm/dumpling (full export) and dm/loader (bulk import): the full-migration
-path is a parallel chunked table scan.
+Reference: sync_diff_inspector/source/{tidb,chunks_iter}.go (chunk
+iterators with snapshot ts), dm/dumpling (full export) and dm/loader (bulk
+import): the full-migration path is a parallel chunked table scan.
 
 Spark shape: `spark.read.jdbc` with a *predicate list* — one chunk WHERE
 clause per partition, so the scan parallelizes across executors exactly
 like the reference's chunk iterator, and each chunk predicate pushes down
-to the upstream index. Shards union via `unionByName` after per-shard
-reads (mysql_shard.go's multi-source iterator).
+to the upstream index.
 
 No JDBC driver ships in this container, so `read_chunked` is exercised in
 tests through its pure parts (predicate generation) and a parquet-backed
@@ -19,7 +17,6 @@ fake; against a real upstream it is the documented one-liner.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,23 +53,3 @@ def read_chunked(
     return spark.read.jdbc(
         url, table, predicates=chunk_predicates(spec), properties=properties or {}
     )
-
-
-def read_sharded(
-    spark: SparkSession,
-    url_per_shard: dict[str, str],
-    table: str,
-    spec: ChunkSpec,
-    properties: dict | None = None,
-) -> DataFrame:
-    """Sharded-MySQL union source (mysql_shard.go): per-shard chunked reads
-    unioned by name, with the shard id stamped for routing/causality."""
-    from pyspark.sql import functions as F
-
-    parts = [
-        read_chunked(spark, url, table, spec, properties).withColumn(
-            "source_shard", F.lit(shard)
-        )
-        for shard, url in url_per_shard.items()
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts)

@@ -26,17 +26,6 @@ from pyspark.sql import types as T
 from tiflow_spark.functions.hashing import chunk_checksum_agg
 
 
-def chunk_bounds(df: DataFrame, pk: str, target_rows: int = 50_000) -> list[float]:
-    """PK quantile chunk bounds (~target_rows rows per chunk), like the
-    reference's random-sampling splitter (splitter/random.go:277)."""
-    n = df.count()
-    n_chunks = max(1, n // target_rows)
-    if n_chunks == 1:
-        return []
-    probs = [i / n_chunks for i in range(1, n_chunks)]
-    return df.stat.approxQuantile(pk, probs, 0.001)
-
-
 def chunk_id_col(pk: str, width: int) -> Column:
     """Fixed-width chunking (deterministic, oracle-friendly alternative to
     quantile bounds)."""
@@ -743,23 +732,6 @@ def lex_tuple_compare(
     for t in terms[1:]:
         out = out | t
     return out
-
-
-def tuple_range_predicate(
-    cols: Sequence[str],
-    lower: Sequence | None,
-    upper: Sequence | None,
-    side: str = "",
-) -> Column:
-    """(lower, upper] chunk range over an index tuple — the WHERE clause
-    the reference generates per chunk (chunk/chunk.go:278-380). None on
-    either side = unbounded (first/last chunk)."""
-    pred = F.lit(True)
-    if lower is not None:
-        pred = pred & lex_tuple_compare(cols, lower, ">", side)
-    if upper is not None:
-        pred = pred & lex_tuple_compare(cols, upper, "<=", side)
-    return pred
 
 
 def limit_chunk_bounds(
