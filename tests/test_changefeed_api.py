@@ -4,13 +4,15 @@ reference's `cdc cli changefeed create --sink-uri=...`."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from tiflow_spark.config import parse_sink_uri, sink_uri_columns
 from tiflow_spark.envelope import events_to_changes, load_table
 from tiflow_spark.plans.parity import DEMO_CFG
-from tiflow_spark.tools import create_changefeed
+from tiflow_spark.tools import _MQ_ENCODERS, create_changefeed
 
 
 @pytest.fixture()
@@ -83,9 +85,9 @@ def test_changefeed_to_mq_kind(spark, source_dir, tmp_path):
 def test_changefeed_to_mq_does_not_broadcast_the_payload(
     spark, source_dir, tmp_path
 ):
-    """The encoded messages join back to their routing columns by a
-    shuffled hash join: a broadcast would collect every message to the
-    driver and keep it on the driver heap until the context cleaner runs."""
+    """The dispatched frame is encoded in place, so the broker write joins
+    nothing: no broadcast collects the messages to the driver heap, and
+    the only exchange is the (topic, partition) offset window."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -107,9 +109,57 @@ def test_changefeed_to_mq_does_not_broadcast_the_payload(
         for i in range(execs.size())
         if execs.apply(i).executionId() > before
     ]
-    produce = [p for p in plans if "ShuffledHashJoin" in p]
-    assert produce
-    assert not any("BroadcastExchange" in p for p in produce)
+    produce = [p for p in plans if "InsertIntoHadoopFsRelation" in p
+               and "/wd/broker" in p]
+    assert len(produce) == 1
+    plan = produce[0]
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
+    # an adaptive plan lists its nodes twice: the final (or current) plan
+    # first, then the initial plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"(?<!\w)Exchange \(\d+\)", final)) == 1, plan
+
+
+@pytest.mark.parametrize("protocol", sorted(_MQ_ENCODERS))
+def test_mq_in_place_encode_matches_join_path(
+    spark, source_dir, tmp_path, protocol
+):
+    """Encoding the dispatched frame in place writes the same broker rows
+    as encoding the source separately and joining the messages back to
+    their routing columns on (commit_ts, seq). The broker key stays the
+    routed handle key, also for protocols that emit a key of their own."""
+    from tiflow_spark.operators import filters as flt
+    from tiflow_spark.operators import transforms as tfm
+    from tiflow_spark.operators.dispatchers import dispatch
+    from tiflow_spark.sinks.mq import produce_file_broker
+    from tiflow_spark.streaming.pipeline import ENVELOPE_SCHEMA
+    from tiflow_spark.tools import _mq_encode
+
+    _, broker = create_changefeed(
+        spark, source_dir, DEMO_CFG,
+        f"kafka://broker:9092/cdc?protocol={protocol}&partition-num=4",
+        str(tmp_path / "wd"),
+    )
+    env = spark.read.schema(ENVELOPE_SCHEMA).parquet(source_dir)
+    env = tfm.split_updates(
+        tfm.route(flt.apply_filters(env, DEMO_CFG), DEMO_CFG)
+    )
+    d = dispatch(env, DEMO_CFG, num_partitions=4)
+    value = _mq_encode(env, protocol).select("commit_ts", "seq", "value")
+    joined = d.select("topic", "partition", "key", "commit_ts", "seq").join(
+        value, ["commit_ts", "seq"]
+    )
+    ref = str(tmp_path / "ref")
+    produce_file_broker(joined, ref, batch_id=0)
+
+    cols = ["topic", "partition", "key", "value", "commit_ts", "seq",
+            "batch_offset"]
+    got = spark.read.parquet(broker).select(*cols)
+    want = spark.read.parquet(ref).select(*cols)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_changefeed_to_storage_kind(spark, source_dir, tmp_path):

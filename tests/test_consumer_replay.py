@@ -625,3 +625,171 @@ def test_csv_replay_random_interleavings_match_direct_apply(
         assert got == want
 
     inner()
+
+
+_ENV_DDL = (
+    "op string, schema string, table string, commit_ts long, seq long, "
+    "key string, before struct<id: bigint, balance: double, note: string>, "
+    "after struct<id: bigint, balance: double, note: string>, "
+    "topic string, partition int"
+)
+
+
+def _tied_batches():
+    """Envelope batches of six keys over two key-sticky partitions. Every
+    commit_ts falls in one millisecond, so canal-json's `es` ties for all
+    events and only the segment position orders a key's events. Append
+    order is commit order, as a producer appends."""
+    batches, seq = [], 0
+    for b in range(3):
+        rows = []
+        for k in range(1, 7):
+            for j in range(2):
+                seq += 1
+                first = b == 0 and j == 0
+                op = "I" if first else "U"
+                if b == 2 and j == 1 and k % 2 == 0:
+                    op = "D"
+                img = (k, float(seq), f"n{seq}")
+                prev = None if first else (k, float(seq - 1), f"n{seq - 1}")
+                rows.append((
+                    op, "s", "t", 1_000_000 + b * 300 + k * 20 + j, seq,
+                    str(k), prev if op != "I" else None,
+                    img if op != "D" else None, "s.t", k % 2,
+                ))
+        batches.append(rows)
+    return batches
+
+
+def _produce_tied_broker(spark, broker, compress_last=None):
+    """Segments: batch 0, batch 1 appended twice (an at-least-once
+    produce replay), batch 2 — at least two segments per partition."""
+    from tiflow_spark.codecs.canal_json import encode_canal_json
+    from tiflow_spark.sinks.mq import produce_file_broker
+
+    batches = _tied_batches()
+    for batch_id in (0, 1, 1, 2):
+        env = spark.createDataFrame(batches[batch_id], _ENV_DDL)
+        produce_file_broker(
+            encode_canal_json(env, extra_cols=("topic", "partition", "key")),
+            broker,
+            batch_id=batch_id,
+            transport_compression=compress_last if batch_id == 2 else None,
+        )
+    return [r for rows in batches for r in rows]
+
+
+def _oracle_state(rows):
+    """DuckDB last-writer state over the source events."""
+    import duckdb
+    import pandas as pd
+
+    src = pd.DataFrame(
+        [
+            (op, key, cts, seq, *(img or (None, None, None)))
+            for op, _s, _t, cts, seq, key, before, after, _tp, _p in rows
+            for img in [after if op != "D" else before]
+        ],
+        columns=["op", "key", "commit_ts", "seq", "id", "balance", "note"],
+    )
+    con = duckdb.connect()
+    con.register("src", src)
+    return {
+        tuple(r)
+        for r in con.execute(
+            "SELECT key, id, balance, note FROM src "
+            "QUALIFY row_number() OVER (PARTITION BY key "
+            "ORDER BY commit_ts DESC, seq DESC) = 1 AND op <> 'D'"
+        ).fetchall()
+    }
+
+
+def test_position_fold_equals_offset_fold_and_oracle(spark, work_dir):
+    """Folding on the segment position (batch_id, batch_offset) gives the
+    same state as folding on consume_file_broker's dense offsets — which
+    number exactly that order per (topic, partition) — with `es` tied
+    within a millisecond, several segments per partition and one batch
+    appended twice; both equal the DuckDB oracle."""
+    from pyspark.sql import Window
+
+    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.streaming.consumer import _CANAL_SCHEMA
+
+    broker = f"{work_dir}/broker_pos"
+    rows = _produce_tied_broker(spark, broker)
+    types = {"id": "bigint", "balance": "double", "note": "string"}
+    cols = ("key", "id", "balance", "note")
+    new = {
+        tuple(r)
+        for r in replay_broker_to_state(spark, broker, types)
+        .select(*cols).collect()
+    }
+
+    # the offset-ordered fold, as it stood before the position fold
+    m = consume_file_broker(spark, broker).select(
+        "offset", F.from_json("value", _CANAL_SCHEMA).alias("m")
+    )
+    img = F.element_at(F.col("m.data"), 1)
+    flat = m.select(
+        F.element_at(img, "id").alias("key"),
+        F.col("m.type").alias("etype"),
+        F.col("m.es").alias("es"),
+        "offset",
+        *[F.element_at(img, c).cast(t).alias(c) for c, t in types.items()],
+    )
+    w = Window.partitionBy("key").orderBy(
+        F.col("es").desc(), F.col("offset").desc()
+    )
+    old = {
+        tuple(r)
+        for r in flat.withColumn("_rn", F.row_number().over(w))
+        .filter((F.col("_rn") == 1) & (F.col("etype") != "DELETE"))
+        .select(*cols).collect()
+    }
+    want = _oracle_state(rows)
+    assert len(want) == 3
+    assert new == old == want
+
+
+def test_replay_reads_transport_compressed_segments(spark, work_dir):
+    """Replays read the broker under the fixed segment schema; a segment
+    the producer wrote with transport compression replays like the rest."""
+    import glob
+
+    broker = f"{work_dir}/broker_gz"
+    rows = _produce_tied_broker(spark, broker, compress_last="gzip")
+    assert glob.glob(f"{broker}/*/*/*.gz.parquet")
+    got = {
+        tuple(r)
+        for r in replay_broker_to_state(
+            spark, broker,
+            {"id": "bigint", "balance": "double", "note": "string"},
+        ).select("key", "id", "balance", "note").collect()
+    }
+    assert got == _oracle_state(rows)
+
+
+def test_canal_key_sticky_contract_spans_topics(spark, work_dir):
+    """Positions are comparable only within one (topic, partition): a key
+    seen in partition 0 of two different topics must fail the replay,
+    not fold positions from unrelated partitions."""
+    from tiflow_spark.sinks.mq import produce_file_broker
+
+    row = (
+        '{{"id":1,"database":"s","table":"t","pkNames":["id"],'
+        '"isDdl":false,"type":"{t}","es":{es},"ts":{es},"sql":"",'
+        '"data":[{{"id":"1","balance":"{b}","note":"x"}}],"old":null}}'
+    )
+    msgs = spark.createDataFrame(
+        [
+            (100, 0, "ta", 0, row.format(t="INSERT", es=100, b="1.0")),
+            (101, 1, "tb", 0, row.format(t="UPDATE", es=101, b="2.0")),
+        ],
+        "commit_ts long, seq long, topic string, partition int, "
+        "value string",
+    ).withColumn("key", F.lit("1"))
+    produce_file_broker(msgs, f"{work_dir}/broker_topics", batch_id=0)
+    with pytest.raises(Exception, match="contract violated"):
+        replay_broker_to_state(
+            spark, f"{work_dir}/broker_topics", {"id": "bigint"}
+        ).collect()

@@ -247,6 +247,36 @@ def test_mq_consume_prunes_topic_partitions(spark, sf_dir, tmp_path):
     assert m is not None and "topic" in m.group(1)
 
 
+def test_mq_replay_shuffles_once_and_prunes_topics(spark, tmp_path):
+    """The canal replay folds on the segment position, so the
+    (schema, table, key) fold is its only exchange — no (topic, partition)
+    offset window — and a topic filter still prunes the broker scan."""
+    from pyspark.sql import functions as F
+
+    from tiflow_spark.codecs.canal_json import encode_canal_json
+    from tiflow_spark.sinks.mq import produce_file_broker
+    from tiflow_spark.streaming.consumer import replay_broker_to_state
+
+    env = spark.createDataFrame(
+        [("I", "s", "t", 1000, 1, "1", None, (1, 1.0, "a"))],
+        "op string, schema string, table string, commit_ts long, "
+        "seq long, key string, "
+        "before struct<id: bigint, balance: double, note: string>, "
+        "after struct<id: bigint, balance: double, note: string>",
+    ).withColumns({"topic": F.lit("ta"), "partition": F.lit(0)})
+    broker = str(tmp_path / "broker")
+    produce_file_broker(
+        encode_canal_json(env, extra_cols=("topic", "partition", "key")),
+        broker,
+    )
+    plan = plan_of(
+        replay_broker_to_state(spark, broker, {"id": "bigint"}, topic="ta")
+    )
+    assert n_exchanges(plan) == 1, plan
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m is not None and "topic" in m.group(1)
+
+
 def test_handle_key_only_is_map_only_single_projection(spark, sf_dir):
     """Large-message dispatch must not join full against handle-key-only
     encodings — both are CASE arms of one projection."""

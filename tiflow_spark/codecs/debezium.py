@@ -94,6 +94,7 @@ def encode_debezium(
     pk_cols: tuple[str, ...] = ("id",),
     cluster_id: str = "tiflow-spark",
     output_old_value: bool = True,
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """``disable_schema=False`` appends the Kafka-Connect ``schema``
     envelope block after ``payload`` (the REFERENCE DEFAULT —
@@ -210,6 +211,7 @@ def encode_debezium(
         "table",
         "commit_ts",
         "seq",
+        *extra_cols,
         key.alias("key"),
         value.alias("value"),
     )

@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def encode_maxwell(env: DataFrame) -> DataFrame:
+def encode_maxwell(
+    env: DataFrame, extra_cols: tuple[str, ...] = ()
+) -> DataFrame:
     fields = list(env.schema["after"].dataType.fields)  # type: ignore[union-attr]
     mtype = (
         F.when(F.col("op") == "I", "insert")
@@ -50,6 +52,7 @@ def encode_maxwell(env: DataFrame) -> DataFrame:
         "table",
         "commit_ts",
         "seq",
+        *extra_cols,
         F.to_json(msg, {"ignoreNullFields": "false"}).alias("value"),
     )
 

@@ -129,6 +129,7 @@ def encode_open_protocol(
     handle_cols: tuple[str, ...] = ("id",),
     output_old_value: bool = False,
     only_output_updated_columns: bool = False,
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """``output_old_value`` adds the UPDATE pre-image as the ``p`` field
     (open_protocol_message.go:55 ``PreColumns json:"p"``, emitted when
@@ -146,6 +147,7 @@ def encode_open_protocol(
         "table",
         "commit_ts",
         "seq",
+        *extra_cols,
         key.alias("key"),
         value.alias("value"),
     )

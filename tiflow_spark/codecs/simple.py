@@ -84,7 +84,11 @@ def _simple_dml_json(
     return F.to_json(F.struct(*parts), {"ignoreNullFields": "false"})
 
 
-def encode_simple(env: DataFrame, schema_version: int = 1) -> DataFrame:
+def encode_simple(
+    env: DataFrame,
+    schema_version: int = 1,
+    extra_cols: tuple[str, ...] = (),
+) -> DataFrame:
     """Envelope → simple-protocol DML messages (message.go:472-502)."""
     fields = list(env.schema["after"].dataType.fields)  # type: ignore[union-attr]
     return env.select(
@@ -92,6 +96,7 @@ def encode_simple(env: DataFrame, schema_version: int = 1) -> DataFrame:
         "table",
         "commit_ts",
         "seq",
+        *extra_cols,
         _simple_dml_json(fields, schema_version).alias("value"),
     )
 

@@ -13,8 +13,13 @@ contract *testable* here:
 - :func:`produce_file_broker` appends one parquet "segment" per produce call,
   hash-partitioned on (topic, partition) with in-batch offsets — a map-side
   write plus one per-partition window, no global shuffle.
-- :func:`consume_file_broker` replays segments in (batch, in-batch offset)
-  order and assigns global per-partition offsets — the Kafka consumer view.
+- :func:`read_segments` reads the segments with their position
+  (batch_id, batch_offset) under the fixed :data:`SEGMENT_SCHEMA`. Within
+  one (topic, partition) that position is the append order, so the
+  consumer folds (streaming/consumer.py) order by it directly.
+- :func:`consume_file_broker` numbers the position as dense global
+  per-partition offsets — the Kafka consumer view, for callers that expose
+  offsets. Numbering costs a (topic, partition) exchange.
 
 Scale: the broker directory is partitioned by (topic, partition), so a
 consumer of one topic prunes to that subtree; offset assignment windows over
@@ -32,6 +37,15 @@ from pyspark.sql import functions as F
 #: sink receives the dispatched, causality-ordered stream)
 MESSAGE_COLS = ("topic", "partition", "key", "value", "commit_ts", "seq")
 
+#: what :func:`produce_file_broker` writes: the message columns plus the
+#: segment position, with topic and partition as directory partition
+#: columns. The value is a string for the text protocols and binary for
+#: avro and for values compressed by codecs.compress.
+SEGMENT_SCHEMA = (
+    "key STRING, value STRING, commit_ts BIGINT, seq BIGINT, "
+    "batch_id BIGINT, batch_offset BIGINT, topic STRING, partition INT"
+)
+
 
 def produce_file_broker(
     msgs: DataFrame,
@@ -43,7 +57,9 @@ def produce_file_broker(
 
     In-batch offsets follow (commit_ts, seq) — the dispatch order the
     conflict detector established; replaying the same batch_id is
-    idempotent at the consumer (same segment, same offsets).
+    idempotent at the consumer (same segment, same offsets). The stored
+    columns are cast to :data:`SEGMENT_SCHEMA`, so readers need not infer
+    it.
 
     ``transport_compression`` ("snappy"/"lz4"/"zstd"/…) is the production
     compression switch (codec `engine="transport"`): the segment writer
@@ -52,7 +68,14 @@ def produce_file_broker(
     values stay uncompressed in the plan; no Python in the hot path."""
     w = Window.partitionBy("topic", "partition").orderBy("commit_ts", "seq")
     writer = (
-        msgs.select(*MESSAGE_COLS)
+        msgs.select(
+            "topic",
+            "partition",
+            F.col("key").cast("string").alias("key"),
+            "value",
+            F.col("commit_ts").cast("long").alias("commit_ts"),
+            F.col("seq").cast("long").alias("seq"),
+        )
         .withColumn("batch_id", F.lit(batch_id).cast("long"))
         .withColumn("batch_offset", (F.row_number().over(w) - 1).cast("long"))
         .write.mode("append")
@@ -63,13 +86,33 @@ def produce_file_broker(
     writer.parquet(broker_dir)
 
 
+def read_segments(
+    spark: SparkSession,
+    broker_dir: str,
+    topic: str | None = None,
+    value_type: str = "string",
+) -> DataFrame:
+    """Broker messages with their segment position (batch_id,
+    batch_offset), read under :data:`SEGMENT_SCHEMA` — no footer-inference
+    job and no exchange. Within one (topic, partition) the position orders
+    messages exactly as :func:`consume_file_broker`'s offsets do, because
+    those offsets number the same order. ``value_type="binary"`` reads
+    avro payloads. A topic filter prunes to its partition subtree."""
+    schema = SEGMENT_SCHEMA.replace("value STRING", f"value {value_type}")
+    df = spark.read.schema(schema).parquet(broker_dir)
+    if topic is not None:
+        df = df.filter(F.col("topic") == topic)
+    return df
+
+
 def consume_file_broker(
     spark: SparkSession, broker_dir: str, topic: str | None = None
 ) -> DataFrame:
     """Replay broker messages with global per-(topic, partition) offsets.
 
-    A topic filter prunes to its partition subtree (partition-pruned scan,
-    no full-broker read)."""
+    The value keeps its stored type (string or binary). A topic filter
+    prunes to its partition subtree (partition-pruned scan, no
+    full-broker read)."""
     df = spark.read.parquet(broker_dir)
     if topic is not None:
         df = df.filter(F.col("topic") == topic)

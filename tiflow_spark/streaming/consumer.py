@@ -4,18 +4,22 @@ The reference ships a consumer binary that reads a changefeed's Kafka
 topic, decodes the protocol, regroups events per table, and applies them
 to a downstream MySQL so sync_diff can prove the topic carries the full
 change stream (cmd/kafka-consumer/, tests/mq_protocol_tests/). Here the
-same round trip is: file-broker segments → per-partition offset order →
-canal-json decode → typed images → last-writer-wins fold → applied state.
+same round trip is: file-broker segments → decode → typed images →
+last-writer-wins fold → applied state.
 
 Correctness contract (same as the reference consumer):
 - the producer dispatches key-sticky (index-value/table dispatchers), so
-  one key's events share a partition and its offsets preserve dispatch
-  order — the fold orders by (es, offset), which is total per key;
-- canal-json `es` is millisecond-truncated; offsets break ms ties, which
-  is exactly the information a Kafka consumer has.
+  one key's events share a (topic, partition), and the segment position
+  (batch_id, batch_offset) is that partition's append order — the order
+  a Kafka consumer reads its offsets in;
+- the fold orders by (commit ts, batch_id, batch_offset), which is total
+  per key. canal-json `es` is millisecond-truncated; the position breaks
+  ms ties, which is exactly the information a Kafka consumer has.
 
-Scale shape: broker scan prunes by topic; decode is one from_json map
-stage; the fold is one shuffle keyed by (table, key). No driver loops.
+Scale shape: the broker is read under its fixed segment schema (no
+inference job) and prunes by topic; decode is one map stage; the fold is
+the only shuffle, keyed by (schema, table, key). Folds never number
+offsets, so they pay no (topic, partition) exchange. No driver loops.
 """
 
 from __future__ import annotations
@@ -31,6 +35,10 @@ _CANAL_SCHEMA = (
     "sqlType MAP<STRING,INT>, mysqlType MAP<STRING,STRING>, "
     "data ARRAY<MAP<STRING,STRING>>, old ARRAY<MAP<STRING,STRING>>"
 )
+
+#: a message's segment position: its append order within one
+#: (topic, partition)
+_POSITION = ("batch_id", "batch_offset")
 
 
 def replay_broker_to_state(
@@ -57,20 +65,21 @@ def replay_broker_to_state(
     enable-tidb-extension=true, so every message carries the EXACT
     commit ts in ``_tidb.commitTs`` — the decoder restores it
     (canal_json_decoder.go:248,265-267) and the fold orders by it
-    directly instead of the (ms-truncated es, offset) surrogate; a
+    directly instead of the (ms-truncated es, position) surrogate; a
     message missing the extension fails the replay loudly.
 
     Output: (schema, table, key, <typed payload...>) — live rows only.
     """
-    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.sinks.mq import read_segments
 
     schema = _CANAL_SCHEMA
     if use_tidb_extension:
         schema += ", _tidb STRUCT<commitTs: BIGINT>"
-    msgs = consume_file_broker(spark, broker_dir, topic)
+    msgs = read_segments(spark, broker_dir, topic)
     m = msgs.select(
+        "topic",
         "partition",
-        "offset",
+        *_POSITION,
         F.from_json("value", schema).alias("m"),
     ).filter(~F.col("m.isDdl"))
     if payload_types is None:
@@ -115,35 +124,39 @@ def replay_broker_to_state(
         key.alias("key"),
         F.col("m.type").alias("etype"),
         es.alias("es"),
+        "topic",
         "partition",
-        "offset",
+        *_POSITION,
         *[
             F.element_at(img, name).cast(t).alias(name)
             for name, t in payload_types.items()
         ],
     )
     w = Window.partitionBy("schema", "table", "key").orderBy(
-        F.col("es").desc(), F.col("offset").desc()
+        F.col("es").desc(), *[F.col(c).desc() for c in _POSITION]
     )
-    # offsets are only comparable WITHIN one broker partition; the
-    # ms-truncated `es` tiebreak is sound only under the dispatcher's
-    # key-sticky contract (same key → same partition). Enforce it instead
-    # of assuming it: a key observed in >1 partition fails the replay
-    # loudly rather than silently picking a stale row.  collect_set rides
-    # the same window partitioning — no extra shuffle. The assert is
-    # folded INTO the row-number filter (null-on-success + coalesce
-    # true): a free-standing asserted column that is later .drop()ped is
-    # pruned by Catalyst and the guard silently dies (found by a
-    # round-9 negative test — the r8 form WAS dead).
-    n_parts = F.size(F.collect_set("partition").over(w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )))
+    # segment positions are only comparable WITHIN one (topic, partition);
+    # the ms-truncated `es` tiebreak is sound only under the dispatcher's
+    # key-sticky contract (same key → same topic and partition). Enforce
+    # it instead of assuming it: a key observed in >1 (topic, partition)
+    # fails the replay loudly rather than silently picking a stale row.
+    # collect_set rides the same window partitioning — no extra shuffle.
+    # The assert is folded INTO the row-number filter (null-on-success +
+    # coalesce true): a free-standing asserted column that is later
+    # .drop()ped is pruned by Catalyst and the guard silently dies.
+    n_parts = F.size(
+        F.collect_set(F.struct("topic", "partition")).over(
+            w.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        )
+    )
     contract = F.coalesce(
         F.assert_true(
             F.col("_nparts") <= 1,
             F.concat(
                 F.lit("replay contract violated: key observed in "
-                      "multiple broker partitions: "),
+                      "multiple broker (topic, partition)s: "),
                 F.col("schema"), F.lit("."), F.col("table"),
                 F.lit("/"), F.col("key"),
             ),
@@ -154,7 +167,7 @@ def replay_broker_to_state(
         rows.withColumn("_nparts", n_parts)
         .withColumn("_rn", F.row_number().over(w))
         .filter(contract & (F.col("_rn") == 1))
-        .drop("_rn", "_nparts", "es", "partition", "offset")
+        .drop("_rn", "_nparts", "es", "topic", "partition", *_POSITION)
     )
     return last.filter(F.col("etype") != "DELETE").drop("etype")
 
@@ -178,7 +191,7 @@ def replay_simple_broker_with_ddl(
        broadcast version-array lookup, typed casts + declared-DEFAULT
        backfill for rows written before an ADD COLUMN;
     4. key rows by the registry's as-of handle key and fold to
-       last-writer state ordered by (commitTs, offset).
+       last-writer state ordered by (commitTs, segment position).
 
     Output: (schema, table, key, <typed column universe...>) live rows.
     Scale shape: the DML side is one from_json map stage + the broadcast
@@ -186,7 +199,7 @@ def replay_simple_broker_with_ddl(
     the owner's schema storage) are collected.
     """
     from tiflow_spark.codecs.simple import decode_simple, decode_simple_ddl
-    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.sinks.mq import read_segments
     from tiflow_spark.sources.ddl_parse import parse_ddl
     from tiflow_spark.sources.ddl_stream import registry_from_ddl
     from tiflow_spark.sources.schema_registry import (
@@ -195,7 +208,7 @@ def replay_simple_broker_with_ddl(
         _spark_cast,
     )
 
-    msgs = consume_file_broker(spark, broker_dir, topic)
+    msgs = read_segments(spark, broker_dir, topic)
     kind = F.get_json_object("value", "$.type")
     ddl_msgs = msgs.filter(
         ~kind.isin("INSERT", "UPDATE", "DELETE", "WATERMARK", "BOOTSTRAP")
@@ -230,7 +243,7 @@ def replay_simple_broker_with_ddl(
     plan = registry_column_plan(registry)
 
     dml = decode_simple(
-        dml_msgs.select("offset", "value"), extra_cols=("offset",)
+        dml_msgs.select(*_POSITION, "value"), extra_cols=_POSITION
     )
     resolved = asof_resolve(
         dml, registry, event_table_col="table", with_keys=True
@@ -284,33 +297,26 @@ def replay_simple_broker_with_ddl(
         "|",
     )
     rows = resolved.select(
-        "schema", "table", key.alias("key"), "op", "commit_ts", "offset",
-        *typed,
+        "schema", "table", key.alias("key"), F.col("op").alias("_op_class"),
+        "commit_ts", *_POSITION, *typed,
     )
-    w = Window.partitionBy("schema", "table", "key").orderBy(
-        F.col("commit_ts").desc(), F.col("offset").desc()
-    )
-    last = (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "commit_ts", "offset")
-    )
-    return last.filter(F.col("op") != "D").drop("op")
+    return _last_writer_fold(rows)
 
 
 def _last_writer_fold(rows: DataFrame) -> DataFrame:
     """Shared consumer apply: last-writer state per (schema, table, key)
-    ordered by (commit_ts, offset), live rows only. Every protocol's
-    replay ends here — the consumer-side mirror of the MySQL-sink apply
-    (cmd/kafka-consumer/writer.go funnels all five decoders into the
-    same downstream apply). One keyed fold shuffle."""
+    ordered by (commit_ts, segment position), live rows only. Every
+    protocol's replay ends here — the consumer-side mirror of the
+    MySQL-sink apply (cmd/kafka-consumer/writer.go funnels all five
+    decoders into the same downstream apply). One keyed fold shuffle."""
     w = Window.partitionBy("schema", "table", "key").orderBy(
-        F.col("commit_ts").desc(), F.col("offset").desc()
+        F.col("commit_ts").desc(),
+        *[F.col(c).desc() for c in _POSITION],
     )
     last = (
         rows.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", "commit_ts", "offset")
+        .drop("_rn", "commit_ts", *_POSITION)
     )
     return last.filter(F.col("_op_class") != "D").drop("_op_class")
 
@@ -333,10 +339,10 @@ def replay_debezium_broker_to_state(
     Scale shape: one from_json map stage, one (schema, table, key) fold
     shuffle; broker scan prunes by topic."""
     from tiflow_spark.codecs.debezium import decode_debezium
-    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.sinks.mq import read_segments
 
-    msgs = consume_file_broker(spark, broker_dir, topic)
-    dec = decode_debezium(msgs, extra_cols=("offset",))
+    msgs = read_segments(spark, broker_dir, topic)
+    dec = decode_debezium(msgs, extra_cols=_POSITION)
     img = F.when(F.col("op") == "D", F.col("before")).otherwise(
         F.col("after")
     )
@@ -346,7 +352,7 @@ def replay_debezium_broker_to_state(
         img["id"].cast("string").alias("key"),
         F.col("op").alias("_op_class"),
         "commit_ts",
-        "offset",
+        *_POSITION,
         img["id"].alias("id"),
         img["balance"].alias("balance"),
         img["note"].alias("note"),
@@ -373,10 +379,10 @@ def replay_avro_broker_to_state(
     the one place a pandas_udf is the right tool), one keyed fold
     shuffle; broker scan prunes by topic."""
     from tiflow_spark.codecs.avro import decode_avro
-    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.sinks.mq import read_segments
 
-    msgs = consume_file_broker(spark, broker_dir, topic)
-    dec = decode_avro(msgs, extra_cols=("topic", "offset"))
+    msgs = read_segments(spark, broker_dir, topic, value_type="binary")
+    dec = decode_avro(msgs, extra_cols=("topic", *_POSITION))
     dot = F.instr(F.col("topic"), ".")
     rows = dec.select(
         F.when(dot > 0, F.substring_index("topic", ".", 1))
@@ -391,7 +397,7 @@ def replay_avro_broker_to_state(
         F.col("id").cast("string").alias("key"),
         F.col("op").alias("_op_class"),
         "commit_ts",
-        "offset",
+        *_POSITION,
         "id",
         "balance",
         "note",
@@ -410,22 +416,21 @@ def replay_open_broker_to_state(
     maps whose ``h`` flag marks HANDLE columns — so the fold key comes
     from the protocol itself (no pkNames side channel, unlike canal-json).
     Resolved (t=3) keys are dropped. Last-writer fold on (commit_ts,
-    offset); full-precision ts makes the fold total per key without the
-    canal ms-truncation caveat.
+    segment position); full-precision ts makes the fold total per key
+    without the canal ms-truncation caveat.
 
     Scale shape: one from_json map stage, one (schema, table, key) fold
     shuffle; broker scan prunes by topic."""
-    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.sinks.mq import read_segments
 
-    msgs = consume_file_broker(spark, broker_dir, topic)
+    msgs = read_segments(spark, broker_dir, topic)
     key_schema = "ts BIGINT, scm STRING, tbl STRING, t INT"
     col_obj = "STRUCT<t: INT, h: BOOLEAN, v: STRING>"
     val_schema = f"u MAP<STRING, {col_obj}>, d MAP<STRING, {col_obj}>"
     k = F.from_json(F.col("key"), key_schema)
     v = F.from_json(F.col("value"), val_schema)
     rows = msgs.select(
-        "partition",
-        "offset",
+        *_POSITION,
         k.alias("k"),
         v.alias("m"),
     ).filter(F.col("k.t") == 1)
@@ -445,21 +450,13 @@ def replay_open_broker_to_state(
         F.col("k.tbl").alias("table"),
         key.alias("key"),
         F.when(F.col("m.d").isNotNull(), "D").otherwise("U").alias(
-            "op_class"
+            "_op_class"
         ),
         F.col("k.ts").alias("commit_ts"),
-        "offset",
+        *_POSITION,
         *typed,
     )
-    w = Window.partitionBy("schema", "table", "key").orderBy(
-        F.col("commit_ts").desc(), F.col("offset").desc()
-    )
-    last = (
-        flat.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "commit_ts", "offset")
-    )
-    return last.filter(F.col("op_class") != "D").drop("op_class")
+    return _last_writer_fold(flat)
 
 
 def replay_storage_csv_to_state(
@@ -571,10 +568,10 @@ def replay_simple_broker_to_state(
     Scale shape: one from_json map stage, one keyed fold shuffle;
     broker scan prunes by topic."""
     from tiflow_spark.codecs.simple import decode_simple
-    from tiflow_spark.sinks.mq import consume_file_broker
+    from tiflow_spark.sinks.mq import read_segments
 
-    msgs = consume_file_broker(spark, broker_dir, topic)
-    dec = decode_simple(msgs, extra_cols=("offset",))
+    msgs = read_segments(spark, broker_dir, topic)
+    dec = decode_simple(msgs, extra_cols=_POSITION)
     dml = dec.filter(F.col("op").isNotNull())  # bootstrap frames dropped
     img = F.when(F.col("op") == "D", F.col("old_image")).otherwise(
         F.col("image")
@@ -585,7 +582,7 @@ def replay_simple_broker_to_state(
         img["id"].alias("key"),
         F.col("op").alias("_op_class"),
         "commit_ts",
-        "offset",
+        *_POSITION,
         img["id"].cast("long").alias("id"),
         img["balance"].cast("double").alias("balance"),
         img["note"].alias("note"),

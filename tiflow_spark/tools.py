@@ -106,7 +106,9 @@ _MQ_ENCODERS = {
 }
 
 
-def _mq_encode(env: DataFrame, protocol: str) -> DataFrame:
+def _mq_encode(
+    env: DataFrame, protocol: str, extra_cols: tuple[str, ...] = ()
+) -> DataFrame:
     import importlib
 
     if protocol not in _MQ_ENCODERS:
@@ -116,7 +118,7 @@ def _mq_encode(env: DataFrame, protocol: str) -> DataFrame:
         )
     mod_name, fn_name = _MQ_ENCODERS[protocol].split(":")
     mod = importlib.import_module(f"tiflow_spark.codecs.{mod_name}")
-    return getattr(mod, fn_name)(env)
+    return getattr(mod, fn_name)(env, extra_cols=extra_cols)
 
 
 def create_changefeed(
@@ -171,7 +173,7 @@ def create_changefeed(
     env = spark.read.schema(ENVELOPE_SCHEMA).parquet(source_dir)
     env = tfm.split_updates(tfm.route(flt.apply_filters(env, cfg), cfg))
     if spec.kind == "mq":
-        from tiflow_spark.sinks.mq import produce_file_broker
+        from tiflow_spark.sinks.mq import MESSAGE_COLS, produce_file_broker
 
         protocol = spec.protocol or "canal-json"
         # topic-expression create-time validation (NewEventRouter →
@@ -206,15 +208,16 @@ def create_changefeed(
         validate_codec_config(codec_config_from_params(params, protocol))
         n_parts = int(params.get("partition-num", "16"))
         d = dispatch(env, cfg, num_partitions=n_parts, scheme=spec.scheme)
-        value = _mq_encode(env, protocol).select("commit_ts", "seq", "value")
-        # shuffle join, hashing the narrow routing side: left to the size
-        # estimate, Spark broadcasts the encoded payload, collecting every
-        # message to the driver, whose heap keeps the blocks until the
-        # context cleaner runs after some later GC (~21 MB at 35k messages)
-        msgs = (
-            d.select("topic", "partition", "key", "commit_ts", "seq")
-            .hint("shuffle_hash")
-            .join(value, ["commit_ts", "seq"])
+        # the routed handle key rides under a private name because
+        # open-protocol and debezium emit a protocol `key` of their own;
+        # the broker's key stays the handle key
+        enc = _mq_encode(
+            d.withColumn("_handle_key", F.col("key")),
+            protocol,
+            extra_cols=("topic", "partition", "_handle_key"),
+        )
+        msgs = enc.withColumn("key", F.col("_handle_key")).select(
+            *MESSAGE_COLS
         )
         broker = os.path.join(work_dir, "broker")
         produce_file_broker(msgs, broker, batch_id=0)
@@ -243,8 +246,6 @@ def create_changefeed(
         # final resolved-ts broadcast to every produced (topic, partition)
         # — the watermark flush consumers advance on
         if params.get("emit-checkpoint") in ("true", "1", "yes"):
-            from pyspark.sql import functions as F
-
             resolved = env.agg(F.max("commit_ts").alias("resolved_ts"))
             tp = d.select("topic", "partition").distinct()
             produce_file_broker(
