@@ -302,3 +302,174 @@ def test_fully_purged_target_stays_readable(spark, tmp_path):
     assert read_state(spark, target).count() == 1
     purge_tombstones(spark, target, safepoint_ts=25)
     assert read_state(spark, target).count() == 1
+
+
+def test_read_state_launches_no_job(spark, tmp_path):
+    """read_state reads bucket data under the recorded target schema, so
+    building the frame runs no footer-inference job."""
+    from conftest import count_jobs
+
+    target = str(tmp_path / "t")
+    _seed(spark, target)
+    merge_hash_bucketed(
+        _chg(spark, [("t", "3", "U", 200, 1000, 3, 9.0, "y")]),
+        target, n_buckets=4, batch_id=1,
+    )
+    with count_jobs(spark) as jobs:
+        state = read_state(spark, target)
+    assert jobs.n == 0
+    assert state.count() == 100
+
+
+def _evolve(spark, target, batch_id=1):
+    """Merge a batch that adds a ``tier`` column (and deletes key 2)."""
+    merge_hash_bucketed(
+        spark.createDataFrame(
+            [("t", "1", "U", 300, 5000, 1, 1.0, "x", "gold"),
+             ("t", "2", "D", 250, 5001, 2, 0.0, None, None)],
+            CHG_SCHEMA + ", tier string",
+        ),
+        target, n_buckets=4, batch_id=batch_id,
+    )
+
+
+def _recorded_columns(target):
+    import json
+
+    schema = json.loads(read_target_meta(target)["schema"])
+    return [f["name"] for f in schema["fields"]]
+
+
+def test_widened_schema_rolls_forward_after_commit_crash(spark, tmp_path):
+    """A merge that adds a column records the wide schema in its commit
+    manifest: a crash after _COMMIT but before the swap still ends, after
+    recover(), with the wide schema recorded and read back."""
+    from tiflow_spark.sinks import bucketed
+
+    target = str(tmp_path / "t")
+    _seed(spark, target, n=40)
+    real = bucketed._apply_commit
+
+    def crash(*_):
+        raise RuntimeError("injected crash: _COMMIT written, no swap")
+
+    bucketed._apply_commit = crash
+    try:
+        _evolve(spark, target)
+        raise AssertionError("injection never fired")
+    except RuntimeError:
+        pass
+    finally:
+        bucketed._apply_commit = real
+    assert "tier" not in _recorded_columns(target)
+    recover(target)
+    assert "tier" in _recorded_columns(target)
+    state = read_state(spark, target)
+    assert "tier" in state.columns
+    assert state.filter(F.col("tier") == "gold").count() == 1
+    assert state.filter(F.col("key") == "2").count() == 0
+
+
+def test_maintenance_keeps_recorded_schema(spark, tmp_path):
+    """resize_buckets and purge_tombstones rewrite every bucket under the
+    recorded schema and keep it: an evolved column survives both."""
+    from tiflow_spark.sinks.bucketed import purge_tombstones
+
+    target = str(tmp_path / "t")
+    _seed(spark, target, n=40)
+    _evolve(spark, target)
+    wide = _recorded_columns(target)
+    assert "tier" in wide
+    resize_buckets(spark, target, 8)
+    assert _recorded_columns(target) == wide
+    purge_tombstones(spark, target, safepoint_ts=400)
+    assert _recorded_columns(target) == wide
+    state = read_state(spark, target)
+    assert state.filter(F.col("tier") == "gold").count() == 1
+    assert state.count() == 39
+
+
+def _key_in_missing_bucket(spark, target):
+    """A key whose bucket has no directory in the target yet."""
+    meta = read_target_meta(target)
+    present = {
+        int(d.split("=", 1)[1]) for d in os.listdir(target)
+        if d.startswith("bucket=")
+    }
+    cands = _chg(
+        spark, [("t", str(k), "I", 0, 0, 0, 0.0, "") for k in range(1000, 1200)]
+    ).select(
+        "key",
+        F.pmod(
+            F.xxhash64(*meta["key_cols"]), F.lit(meta["n_buckets"])
+        ).alias("b"),
+    )
+    return next(r.key for r in cands.collect() if r.b not in present)
+
+
+def test_narrow_batch_into_new_bucket_keeps_wide_schema(spark, tmp_path):
+    """A pre-DDL (narrow) batch whose keys land only in buckets that do not
+    exist yet must not shrink the recorded schema — neither through a
+    rewrite merge nor through compact_deltas folding a narrow delta."""
+    from tiflow_spark.sinks.bucketed import compact_deltas
+
+    target = str(tmp_path / "t")
+    _seed(spark, target, n=6, n_buckets=64)
+    merge_hash_bucketed(
+        spark.createDataFrame(
+            [("t", "1", "U", 300, 5000, 1, 1.0, "x", "gold")],
+            CHG_SCHEMA + ", tier string",
+        ),
+        target, n_buckets=64, batch_id=1,
+    )
+    assert "tier" in _recorded_columns(target)
+    key = _key_in_missing_bucket(spark, target)
+    merge_hash_bucketed(
+        _chg(spark, [("t", key, "I", 400, 6000, 77, 7.0, "n")]),
+        target, n_buckets=64, batch_id=2,
+    )
+    assert "tier" in _recorded_columns(target)
+    key2 = _key_in_missing_bucket(spark, target)
+    merge_hash_bucketed(
+        _chg(spark, [("t", key2, "I", 500, 7000, 78, 8.0, "n")]),
+        target, n_buckets=64, batch_id=3, mode="delta",
+    )
+    assert compact_deltas(spark, target) == 1
+    assert "tier" in _recorded_columns(target)
+    state = read_state(spark, target)
+    assert "tier" in state.columns
+    assert state.filter(F.col("tier") == "gold").count() == 1
+    assert state.filter(F.col("key").isin(key, key2)).count() == 2
+    assert state.count() == 8
+
+
+def test_untracked_meta_is_widened_from_the_files_once(spark, tmp_path):
+    """Metadata written before merges recorded their schema holds only the
+    creation schema, while a merge may have added a column to the files.
+    The first read widens the recorded schema from the file footers once,
+    marks it tracked, and later reads run no inference job."""
+    import json
+
+    from conftest import count_jobs
+
+    target = str(tmp_path / "t")
+    _seed(spark, target, n=40)
+    creation = read_target_meta(target)["schema"]
+    _evolve(spark, target)
+    meta = read_target_meta(target)
+    meta["schema"] = creation
+    meta.pop("schema_tracked", None)
+    _atomic_write_json(os.path.join(target, "_target_meta.json"), meta)
+    assert "tier" not in _recorded_columns(target)
+
+    state = read_state(spark, target)
+    assert "tier" in state.columns
+    assert state.filter(F.col("tier") == "gold").count() == 1
+    assert state.count() == 39
+    meta = read_target_meta(target)
+    assert meta["schema_tracked"] and "tier" in _recorded_columns(target)
+    cols = [f["name"] for f in json.loads(creation)["fields"]]
+    assert _recorded_columns(target)[: len(cols)] == cols
+    with count_jobs(spark) as jobs:
+        read_state(spark, target)
+    assert jobs.n == 0

@@ -191,3 +191,72 @@ def test_summary_report_counter_semantics(spark, sf_dir):
     assert row["rows_add"] == row["n_missing"] + row["n_different"]
     assert row["rows_delete"] == row["n_extra"] + row["n_different"]
     assert not row["data_equal"] and row["chunk_failed"] > 0
+
+
+def test_summary_report_leaves_no_cache_entry(spark, sf_dir):
+    """summary_report collects its checksum pass instead of persisting
+    it: Spark's cache manager holds no entry afterwards, and collecting
+    the returned frame launches no job."""
+    from conftest import count_jobs
+
+    from tiflow_spark.plans.parity import CUSTOMER_COLS, _corrupt_customer
+    from tiflow_spark.validation.syncdiff import summary_report
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    report = summary_report(
+        load_table(spark, sf_dir, "customer"),
+        _corrupt_customer(spark, sf_dir),
+        "c_custkey", CUSTOMER_COLS, 64, "test", "customer",
+    )
+    with count_jobs(spark) as jobs:
+        row = report.collect()[0]
+    assert cache.isEmpty()
+    assert jobs.n == 0
+    assert row["chunk_failed"] > 0
+
+
+def test_summary_report_on_equal_tables_runs_no_row_diff(spark, sf_dir):
+    """When every chunk checksum matches, the report runs the checksum
+    pass and nothing else."""
+    from conftest import count_jobs
+
+    from tiflow_spark.plans.parity import CUSTOMER_COLS
+    from tiflow_spark.validation.syncdiff import (
+        compare_checksums,
+        summary_report,
+    )
+
+    cust = load_table(spark, sf_dir, "customer")
+    args = ("c_custkey", CUSTOMER_COLS, 64)
+    with count_jobs(spark) as checksum_jobs:
+        compare_checksums(cust, cust, *args).collect()
+    with count_jobs(spark) as report_jobs:
+        summary_report(cust, cust, *args, "test", "customer")
+    assert report_jobs.n == checksum_jobs.n
+
+
+def test_summary_report_with_many_failed_chunks(spark):
+    """The report's row diff scales with the number of failed chunks: 155
+    of 305 chunks fail, and every kind is counted exactly."""
+    from tiflow_spark.validation import syncdiff
+
+    src = spark.range(3000).select("id", (F.col("id") * 7).alias("v"))
+    dst = (
+        src.filter(F.col("id") % 20 != 5)  # 150 missing, one per chunk
+        .select(
+            "id",
+            (F.col("v") + F.when(F.col("id") % 20 == 0, 1).otherwise(0))
+            .alias("v"),  # 150 different, in the same chunks
+        )
+        .unionByName(  # 50 extra, in 5 chunks past the source
+            spark.range(3000, 3050).select("id", F.lit(0).cast("long").alias("v"))
+        )
+    )
+    row = syncdiff.summary_report(src, dst, "id", ["id", "v"], 10).collect()[0]
+    assert row["chunk_failed"] == 155
+    assert (row["n_missing"], row["n_extra"], row["n_different"]) == (150, 50, 150)
+    assert (row["up_count"], row["down_count"], row["chunk_total"]) == (
+        3000, 2900, 305,
+    )

@@ -7,6 +7,7 @@ scale bug long before it is a local slowdown.
 """
 
 import io
+import os
 import re
 from contextlib import redirect_stdout
 
@@ -830,3 +831,71 @@ def test_new_codec_wires_are_single_python_stage(spark, sf_dir):
         p = plan_of(enc)
         assert len(re.findall(r"^\(\d+\) ArrowEvalPython", p, flags=re.M)) == 1, p[:1500]
         assert n_exchanges(p) == 0, p[:1500]
+
+
+def test_bucket_merge_rewrite_shuffles_once_by_bucket(spark, tmp_path):
+    """stored ∪ batch crosses exactly one exchange in a rewrite merge,
+    hashpartitioning(bucket): the winner window keyed on (bucket, table,
+    key) and the bucket-partitioned write both reuse it."""
+    from pyspark.sql import functions as F
+
+    from tiflow_spark.sinks.bucketed import merge_hash_bucketed
+
+    schema = (
+        "target_table string, key string, op string, commit_ts long, "
+        "seq long, id long, balance double"
+    )
+    target = str(tmp_path / "target")
+    merge_hash_bucketed(
+        spark.createDataFrame(
+            [("t", str(k), "I", 1, k, k, float(k)) for k in range(64)], schema
+        ),
+        target, n_buckets=8, batch_id=0,
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    # the store keeps only the newest executions, so select by id, not
+    # by position
+    n = store.executionsCount()
+    before = store.executionsList(n - 1, 1).apply(0).executionId()
+    merge_hash_bucketed(
+        spark.createDataFrame(
+            [("t", str(k), "U", 2, 100 + k, k, 0.0) for k in range(0, 64, 5)],
+            schema,
+        ),
+        target, n_buckets=8, batch_id=1,
+    )
+    bus.waitUntilEmpty()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).executionId() > before
+    ]
+    writes = [
+        p
+        for p in plans
+        if "InsertIntoHadoopFsRelation" in p and "_staging/batch-1" in p
+    ]
+    assert len(writes) == 1
+    # an adaptive plan lists its nodes twice: the final plan first, then
+    # the initial plan; node details follow both trees
+    plan = writes[0]
+    final = plan.split("== Initial Plan ==")[0]
+    ids = re.findall(r"(?<!\w)Exchange \((\d+)\)", final)
+    assert len(ids) == 1, plan
+    detail = re.search(
+        rf"^\({ids[0]}\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
+        plan,
+        flags=re.M,
+    )
+    assert detail.group(1).startswith("hashpartitioning(bucket#"), plan
+    state = spark.read.parquet(target)
+    assert state.filter(F.col("op") == "U").count() == 13
+    # one file per rewritten bucket
+    for d in os.listdir(target):
+        if d.startswith("bucket="):
+            files = os.listdir(os.path.join(target, d))
+            parquet = [f for f in files if f.endswith(".parquet")]
+            assert len(parquet) == 1, (d, files)

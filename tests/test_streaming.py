@@ -689,3 +689,63 @@ def test_live_mq_produce_pause_resume_consumer_roundtrip(
     assert replayed.count() == expected.count() and expected.count() > 0
     assert replayed.exceptAll(expected).count() == 0
     assert expected.exceptAll(replayed).count() == 0
+
+
+def test_replayed_batch_keeps_one_progress_record(spark, sf_dir, work_dir):
+    """A replayed micro-batch overwrites its own progress record instead
+    of appending a second one, so changefeed_status counts its events
+    once (exactly-once progress)."""
+    from tiflow_spark.streaming.pipeline import StreamingTarget
+    from tiflow_spark.tools import changefeed_status
+
+    env = events_to_changes(load_table(spark, sf_dir, "events"))
+    batch = transform_stream(env, DEMO_CFG)
+    n_events = batch.count()
+    target = StreamingTarget(
+        target_path=f"{work_dir}/target", progress_path=f"{work_dir}/progress"
+    )
+    target.merge_batch(batch, 0)
+    target.merge_batch(batch, 0)  # the replay after a crash
+    prog = spark.read.parquet(target.progress_path)
+    assert prog.filter(F.col("batch_id") == 0).count() == 1
+    status = changefeed_status(spark, work_dir)
+    assert status["batches"] == 1
+    assert status["events_applied"] == n_events
+
+
+def test_drain_scans_each_event_once(spark, sf_dir, work_dir):
+    """The progress record comes from an Observation on the merge's own
+    scan, so a one-batch drain reports numInputRows equal to the events
+    in its files — no second scan of the batch."""
+    env = events_to_changes(load_table(spark, sf_dir, "events"))
+    src = f"{work_dir}/source"
+    env.repartition(4).write.parquet(src)
+    q, _ = run_changefeed(spark, src, DEMO_CFG, work_dir)
+    ran = [p for p in q.recentProgress if p.numInputRows]
+    assert len(ran) == 1
+    assert ran[0].numInputRows == env.count()
+
+
+@pytest.mark.parametrize("mode", ["rewrite", "delta"])
+def test_empty_batch_writes_progress_record(spark, sf_dir, work_dir, mode):
+    """A batch whose events were all filtered out still gets its progress
+    record (no resolved_ts, zero events), also when AQE prunes the
+    observed scan of the empty batch from the merge's plan."""
+    from tiflow_spark.streaming.pipeline import StreamingTarget
+
+    env = transform_stream(
+        events_to_changes(load_table(spark, sf_dir, "events")), DEMO_CFG
+    )
+    target = StreamingTarget(
+        target_path=f"{work_dir}/target",
+        progress_path=f"{work_dir}/progress",
+        merge_mode=mode,
+    )
+    target.merge_batch(env, 0)
+    target.merge_batch(env.filter(F.col("seq") < 0), 1)
+    rows = {
+        r.batch_id: (r.resolved_ts, r.events)
+        for r in spark.read.parquet(target.progress_path).collect()
+    }
+    assert rows[0][1] == env.count()
+    assert rows[1] == (None, 0)

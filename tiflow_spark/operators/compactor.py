@@ -129,26 +129,30 @@ def _compact_agg(env: DataFrame, table_col: str) -> DataFrame:
 
 
 def last_state_per_key(
-    env: DataFrame, table_col: str = "table", strategy: str = "window"
+    env: DataFrame,
+    table_col: str = "table",
+    strategy: str = "window",
+    partition_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Just the final event per key (no truth-table recombination) — the
     dedup primitive used by the MERGE applier (max-ts-wins). Same strategy
-    trade-off as compact()."""
+    trade-off as compact(). ``partition_cols`` lead the grouping key; they
+    must be functions of (table, key), like a hash bucket, so the winners
+    do not change — only the clustering the plan asks of its input."""
+    keys = (*partition_cols, table_col, "key")
     if strategy == "agg":
         ordk = _order_key()
-        others = [c for c in env.columns if c not in (table_col, "key")]
-        g = env.groupBy(table_col, "key").agg(
+        others = [c for c in env.columns if c not in keys]
+        g = env.groupBy(*keys).agg(
             F.max_by(F.struct(*[F.col(c) for c in others]), ordk).alias("_last")
         )
         return g.select(
             *[
-                F.col(c)
-                if c in (table_col, "key")
-                else F.col(f"_last.{c}").alias(c)
+                F.col(c) if c in keys else F.col(f"_last.{c}").alias(c)
                 for c in env.columns
             ]
         )
-    w = Window.partitionBy(table_col, "key").orderBy(
+    w = Window.partitionBy(*keys).orderBy(
         *[c.desc() for c in order_cols()]
     )
     return (

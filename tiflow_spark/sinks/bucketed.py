@@ -21,7 +21,9 @@ parquet-native miniature of a Delta/Iceberg transaction log, which remains
 the production seam of foreachBatch.
 
 `tests/test_plan_contracts.py::test_bucketed_merge_does_not_shuffle_target`
-asserts the no-target-shuffle property on the physical plan.
+asserts the no-target-shuffle property on the physical plan, and
+``test_bucket_merge_rewrite_shuffles_once_by_bucket`` pins the single
+exchange of a rewrite merge.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _META = "_target_meta.json"
 _STAGING = "_staging"
@@ -134,39 +137,64 @@ def _write_target_meta(
     """Write sizing metadata, preserving any other keys already present (or
     passed via ``base`` when the caller captured them before a destructive
     write) — e.g. truncate watermarks recorded before first data.
-    ``schema_json`` records the creation schema so a fully-GC'd (empty)
-    target stays readable — parquet inference has no footers to work with
-    when every row has been reclaimed."""
+    ``schema_json`` records the creation schema: every read of the bucket
+    data uses it instead of footer inference, and a fully-GC'd (empty)
+    target stays readable. Merges that widen it record the wider schema
+    in their commit manifest (see :func:`_apply_commit`)."""
     meta = dict(base or read_target_meta(path) or {})
     meta.update({"n_buckets": n_buckets, "key_cols": list(key_cols)})
     if schema_json is not None:
-        meta["schema"] = schema_json
+        meta.update(schema=schema_json, schema_tracked=True)
     _atomic_write_json(os.path.join(path, _META), meta)
 
 
-def _read_base(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-safe full read of a target's bucket data: a target whose
-    every row was purged (all-deletes workload + GC safepoint past them)
-    has no parquet files left, so schema inference fails — fall back to an
-    empty frame with the creation schema recorded in the target metadata.
-    Found by the snapshot-immutability property test (rewrite-delete then
-    purge minimal counterexample)."""
-    import pyspark.sql.types as T
-
-    has_files = any(
+def _has_bucket_files(path: str) -> bool:
+    return any(
         f.endswith(".parquet")
         for d in os.listdir(path)
         if d.startswith("bucket=")
         and os.path.isdir(os.path.join(path, d))
         for f in os.listdir(os.path.join(path, d))
     )
-    if not has_files:
-        sj = (read_target_meta(path) or {}).get("schema")
-        if sj is not None:
-            return spark.createDataFrame(
-                [], T.StructType.fromJson(json.loads(sj))
-            )
-    return spark.read.option("mergeSchema", "true").parquet(path)
+
+
+def _recorded_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The target schema recorded in its metadata: the creation schema,
+    widened by every committed merge that added a column.
+
+    ``schema_tracked`` marks metadata whose schema merges keep up to date.
+    Metadata without it holds only the creation schema, while a merge may
+    have added columns to the files since; such a target is migrated once:
+    the columns the file footers add (one ``mergeSchema`` inference) are
+    appended to the recorded schema, which is then marked tracked."""
+    meta = read_target_meta(path) or {}
+    sj = meta.get("schema")
+    schema = T.StructType.fromJson(json.loads(sj)) if sj else T.StructType()
+    if meta.get("schema_tracked"):
+        return schema
+    if _has_bucket_files(path):
+        inferred = spark.read.option("mergeSchema", "true").parquet(path).schema
+        known = set(schema.fieldNames())
+        schema = T.StructType(
+            schema.fields + [f for f in inferred.fields if f.name not in known]
+        )
+    meta.update(schema=schema.json(), schema_tracked=True)
+    _atomic_write_json(os.path.join(path, _META), meta)
+    return schema
+
+
+def _read_base(spark: SparkSession, path: str) -> DataFrame:
+    """Full read of a target's bucket data under its recorded schema — no
+    footer-inference job, and a schema-evolved column is present whichever
+    files hold it. A target whose every row was purged (all-deletes
+    workload + GC safepoint past them) has no parquet files left, so it
+    reads as an empty frame of that schema. Found by the
+    snapshot-immutability property test (rewrite-delete then purge minimal
+    counterexample)."""
+    schema = _recorded_schema(spark, path)
+    if not _has_bucket_files(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def truncate_table(path: str, table: str, truncate_ts: int) -> None:
@@ -216,8 +244,15 @@ def _truncated_predicate(meta: dict | None, table_col: str = "target_table"):
 
 
 def _apply_commit(path: str, stage: str, manifest: dict) -> None:
-    """Swap staged bucket dirs into the target. Idempotent: safe to re-run
-    from any crash point after the _COMMIT marker exists."""
+    """Swap staged bucket dirs into the target and record the committed
+    schema in the target metadata. Idempotent: safe to re-run from any
+    crash point after the _COMMIT marker exists."""
+    if "schema" in manifest:
+        meta = read_target_meta(path) or {}
+        recorded = {"schema": manifest["schema"], "schema_tracked": True}
+        if any(meta.get(k) != v for k, v in recorded.items()):
+            meta.update(recorded)
+            _atomic_write_json(os.path.join(path, _META), meta)
     staged = set(manifest["staged"])
     for b in manifest["affected"]:
         name = f"bucket={b}"
@@ -257,14 +292,21 @@ def recover(path: str) -> None:
 
 
 def _commit_staged(
-    path: str, stage: str, affected: list[int], deltas: list[str] = ()
+    path: str,
+    stage: str,
+    affected: list[int],
+    deltas: list[str] = (),
+    schema_json: str | None = None,
 ) -> None:
     """manifest → fsynced _COMMIT marker → swap. The marker is the commit
-    point; everything after it is re-runnable."""
+    point; everything after it is re-runnable. ``schema_json`` is the
+    staged data's schema, recorded in the target metadata at swap time."""
     staged = sorted(
         d for d in os.listdir(stage) if d.startswith("bucket=")
     )
     manifest = {"affected": affected, "staged": staged, "deltas": list(deltas)}
+    if schema_json is not None:
+        manifest["schema"] = schema_json
     _atomic_write_json(os.path.join(stage, "manifest.json"), manifest)
     _atomic_write_json(os.path.join(stage, "_COMMIT"), {"ok": True})
     _apply_commit(path, stage, manifest)
@@ -285,7 +327,8 @@ def merge_hash_bucketed(
 
     1. completes/rolls back any interrupted prior commit (recover),
     2. computes the buckets its keys touch (a tiny distinct on the batch),
-    3. reads ONLY those partitions (partition-pruned, schema-merged scan),
+    3. reads ONLY those partitions (partition-pruned, under the recorded
+       target schema),
     4. re-resolves max-(commit_ts, seq, op)-wins per key, and
     5. stages + atomically commits only the touched buckets.
 
@@ -427,7 +470,13 @@ def _merge_rewrite(
     """Copy-on-write merge body: fold ``chg`` (already bucket-stamped) into
     its touched buckets through the staged-manifest commit. ``consume_deltas``
     lists delta dirs whose rows are included in ``chg`` — the commit removes
-    them atomically with the bucket swap."""
+    them atomically with the bucket swap.
+
+    stored ∪ batch crosses ONE exchange, ``hashpartitioning(bucket)``: the
+    winner window is keyed on ``(bucket, table, key)``, which that
+    partitioning already clusters (bucket is a function of the key), and
+    the window's sort leads with bucket, which the partitioned writer
+    needs — so each bucket is written by one task as one file."""
     from tiflow_spark.operators.compactor import last_state_per_key
 
     # list ONLY the touched bucket dirs (basePath keeps the partition
@@ -440,23 +489,28 @@ def _merge_rewrite(
         for b in affected
         if os.path.isdir(p := os.path.join(path, f"bucket={b}"))
     ]
-    if existing:
-        # stored rows keep their op (D rows are tombstones and must keep
-        # outranking older late arrivals). mergeSchema: a schema-evolved
-        # target must never be narrowed by a replayed pre-DDL batch —
-        # the union schema is the widest of stored ∪ batch.
-        current = (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", path)
-            .parquet(*existing)
-        )
-        src = current.unionByName(chg, allowMissingColumns=True)
-    else:
-        src = chg
+    # stored rows keep their op (D rows are tombstones and must keep
+    # outranking older late arrivals). Stored rows are read under the
+    # recorded schema — also when no touched bucket exists yet (a
+    # zero-path read is an empty scan of that schema) — so a replayed
+    # pre-DDL batch never narrows a schema-evolved target: the union
+    # schema, recorded at commit, is the widest of target ∪ batch.
+    current = (
+        spark.read.schema(_recorded_schema(spark, path))
+        .option("basePath", path)
+        .parquet(*existing)
+    )
+    src = (
+        current.unionByName(chg, allowMissingColumns=True)
+        .withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1)))
+        .withColumn("commit_ts", F.coalesce(F.col("commit_ts"), F.lit(-1)))
+    )
     winner = last_state_per_key(
-        src.withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1)))
-        .withColumn("commit_ts", F.coalesce(F.col("commit_ts"), F.lit(-1))),
+        src.repartition(
+            _bucket_write_partitions(spark, len(affected)), F.col("bucket")
+        ),
         table_col,
+        partition_cols=("bucket",),
     )
     # stage inside the target dir (same filesystem → rename is atomic;
     # underscore prefix → invisible to Spark scans), then manifest +
@@ -464,10 +518,14 @@ def _merge_rewrite(
     # dir and is removed at swap time.
     stage = os.path.join(path, _STAGING, commit_name)
     shutil.rmtree(stage, ignore_errors=True)
-    winner.repartition(
-        _bucket_write_partitions(spark, len(affected)), F.col("bucket")
-    ).write.mode("overwrite").partitionBy("bucket").parquet(stage)
-    _commit_staged(path, stage, affected, deltas=consume_deltas)
+    winner.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+    _commit_staged(
+        path,
+        stage,
+        affected,
+        deltas=consume_deltas,
+        schema_json=winner.schema.json(),
+    )
 
 
 def compact_deltas(spark: SparkSession, path: str, table_col: str | None = None) -> int:
@@ -536,9 +594,8 @@ def purge_tombstones(
     analog, pkg/txnutil/gc): once the source guarantees no event at-or-below
     the safepoint will ever arrive (resolved-ts contract), deletes below it
     can never be outranked and are physically dropped. Full-target rewrite —
-    run at maintenance cadence, not per batch. mergeSchema so a schema-
-    evolved target keeps every column regardless of which file inference
-    would have picked."""
+    run at maintenance cadence, not per batch. Reads under the recorded
+    schema, so a schema-evolved target keeps every column."""
     compact_deltas(spark, path)  # deltas must fold before a full rewrite
     recover(path)
     df = _read_base(spark, path)
@@ -571,8 +628,7 @@ def resize_buckets(
     if not cols:
         raise ValueError(f"no key_cols given and no metadata at {path}")
     df = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(path)
+        _read_base(spark, path)
         .drop("bucket")
         .withColumn(
             "bucket",

@@ -26,7 +26,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -91,6 +94,51 @@ def transform_stream(stream: DataFrame, cfg: TaskConfig) -> DataFrame:
     return tfm.split_updates(out)
 
 
+def _observed_progress(obs: Observation, batch: DataFrame) -> dict:
+    """The batch's (resolved_ts, events), observed during the merge's scan.
+    When the batch is empty (every event filtered out), AQE drops the
+    observed scan from the final plan and Spark reports no metrics for it:
+    ``get`` fails, and the record of an empty batch is returned. Any other
+    failure is raised."""
+    try:
+        return obs.get
+    except Py4JJavaError:
+        if not batch.isEmpty():
+            raise
+        return {"resolved_ts": None, "events": 0}
+
+
+_PROGRESS_SCHEMA = pa.schema(
+    [
+        ("batch_id", pa.int32()),
+        ("resolved_ts", pa.int64()),
+        ("events", pa.int64()),
+    ]
+)
+
+
+def _write_progress(progress_path: str, batch_id: int, observed: dict) -> None:
+    """Write one batch's progress record as ``batch-<id>.parquet`` with
+    pyarrow: a fsynced dot-named temp file (invisible to Spark reads), then
+    an atomic ``os.replace``."""
+    os.makedirs(progress_path, exist_ok=True)
+    record = pa.table(
+        {
+            "batch_id": [batch_id],
+            "resolved_ts": [observed["resolved_ts"]],
+            "events": [observed["events"]],
+        },
+        schema=_PROGRESS_SCHEMA,
+    )
+    name = f"batch-{batch_id}.parquet"
+    tmp = os.path.join(progress_path, f".{name}.tmp")
+    with open(tmp, "wb") as f:
+        pq.write_table(record, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(progress_path, name))
+
+
 @dataclass
 class StreamingTarget:
     """Hash-bucket-partitioned parquet MERGE target + progress bookkeeping.
@@ -126,10 +174,20 @@ class StreamingTarget:
         1. compact the batch to net-last-state per key (one shuffle)
         2. merge into ONLY the hash buckets the batch touches, keeping the
            max-(commit_ts, seq, op) winner per key (replay-idempotent)
+        3. write the batch's progress record, observed during step 1's
+           scan (the batch is scanned once)
         """
         from tiflow_spark.sinks.bucketed import merge_hash_bucketed
 
-        last = last_state_per_key(batch, self.table_col)
+        # progress rides on the merge's own scan of the batch: an
+        # Observation, not a second aggregation job over the batch
+        obs = Observation()
+        observed = batch.observe(
+            obs,
+            F.max("commit_ts").alias("resolved_ts"),
+            F.count(F.lit(1)).alias("events"),
+        )
+        last = last_state_per_key(observed, self.table_col)
         # payload columns come from the batch's own `after` struct — the
         # envelope schema is per-deployment data, not engine constants
         meta = {"target_table", "key", "op", "commit_ts", "seq"}
@@ -146,6 +204,8 @@ class StreamingTarget:
             F.col("seq"),
             *[F.col(f"after.{c}").alias(c) for c in payload],
         )
+        # every merge path (create, rewrite, delta) runs an action over
+        # `changes`, so the observed plan has run before obs.get
         merge_hash_bucketed(
             changes,
             self.target_path,
@@ -155,7 +215,6 @@ class StreamingTarget:
             batch_id=batch_id,
             mode=self.merge_mode,
         )
-        # progress/syncpoint record: (batch_id, resolved_ts, rows_applied) —
         if (
             self.merge_mode == "delta"
             and self.compact_every
@@ -165,13 +224,13 @@ class StreamingTarget:
             from tiflow_spark.sinks.bucketed import compact_deltas
 
             compact_deltas(batch.sparkSession, self.target_path)
-        # the reference's checkpoint-ts + syncpoint store (§2.7, §2.10)
-        prog = batch.groupBy().agg(
-            F.lit(batch_id).alias("batch_id"),
-            F.max("commit_ts").alias("resolved_ts"),
-            F.count(F.lit(1)).alias("events"),
+        # the reference's checkpoint-ts + syncpoint store (§2.7, §2.10):
+        # one (batch_id, resolved_ts, events) record per batch, keyed by
+        # batch_id — a replayed batch overwrites its own record, so the
+        # progress table holds every batch exactly once
+        _write_progress(
+            self.progress_path, batch_id, _observed_progress(obs, batch)
         )
-        prog.write.mode("append").parquet(self.progress_path)
         if self.syncpoint_every and batch_id % self.syncpoint_every == 0:
             # the syncpoint label is the resolved FRONTIER — max commit_ts
             # across every batch applied so far (monotone, like the

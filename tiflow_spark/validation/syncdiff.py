@@ -11,14 +11,19 @@ Reference: sync_diff_inspector/
 Scale shape: checksums aggregate map-side (one row per chunk crosses the
 shuffle); the row-level join runs ONLY over mismatched chunks — at 100 TB the
 expensive join touches a tiny fraction of the data, mirroring the reference's
-binary-search narrowing. Chunk pruning pushes down to the parquet scan as a
-PK range predicate.
+binary-search narrowing. The row diff's scan still reads every row: the
+mismatched chunks are picked after it, by a join against a broadcast of
+their ids (:func:`targeted_row_diff`, :func:`summary_report`) or by a
+``chunk_id IN (...)`` filter (:func:`resume_row_diff`). Only
+:func:`resumable_chunk_compare` and :func:`bin_search_diff` put pk RANGE
+predicates on the scan, which parquet can push down.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -93,12 +98,14 @@ def targeted_row_diff(
 ) -> DataFrame:
     """Two-phase diff: checksum chunks first, row-join only mismatched chunks.
 
-    This is the scale path — the join's scan carries a pushed-down chunk
-    predicate, so a 100 TB table with three bad chunks reads ~three chunks.
+    The bad chunks are picked by joining both sides against a broadcast
+    of the mismatched chunk ids — a map-side filter after the scan, not a
+    predicate pushed down to parquet: the scan reads every row, but only
+    rows of bad chunks reach the row join's shuffle.
 
     ``checksums``: a precomputed :func:`compare_checksums` frame over the
-    same inputs — callers that already hold one (summary_report) pass it
-    so the checksum pass is not recomputed (r14).
+    same inputs — callers that already hold one pass it so the checksum
+    pass is not recomputed.
     """
     if checksums is None:
         checksums = compare_checksums(src, dst, pk, cols, width)
@@ -163,52 +170,60 @@ def summary_report(
     report.go:147-152; counter semantics from diff.go:740-768: missing →
     rows-add, extra → rows-delete, different → both).
 
-    One row out. Composition of the full §3.3 lifecycle: chunk checksum
-    compare → row-diff over mismatched chunks ONLY (targeted_row_diff's
-    pushed-down chunk predicate is what makes this 100 TB-safe) → two
-    scalar aggregates cross-joined (broadcast of 1-row frames).
+    One row out. Composition of the full §3.3 lifecycle, run EAGERLY when
+    called — at most two Spark actions:
+
+    1. the chunk checksum compare, collected (bounded: one row per
+       chunk); the chunk and row counts come from it;
+    2. only if some chunk failed: :func:`targeted_row_diff` over the
+       failed chunk ids, shipped to the JVM as one Arrow batch, collected
+       as one count per kind. (An ``IN`` list of the ids would cost
+       planning time per id: ~10 s at 20,000 failed chunks.)
+
+    The result is a local one-row frame: collecting it runs no job.
     """
     struct_equal = src.select(*cols).schema == dst.select(*cols).schema
-    # the chunk-checksum frame feeds BOTH the report's chunk aggregate
-    # and the targeted diff's bad-chunk list; it is bounded (one row per
-    # chunk), so persist it — without this the whole checksum pass (two
-    # full table scans + the chunk shuffle) ran twice per report (r14)
-    cc = compare_checksums(src, dst, pk, cols, width).persist()
-    chunk_agg = cc.agg(
-        F.count(F.lit(1)).alias("chunk_total"),
-        F.sum(F.when(~F.col("match"), 1).otherwise(0)).alias("chunk_failed"),
-        F.sum("src_cnt").alias("up_count"),
-        F.sum("dst_cnt").alias("down_count"),
-    )
-    # coalesce: on equal tables the targeted diff is EMPTY and sum() over
-    # zero rows is NULL, but the report must say 0
-    kinds = targeted_row_diff(src, dst, pk, cols, width, checksums=cc).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "missing", 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_missing"),
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "extra", 1).otherwise(0)), F.lit(0)
-        ).alias("n_extra"),
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "different", 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_different"),
-    )
-    return chunk_agg.crossJoin(F.broadcast(kinds)).select(
-        F.lit(schema).alias("schema_name"),
-        F.lit(table).alias("table_name"),
-        F.lit(struct_equal).alias("struct_equal"),
-        (F.col("chunk_failed") == 0).alias("data_equal"),
-        "up_count",
-        "down_count",
-        "chunk_total",
-        "chunk_failed",
-        "n_missing",
-        "n_extra",
-        "n_different",
-        (F.col("n_missing") + F.col("n_different")).alias("rows_add"),
-        (F.col("n_extra") + F.col("n_different")).alias("rows_delete"),
+    chunks = compare_checksums(src, dst, pk, cols, width).collect()
+    bad = [r.chunk_id for r in chunks if not r.match]
+    kinds: dict = {}
+    if bad:
+        failed = src.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "chunk_id": pa.array(bad, pa.int64()),
+                    "match": pa.array([False] * len(bad)),
+                }
+            )
+        )
+        diff = targeted_row_diff(src, dst, pk, cols, width, checksums=failed)
+        counts = diff.groupBy("kind").count().collect()
+        kinds = {r["kind"]: r["count"] for r in counts}
+    # sums over zero chunks stay NULL, as SQL's sum() does
+    chunk_failed = len(bad) if chunks else None
+    up_count = sum(r.src_cnt for r in chunks) if chunks else None
+    down_count = sum(r.dst_cnt for r in chunks) if chunks else None
+    n_missing = kinds.get("missing", 0)
+    n_extra = kinds.get("extra", 0)
+    n_different = kinds.get("different", 0)
+    values = [
+        ("schema_name", schema, "string"),
+        ("table_name", table, "string"),
+        ("struct_equal", struct_equal, "boolean"),
+        ("data_equal", chunk_failed == 0 if chunks else None, "boolean"),
+        ("up_count", up_count, "bigint"),
+        ("down_count", down_count, "bigint"),
+        ("chunk_total", len(chunks), "bigint"),
+        ("chunk_failed", chunk_failed, "bigint"),
+        ("n_missing", n_missing, "bigint"),
+        ("n_extra", n_extra, "bigint"),
+        ("n_different", n_different, "bigint"),
+        ("rows_add", n_missing + n_different, "bigint"),
+        ("rows_delete", n_extra + n_different, "bigint"),
+    ]
+    # literals over an inline VALUES row fold into a LocalTableScan;
+    # createDataFrame(list) would plan a job over a parallelized RDD
+    return src.sparkSession.sql("VALUES (0)").select(
+        *[F.lit(v).cast(t).alias(name) for name, v, t in values]
     )
 
 
@@ -394,8 +409,8 @@ def resume_row_diff(
     """Row-diff phase over the checkpointed chunk results: reads the
     mismatched chunk ids from ``checkpoint_dir`` (no re-checksum pass at
     all — the reference's resume reuses its chunk report the same way)
-    and row-joins ONLY those chunks, with the chunk predicate pushed to
-    the scan like :func:`targeted_row_diff`.
+    and row-joins ONLY those chunks, picked by a ``chunk_id IN (...)``
+    filter after the scan.
 
     The row-diff OUTCOMES are themselves checkpointed (checkpoints.go
     SavedState persists report + row results alongside chunk state): once
