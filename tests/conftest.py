@@ -1,4 +1,5 @@
 import os
+import re
 import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
@@ -41,3 +42,43 @@ def count_jobs(spark: SparkSession):
         sc.setLocalProperty("spark.jobGroup.id", prev)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         out.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _final_plan(description: str) -> str:
+    """The final plan of an adaptive plan description. It lists its tree
+    twice, the final plan first, then the initial plan, and the node
+    details follow both trees: cut the initial tree and keep the details
+    of the final tree's nodes only."""
+    tree, sep, rest = description.partition("+- == Initial Plan ==")
+    if not sep:
+        return description
+    ids = set(re.findall(r" \((\d+)\)", tree))
+    details = [
+        block.strip()
+        for block in rest.split("\n\n")[1:]
+        if (m := re.match(r"\((\d+)\) ", block.strip())) and m.group(1) in ids
+    ]
+    return tree + "\n\n" + "\n\n".join(details) + "\n"
+
+
+@contextmanager
+def executed_plans(spark: SparkSession):
+    """Collect the final physical plans of the SQL executions run inside
+    the block, oldest first. The status store keeps only the newest
+    executions, so they are selected by id, not by position."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    before = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+    plans: list[str] = []
+    try:
+        yield plans
+    finally:
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        plans.extend(
+            _final_plan(execs.apply(i).physicalPlanDescription())
+            for i in range(execs.size())
+            if execs.apply(i).executionId() > before
+        )

@@ -110,59 +110,6 @@ def test_salted_last_state_matches_unsalted(spark, sf_dir):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_bucketed_merge_does_not_shuffle_target(spark, sf_dir):
-    """The 100-TB apply story: against a bucketed target, every incremental
-    MERGE shuffles ONLY the change batch — the snapshot scan stays in its
-    bucket layout (zero exchanges on the target side of the join)."""
-    import pyspark.sql.functions as F
-
-    from tiflow_spark.envelope import load_table
-    from tiflow_spark.sinks.bucketed import (
-        merge_against_bucketed,
-        write_bucketed_target,
-    )
-
-    snapshot = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        F.round("c_acctbal", 2).alias("balance"),
-        F.col("c_mktsegment").alias("note"),
-    )
-    spark.sql("DROP TABLE IF EXISTS bucketed_target_test")
-    write_bucketed_target(snapshot, "bucketed_target_test", "id", 8)
-
-    changes = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") % 10 == 0)
-        .select(
-            F.when(F.col("c_custkey") % 20 == 0, "D").otherwise("U").alias("op"),
-            F.col("c_custkey").alias("id"),
-            F.lit(0.0).alias("balance"),
-            F.lit("patched").alias("note"),
-        )
-    )
-    # disable broadcast so the join shape is the large-scale SortMergeJoin
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        merged = merge_against_bucketed(spark, "bucketed_target_test", changes)
-        plan = plan_of(merged)
-        # exactly ONE shuffle: the change side. A second exchange would mean
-        # the bucketed target is being re-shuffled — the scale regression.
-        assert n_exchanges(plan) == 1, plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        # and the merge itself must be correct
-        n_target = snapshot.count()
-        n_del = changes.filter(F.col("op") == "D").count()
-        assert merged.count() == n_target - n_del
-        assert (
-            merged.filter(F.col("note") == "patched").count()
-            == changes.filter(F.col("op") != "D").count()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bucketed_target_test")
-
-
 def test_lsh_scale_paths_avoid_cartesian(spark, sf_dir):
     """MinHash-LSH dedup and LSH ANN are the 100-TB paths: candidate pairs
     must come from hash-bucket equi-joins (one exchange), never a cartesian
@@ -190,18 +137,6 @@ def test_salted_count_matches_plain_count(spark, sf_dir):
         for r in salted_count(env, ["table"], n_salts=8).collect()
     }
     assert plain == salted
-
-
-def test_compact_agg_strategy_combines_map_side(spark, sf_dir):
-    """strategy='agg' must place partial_max_by BEFORE the exchange — the
-    map-side combine that shrinks the shuffle for hot-key streams."""
-    from tiflow_spark.envelope import events_to_changes, load_table
-    from tiflow_spark.operators.compactor import compact
-
-    env = events_to_changes(load_table(spark, sf_dir, "events"))
-    plan = compact(env, strategy="agg")._jdf.queryExecution().executedPlan().toString()
-    ex = plan.index("Exchange hashpartitioning")
-    assert "partial_max_by" in plan[ex:], "no map-side combine below exchange"
 
 
 def test_asof_resolve_is_shuffle_free(spark, sf_dir):
@@ -837,6 +772,7 @@ def test_bucket_merge_rewrite_shuffles_once_by_bucket(spark, tmp_path):
     """stored ∪ batch crosses exactly one exchange in a rewrite merge,
     hashpartitioning(bucket): the winner window keyed on (bucket, table,
     key) and the bucket-partitioned write both reuse it."""
+    from conftest import executed_plans
     from pyspark.sql import functions as F
 
     from tiflow_spark.sinks.bucketed import merge_hash_bucketed
@@ -852,38 +788,22 @@ def test_bucket_merge_rewrite_shuffles_once_by_bucket(spark, tmp_path):
         ),
         target, n_buckets=8, batch_id=0,
     )
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    # the store keeps only the newest executions, so select by id, not
-    # by position
-    n = store.executionsCount()
-    before = store.executionsList(n - 1, 1).apply(0).executionId()
-    merge_hash_bucketed(
-        spark.createDataFrame(
-            [("t", str(k), "U", 2, 100 + k, k, 0.0) for k in range(0, 64, 5)],
-            schema,
-        ),
-        target, n_buckets=8, batch_id=1,
-    )
-    bus.waitUntilEmpty()
-    execs = store.executionsList()
-    plans = [
-        execs.apply(i).physicalPlanDescription()
-        for i in range(execs.size())
-        if execs.apply(i).executionId() > before
-    ]
+    with executed_plans(spark) as plans:
+        merge_hash_bucketed(
+            spark.createDataFrame(
+                [("t", str(k), "U", 2, 100 + k, k, 0.0) for k in range(0, 64, 5)],
+                schema,
+            ),
+            target, n_buckets=8, batch_id=1,
+        )
     writes = [
         p
         for p in plans
         if "InsertIntoHadoopFsRelation" in p and "_staging/batch-1" in p
     ]
     assert len(writes) == 1
-    # an adaptive plan lists its nodes twice: the final plan first, then
-    # the initial plan; node details follow both trees
     plan = writes[0]
-    final = plan.split("== Initial Plan ==")[0]
-    ids = re.findall(r"(?<!\w)Exchange \((\d+)\)", final)
+    ids = re.findall(r"(?<!\w)Exchange \((\d+)\)", plan)
     assert len(ids) == 1, plan
     detail = re.search(
         rf"^\({ids[0]}\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
@@ -899,3 +819,108 @@ def test_bucket_merge_rewrite_shuffles_once_by_bucket(spark, tmp_path):
             files = os.listdir(os.path.join(target, d))
             parquet = [f for f in files if f.endswith(".parquet")]
             assert len(parquet) == 1, (d, files)
+
+
+def test_bucket_merge_create_shuffles_once_by_bucket(spark, tmp_path):
+    """The create write crosses exactly one exchange too,
+    hashpartitioning(bucket): the winner window keyed on (bucket, table,
+    key) and the bucket-partitioned write share it, and each bucket is
+    written as one file."""
+    from conftest import executed_plans
+
+    from tiflow_spark.sinks.bucketed import merge_hash_bucketed, read_state
+
+    schema = (
+        "target_table string, key string, op string, commit_ts long, "
+        "seq long, id long, balance double"
+    )
+    # two events per key, so the create write resolves winners
+    rows = [("t", str(k), "I", 1, k, k, float(k)) for k in range(64)] + [
+        ("t", str(k), "U", 2, 100 + k, k, -1.0) for k in range(64)
+    ]
+    target = str(tmp_path / "target")
+    with executed_plans(spark) as plans:
+        merge_hash_bucketed(
+            spark.createDataFrame(rows, schema),
+            target, n_buckets=8, batch_id=0,
+        )
+    writes = [p for p in plans if "InsertIntoHadoopFsRelation" in p]
+    assert len(writes) == 1
+    plan = writes[0]
+    ids = re.findall(r"(?<!\w)Exchange \((\d+)\)", plan)
+    assert len(ids) == 1, plan
+    detail = re.search(
+        rf"^\({ids[0]}\) Exchange\n(?:.*\n)*?Arguments: (.*)$",
+        plan,
+        flags=re.M,
+    )
+    assert detail.group(1).startswith("hashpartitioning(bucket#"), plan
+    state = read_state(spark, target)
+    assert state.count() == 64
+    assert {r.balance for r in state.select("balance").distinct().collect()} == {-1.0}
+    buckets = [d for d in os.listdir(target) if d.startswith("bucket=")]
+    assert len(buckets) == 8
+    for d in buckets:
+        files = os.listdir(os.path.join(target, d))
+        parquet = [f for f in files if f.endswith(".parquet")]
+        assert len(parquet) == 1, (d, files)
+
+
+def test_streaming_batch_resolves_winners_once(spark, tmp_path):
+    """A micro-batch merged into an existing target resolves its
+    max-(commit_ts, seq, op) winners in one place, the merge's window:
+    the batch's executions hold exactly one Window node, and the target
+    state equals replaying every event in order."""
+    from conftest import executed_plans
+
+    from tiflow_spark.sinks.bucketed import read_state
+    from tiflow_spark.streaming.pipeline import StreamingTarget
+
+    schema = (
+        "op string, target_table string, key string, commit_ts long, "
+        "seq long, after struct<id: bigint, balance: double, note: string>"
+    )
+
+    def ev(op, k, ts, seq, bal):
+        return (op, "t", str(k), ts, seq, None if op == "D" else (k, bal, "n"))
+
+    first = [ev("I", k, 10, k, float(k)) for k in range(8)]
+    second = [
+        ev("I", 20, 20, 100, 1.0),  # I → D: a new key inserted then deleted
+        ev("D", 20, 21, 101, 0.0),
+        ev("U", 1, 5, 102, -5.0),  # late and older than the stored row
+        ev("U", 2, 22, 103, 2.2),  # several updates: the newest wins,
+        ev("U", 2, 23, 104, 2.3),  # whatever the file order
+        ev("U", 2, 15, 105, 1.5),
+        ev("U", 3, 24, 106, 3.4),  # updated, then a D tombstone
+        ev("D", 3, 25, 107, 0.0),
+        ev("D", 4, 26, 108, 0.0),
+        ev("U", 4, 9, 109, -9.0),  # older than the tombstone
+    ]
+    target = StreamingTarget(
+        target_path=str(tmp_path / "target"),
+        progress_path=str(tmp_path / "progress"),
+        n_buckets=4,
+    )
+    target.merge_batch(spark.createDataFrame(first, schema), 0)
+    with executed_plans(spark) as plans:
+        target.merge_batch(spark.createDataFrame(second, schema).repartition(3), 1)
+    windows = sum(
+        len(re.findall(r"^\(\d+\) Window$", p, flags=re.M)) for p in plans
+    )
+    assert windows == 1, plans
+
+    weight = {"D": 0, "U": 1, "I": 2}
+    expect = {}
+    for op, _, k, ts, seq, after in sorted(
+        first + second, key=lambda e: (e[3], e[4], weight[e[0]])
+    ):
+        if op == "D":
+            expect.pop(k, None)
+        else:
+            expect[k] = (after[0], after[1])
+    got = {
+        r.key: (r.id, r.balance)
+        for r in read_state(spark, target.target_path).collect()
+    }
+    assert got == expect

@@ -100,12 +100,39 @@ def _order(rows):
     return sorted(rows, key=lambda r: (r[3], r[4], w[r[0]]))
 
 
+@st.composite
+def _hot_key_batches(draw):
+    """Randomized HOT-KEY distribution: key 0 gets an update storm, cold
+    keys get 1-3 events — one batch mixes both regimes."""
+    batch = {0: draw(st.lists(
+        st.tuples(
+            st.sampled_from(OPS),
+            st.integers(min_value=1, max_value=5),
+            st.integers(min_value=0, max_value=99),
+        ),
+        min_size=25,
+        max_size=80,
+    ))}
+    n_cold = draw(st.integers(min_value=0, max_value=6))
+    for k in range(1, n_cold + 1):
+        batch[k] = draw(st.lists(
+            st.tuples(
+                st.sampled_from(OPS),
+                st.integers(min_value=1, max_value=5),
+                st.integers(min_value=0, max_value=99),
+            ),
+            min_size=1,
+            max_size=3,
+        ))
+    return batch
+
+
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(batch_strategy)
+@given(st.one_of(batch_strategy, _hot_key_batches()))
 def test_compact_matches_truth_table_fold(spark, batch):
     from tiflow_spark.operators.compactor import compact
 
@@ -157,78 +184,3 @@ def test_changes_to_state_matches_sequential_replay(spark, batch):
         else:
             expect[k] = r[6]
     assert got == {k: v for k, v in expect.items()}
-
-
-def test_compact_strategies_equivalent(spark, sf_dir):
-    """window and agg strategies must produce identical nets on the real
-    envelope (the physical plan differs; the contract may not)."""
-    from tiflow_spark.envelope import events_to_changes, load_table
-    from tiflow_spark.operators.compactor import compact, last_state_per_key
-
-    env = events_to_changes(load_table(spark, sf_dir, "events"))
-    a = compact(env, strategy="window")
-    b = compact(env, strategy="agg").select(*a.columns)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    la = last_state_per_key(env, strategy="window")
-    lb = last_state_per_key(env, strategy="agg").select(*la.columns)
-    assert la.exceptAll(lb).count() == 0 and lb.exceptAll(la).count() == 0
-
-
-@st.composite
-def _hot_key_batches(draw):
-    """Randomized HOT-KEY distribution (VERDICT r10 #8): key 0 gets an
-    update storm (the map-side-combine shape strategy='agg' exists for),
-    cold keys get 1-3 events (the wide shape strategy='window' exists
-    for) — one batch mixes both regimes."""
-    batch = {0: draw(st.lists(
-        st.tuples(
-            st.sampled_from(OPS),
-            st.integers(min_value=1, max_value=5),
-            st.integers(min_value=0, max_value=99),
-        ),
-        min_size=25,
-        max_size=80,
-    ))}
-    n_cold = draw(st.integers(min_value=0, max_value=6))
-    for k in range(1, n_cold + 1):
-        batch[k] = draw(st.lists(
-            st.tuples(
-                st.sampled_from(OPS),
-                st.integers(min_value=1, max_value=5),
-                st.integers(min_value=0, max_value=99),
-            ),
-            min_size=1,
-            max_size=3,
-        ))
-    return batch
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-)
-@given(_hot_key_batches())
-def test_compact_strategies_equivalent_under_hot_keys(spark, batch):
-    """window and agg strategies must produce identical nets under
-    randomized hot-key storms (module docstring's measured-equivalence
-    claim, pinned the way span dedup and CSV replay were pinned). The
-    input is coalesced to 3 partitions so the hot key genuinely repeats
-    within input partitions — the regime where partial_max_by actually
-    combines and any ordering bug in the composite order key would show."""
-    from tiflow_spark.operators.compactor import compact
-
-    rows = _rows(batch)
-    env = spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(3)
-    a = compact(env, strategy="window")
-    b = compact(env, strategy="agg").select(*a.columns)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # both must also match the reference truth-table fold
-    got = {r.key: r.op for r in a.collect()}
-    for k, evs in batch.items():
-        key_rows = _order([r for r in rows if r[2] == str(k)])
-        net = _fold_net_op([r[0] for r in key_rows])
-        if net is None:
-            assert str(k) not in got
-        else:
-            assert got[str(k)] == net

@@ -479,3 +479,42 @@ def test_loader_batched_mode_matches_sequential(spark, sf_dir, ckpt_dir):
     assert loaded.select(src.columns).exceptAll(src).count() == 0
     assert src.exceptAll(loaded.select(src.columns)).count() == 0
     _sh.rmtree(work, ignore_errors=True)
+
+
+def test_resume_row_diff_broadcasts_many_failed_chunks(spark, ckpt_dir):
+    """With 155 failed chunks in the checkpoint, the resumed row diff picks
+    them by a broadcast join on the chunk id — no IN list, whose planning
+    grows with the failed chunks — and counts every kind exactly."""
+    import re
+
+    from conftest import executed_plans
+
+    from tiflow_spark.validation.syncdiff import (
+        resumable_chunk_compare,
+        resume_row_diff,
+    )
+
+    src = spark.range(3000).select("id", (F.col("id") * 7).alias("v"))
+    dst = (
+        src.filter(F.col("id") % 20 != 5)  # 150 missing, one per chunk
+        .select(
+            "id",
+            (F.col("v") + F.when(F.col("id") % 20 == 0, 1).otherwise(0))
+            .alias("v"),  # 150 different, in the same chunks
+        )
+        .unionByName(  # 50 extra, in 5 chunks past the source
+            spark.range(3000, 3050).select("id", F.lit(0).cast("long").alias("v"))
+        )
+    )
+    chunks = resumable_chunk_compare(
+        spark, src, dst, "id", ["id", "v"], 10, ckpt_dir
+    )
+    assert chunks.filter(~F.col("match")).count() == 155
+    with executed_plans(spark) as plans:
+        diff = resume_row_diff(spark, src, dst, "id", ["id", "v"], 10, ckpt_dir)
+    writes = [p for p in plans if "InsertIntoHadoopFsRelation" in p]
+    assert len(writes) == 1
+    assert "BroadcastExchange" in writes[0], writes[0]
+    assert not re.search(r" IN \(| INSET ", writes[0]), writes[0]
+    kinds = {r["kind"]: r["count"] for r in diff.groupBy("kind").count().collect()}
+    assert kinds == {"missing": 150, "extra": 50, "different": 150}

@@ -188,3 +188,29 @@ def test_storage_sink_canal_json_layout(spark, sf_dir, tmp_path):
     assert os.path.exists(
         sorted(glob.glob(f"{base}/*/*/meta/schema_1_*.json"))[0]
     )
+
+
+def test_refuses_non_local_master_and_speculation(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Executors write straight into a staging tree only the driver reads,
+    so the sink refuses, before writing anything, a non-local master and
+    speculative task attempts."""
+    import pytest
+    from pyspark import SparkConf
+
+    sc = spark.sparkContext
+    base = tmp_path / "sink"
+    with monkeypatch.context() as m:
+        m.setattr(sc, "master", "spark://cluster:7077")
+        with pytest.raises(RuntimeError, match="is not local"):
+            _write(spark, sf_dir, tmp_path)
+    assert not base.exists()
+    speculative = SparkConf(loadDefaults=False).setAll(
+        sc.getConf().getAll()
+    ).set("spark.speculation", "true")
+    with monkeypatch.context() as m:
+        m.setattr(sc, "getConf", lambda: speculative)
+        with pytest.raises(RuntimeError, match="speculation must be off"):
+            _write(spark, sf_dir, tmp_path)
+    assert not base.exists()

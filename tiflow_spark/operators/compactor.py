@@ -6,18 +6,9 @@ Reference: dm/syncer/compactor.go:28-230. Truth table (comments :154-162):
 Plus: updates that change the identity key must be split FIRST
 (split_updates), so inside the compactor a key never migrates.
 
-Spark-first shape — TWO physical strategies, one semantic contract:
-
-- ``strategy="window"`` (default): one shuffle on (table, key) + a
-  partition-local sort. Fastest when events-per-key-per-input-partition is
-  ~1 (wide key spaces — the common CDC shape), because a map-side combine
-  has nothing to combine and a struct-comparing max_by only adds overhead
-  (measured ~15-20% slower at sf0.1).
-- ``strategy="agg"``: max_by/min_by hash aggregation over the composite
-  order key. partial_max_by runs BEFORE the exchange, so the shuffle
-  carries one candidate per key per map task — the right plan when keys
-  repeat heavily within input partitions (hot-key update storms, large
-  micro-batches of few keys). Equivalence is property-tested.
+Spark-first shape: one shuffle on (table, key) + a partition-local sort
+(a window). Wide CDC key spaces hold ~1 event per key per input
+partition, so a map-side combine would have nothing to combine.
 
 Event ordering rule (delete < update < insert at equal commit_ts,
 cdc/model/sink.go:439-452) is encoded as op_weight.
@@ -37,12 +28,6 @@ def order_cols():
     return [F.col("commit_ts"), F.col("seq"), op_weight()]
 
 
-def _order_key() -> F.Column:
-    """Composite event-order key as a struct (lexicographic comparison) —
-    unique per key since seq is unique."""
-    return F.struct(F.col("commit_ts"), F.col("seq"), op_weight())
-
-
 def _net_op(first_op, last_op):
     """The compactor truth table (compactor.go:154-162)."""
     return (
@@ -55,19 +40,14 @@ def _net_op(first_op, last_op):
     )
 
 
-def compact(
-    env: DataFrame, table_col: str = "table", strategy: str = "window"
-) -> DataFrame:
+def compact(env: DataFrame, table_col: str = "table") -> DataFrame:
     """Net change per (table, key): first-op/last-op recombination.
 
     Returns one row per key with the same envelope columns; `op` is the net
     operation, before = first event's before, after = last event's after,
     commit_ts/start_ts/seq = the last event's (the net change is observed at
-    the last change's timestamp, compactor.go:163). See module docstring
-    for the strategy choice.
+    the last change's timestamp, compactor.go:163).
     """
-    if strategy == "agg":
-        return _compact_agg(env, table_col)
     w = Window.partitionBy(table_col, "key").orderBy(*order_cols())
     w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     enriched = env.select(
@@ -95,63 +75,17 @@ def compact(
     return out
 
 
-def _compact_agg(env: DataFrame, table_col: str) -> DataFrame:
-    """Map-side-combining form: partial_max_by before the exchange."""
-    ordk = _order_key()
-    others = [c for c in env.columns if c not in (table_col, "key")]
-    g = env.groupBy(table_col, "key").agg(
-        F.max_by(F.struct(*[F.col(c) for c in others]), ordk).alias("_last"),
-        F.min_by(F.col("op"), ordk).alias("_first_op"),
-        F.min_by(F.col("before"), ordk).alias("_first_before"),
-    )
-    flat = g.select(
-        *[
-            F.col(c) if c in (table_col, "key") else F.col(f"_last.{c}").alias(c)
-            for c in env.columns
-        ],
-        "_first_op",
-        "_first_before",
-    )
-    return (
-        flat.withColumn("_net", _net_op(F.col("_first_op"), F.col("op")))
-        .filter(F.col("_net").isNotNull())  # I..D annihilates
-        .withColumn(
-            "before",
-            F.when(F.col("_net").isin("U", "D"), F.col("_first_before")),
-        )
-        .withColumn(
-            "after",
-            F.when(F.col("_net").isin("I", "U"), F.col("after")),
-        )
-        .withColumn("op", F.col("_net"))
-        .drop("_net", "_first_op", "_first_before")
-    )
-
-
 def last_state_per_key(
     env: DataFrame,
     table_col: str = "table",
-    strategy: str = "window",
     partition_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Just the final event per key (no truth-table recombination) — the
-    dedup primitive used by the MERGE applier (max-ts-wins). Same strategy
-    trade-off as compact(). ``partition_cols`` lead the grouping key; they
-    must be functions of (table, key), like a hash bucket, so the winners
-    do not change — only the clustering the plan asks of its input."""
+    dedup primitive used by the MERGE applier (max-ts-wins).
+    ``partition_cols`` lead the grouping key; they must be functions of
+    (table, key), like a hash bucket, so the winners do not change — only
+    the clustering the plan asks of its input."""
     keys = (*partition_cols, table_col, "key")
-    if strategy == "agg":
-        ordk = _order_key()
-        others = [c for c in env.columns if c not in keys]
-        g = env.groupBy(*keys).agg(
-            F.max_by(F.struct(*[F.col(c) for c in others]), ordk).alias("_last")
-        )
-        return g.select(
-            *[
-                F.col(c) if c in keys else F.col(f"_last.{c}").alias(c)
-                for c in env.columns
-            ]
-        )
     w = Window.partitionBy(*keys).orderBy(
         *[c.desc() for c in order_cols()]
     )

@@ -1,13 +1,14 @@
-"""Bucketed MERGE target — the shuffle-free apply path at scale.
+"""Hash-bucket MERGE target — the streaming apply path at scale.
 
 The reference co-locates work by key once (causality hash → worker queue)
-and then applies against MySQL, which resolves rows by index. Spark's
-analog for a *table* target: bucket the target by the merge key, so every
-incremental MERGE joins the (small) change batch against the (huge)
-snapshot WITHOUT shuffling the snapshot — the scan is already hash-
-partitioned by bucket. At 100 TB the snapshot shuffle is the single
-largest avoidable cost in a merge; bucketing removes it from every batch
-forever at the price of one bucketed write.
+and then applies against MySQL, which resolves rows by index. The Spark
+analog here is a parquet directory partitioned on
+``bucket = pmod(xxhash64(key), n_buckets)``: a micro-batch lists, reads
+and rewrites ONLY the bucket directories its keys touch, so its cost is
+O(batch + touched buckets), never O(target). Each merge resolves the
+max-(commit_ts, seq, op) winner per key in one window over stored ∪ batch
+and crosses one exchange, ``hashpartitioning(bucket)``, which the window
+and the bucket-partitioned write share (one file per bucket).
 
 Commit protocol (crash-atomic, replay-recoverable): each batch stages its
 rewritten buckets under ``<path>/_staging/batch-<id>/`` (invisible to Spark
@@ -20,10 +21,7 @@ replay-idempotent contract holds across every crash window. This is the
 parquet-native miniature of a Delta/Iceberg transaction log, which remains
 the production seam of foreachBatch.
 
-`tests/test_plan_contracts.py::test_bucketed_merge_does_not_shuffle_target`
-asserts the no-target-shuffle property on the physical plan, and
-``test_bucket_merge_rewrite_shuffles_once_by_bucket`` pins the single
-exchange of a rewrite merge.
+``tests/test_plan_contracts.py`` pins that single exchange.
 """
 
 from __future__ import annotations
@@ -39,51 +37,6 @@ from pyspark.sql import types as T
 _META = "_target_meta.json"
 _STAGING = "_staging"
 _DELTA = "_delta"
-
-
-def write_bucketed_target(
-    snapshot: DataFrame,
-    table_name: str,
-    key_col: str = "id",
-    n_buckets: int = 16,
-) -> None:
-    """One-time (re)materialization of the target, bucketed + sorted by the
-    merge key (Delta/Iceberg deployments use their native clustering)."""
-    (
-        snapshot.write.mode("overwrite")
-        .bucketBy(n_buckets, key_col)
-        .sortBy(key_col)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
-def merge_against_bucketed(
-    spark: SparkSession,
-    table_name: str,
-    changes: DataFrame,
-    key_col: str = "id",
-) -> DataFrame:
-    """Incremental MERGE plan against the bucketed target: the change side
-    shuffles into the target's bucket layout; the target side reads
-    in-place. Net-delete keys drop, upserts win — same semantics as
-    apply.merge_into_snapshot."""
-    target = spark.table(table_name)
-    chg = changes.select(
-        F.col("op").alias("_op"),
-        *[F.col(c).alias(f"_c_{c}") for c in target.columns],
-    )
-    joined = target.join(
-        chg, target[key_col] == chg[f"_c_{key_col}"], "full_outer"
-    )
-    is_change = F.col("_op").isNotNull()
-    keep = ~is_change | (F.col("_op") != "D")
-    return joined.filter(keep).select(
-        *[
-            F.when(is_change, F.col(f"_c_{c}")).otherwise(F.col(c)).alias(c)
-            for c in target.columns
-        ]
-    )
 
 
 # ------------------------------------------------ atomic-commit machinery
@@ -329,7 +282,7 @@ def merge_hash_bucketed(
     2. computes the buckets its keys touch (a tiny distinct on the batch),
     3. reads ONLY those partitions (partition-pruned, under the recorded
        target schema),
-    4. re-resolves max-(commit_ts, seq, op)-wins per key, and
+    4. resolves max-(commit_ts, seq, op)-wins per key, and
     5. stages + atomically commits only the touched buckets.
 
     Untouched buckets are never read or written — the property that makes a
@@ -386,13 +339,17 @@ def merge_hash_bucketed(
             # + resolved-ts contract delivers per-key in order; a file
             # source across restarts does not). read_state() filters them;
             # purge_tombstones() reclaims them below the GC safepoint.
-            result = last_state_per_key(chg, table_col)
-            # one file per bucket dir: without this, every writer task sprays
-            # a small file into every bucket it sees (32 tasks x 1024 dirs).
-            # Explicit partition count — see _bucket_write_partitions.
-            result.repartition(
-                _bucket_write_partitions(spark, n_buckets), F.col("bucket")
-            ).write.mode("overwrite").partitionBy("bucket").parquet(path)
+            # one exchange, hashpartitioning(bucket), serves the winner
+            # window and the writer: one file per bucket dir. Explicit
+            # partition count — see _bucket_write_partitions.
+            result = last_state_per_key(
+                chg.repartition(
+                    _bucket_write_partitions(spark, n_buckets), F.col("bucket")
+                ),
+                table_col,
+                partition_cols=("bucket",),
+            )
+            result.write.mode("overwrite").partitionBy("bucket").parquet(path)
             # base=meta0: Spark's overwrite wiped the dir — restore any
             # pre-creation metadata (truncate watermarks) alongside sizing;
             # record the creation schema for the empty-target read fallback

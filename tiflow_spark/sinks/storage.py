@@ -22,6 +22,13 @@ The driver-side finalize step only *renames* finished files into the
 CDC{n}.csv contract and writes the small meta files — O(#files) metadata
 ops, the same commit work the reference sink performs per flush; data bytes
 move exactly once, on the executors.
+
+Deployment contract: tasks write straight into a staging directory that
+the driver then renames, so driver and executors must share one POSIX
+filesystem and each task must run once. :func:`write_storage_sink` refuses,
+before writing anything, a master that is not ``local*`` (a cluster's
+output would be silently empty) and ``spark.speculation=true`` (attempts
+would interleave their writes into the same files).
 """
 
 from __future__ import annotations
@@ -181,7 +188,13 @@ def write_storage_sink(
     """Write an envelope batch in the reference's storage-sink layout.
 
     Returns the relative paths of the data files written (sorted).
+    Raises ``RuntimeError`` outside the module's deployment contract.
     """
+    sc = env.sparkSession.sparkContext
+    if not sc.master.startswith("local"):
+        raise RuntimeError(f"storage sink: master {sc.master!r} is not local")
+    if sc.getConf().get("spark.speculation", "false").lower() == "true":
+        raise RuntimeError("storage sink: spark.speculation must be off")
     renamed = env.withColumnRenamed(schema_col, "schema").withColumnRenamed(
         table_col, "table"
     )

@@ -36,7 +36,6 @@ from pyspark.sql import types as T
 from tiflow_spark.config import TaskConfig
 from tiflow_spark.operators import filters as flt
 from tiflow_spark.operators import transforms as tfm
-from tiflow_spark.operators.compactor import last_state_per_key
 
 def envelope_schema(payload: T.StructType) -> T.StructType:
     """CDC envelope schema for an arbitrary row payload: the fixed metadata
@@ -171,10 +170,11 @@ class StreamingTarget:
         """Idempotent MERGE of one micro-batch (runs on the driver inside
         foreachBatch, all heavy lifting stays distributed).
 
-        1. compact the batch to net-last-state per key (one shuffle)
-        2. merge into ONLY the hash buckets the batch touches, keeping the
-           max-(commit_ts, seq, op) winner per key (replay-idempotent)
-        3. write the batch's progress record, observed during step 1's
+        1. project each event's ``after`` image to the target's columns
+        2. merge into ONLY the hash buckets the batch touches; the merge is
+           the one place that keeps the max-(commit_ts, seq, op) winner per
+           key (replay-idempotent)
+        3. write the batch's progress record, observed during step 2's
            scan (the batch is scanned once)
         """
         from tiflow_spark.sinks.bucketed import merge_hash_bucketed
@@ -187,16 +187,15 @@ class StreamingTarget:
             F.max("commit_ts").alias("resolved_ts"),
             F.count(F.lit(1)).alias("events"),
         )
-        last = last_state_per_key(observed, self.table_col)
         # payload columns come from the batch's own `after` struct — the
         # envelope schema is per-deployment data, not engine constants
         meta = {"target_table", "key", "op", "commit_ts", "seq"}
         payload = [
             f.name
-            for f in last.schema["after"].dataType.fields
+            for f in observed.schema["after"].dataType.fields
             if f.name not in meta
         ]
-        changes = last.select(
+        changes = observed.select(
             F.col(self.table_col).alias("target_table"),
             F.col("key"),
             F.col("op"),
@@ -386,7 +385,6 @@ class DDLStreamingTarget(StreamingTarget):
         # target schema (the reference checkpoints executed DDL the same
         # way, ddl_manager's checkpointTs)
         applied = max(vmax, self._load_applied_version())
-        last = last_state_per_key(dec, self.table_col)
         cols = [
             F.col(self.table_col).alias("target_table"),
             F.col("key"),
@@ -401,7 +399,7 @@ class DDLStreamingTarget(StreamingTarget):
             if c not in key_names
         ]
         merge_hash_bucketed(
-            last.select(*cols),
+            dec.select(*cols),
             self.target_path,
             n_buckets=self.n_buckets,
             key_cols=("target_table", self.key_col),

@@ -13,8 +13,8 @@ shuffle); the row-level join runs ONLY over mismatched chunks — at 100 TB the
 expensive join touches a tiny fraction of the data, mirroring the reference's
 binary-search narrowing. The row diff's scan still reads every row: the
 mismatched chunks are picked after it, by a join against a broadcast of
-their ids (:func:`targeted_row_diff`, :func:`summary_report`) or by a
-``chunk_id IN (...)`` filter (:func:`resume_row_diff`). Only
+their ids (:func:`targeted_row_diff`, which :func:`summary_report` and
+:func:`resume_row_diff` call). Only
 :func:`resumable_chunk_compare` and :func:`bin_search_diff` put pk RANGE
 predicates on the scan, which parquet can push down.
 """
@@ -119,6 +119,20 @@ def targeted_row_diff(
     return row_diff(s.drop("chunk_id"), d.drop("chunk_id"), pk, cols)
 
 
+def _failed_chunks(spark, bad: list[int]) -> DataFrame:
+    """Failed chunk ids as a ``checksums=`` frame for
+    :func:`targeted_row_diff`, built from one Arrow batch. (An ``IN`` list
+    costs planning time per id: ~10 s at 20,000 failed chunks.)"""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "chunk_id": pa.array(bad, pa.int64()),
+                "match": pa.array([False] * len(bad)),
+            }
+        )
+    )
+
+
 def repair_sql(
     diff: DataFrame, table: str, pk: str, cols: list[str]
 ) -> DataFrame:
@@ -176,9 +190,8 @@ def summary_report(
     1. the chunk checksum compare, collected (bounded: one row per
        chunk); the chunk and row counts come from it;
     2. only if some chunk failed: :func:`targeted_row_diff` over the
-       failed chunk ids, shipped to the JVM as one Arrow batch, collected
-       as one count per kind. (An ``IN`` list of the ids would cost
-       planning time per id: ~10 s at 20,000 failed chunks.)
+       failed chunk ids (:func:`_failed_chunks`), collected as one count
+       per kind.
 
     The result is a local one-row frame: collecting it runs no job.
     """
@@ -187,15 +200,10 @@ def summary_report(
     bad = [r.chunk_id for r in chunks if not r.match]
     kinds: dict = {}
     if bad:
-        failed = src.sparkSession.createDataFrame(
-            pa.table(
-                {
-                    "chunk_id": pa.array(bad, pa.int64()),
-                    "match": pa.array([False] * len(bad)),
-                }
-            )
+        diff = targeted_row_diff(
+            src, dst, pk, cols, width,
+            checksums=_failed_chunks(src.sparkSession, bad),
         )
-        diff = targeted_row_diff(src, dst, pk, cols, width, checksums=failed)
         counts = diff.groupBy("kind").count().collect()
         kinds = {r["kind"]: r["count"] for r in counts}
     # sums over zero chunks stay NULL, as SQL's sum() does
@@ -409,8 +417,8 @@ def resume_row_diff(
     """Row-diff phase over the checkpointed chunk results: reads the
     mismatched chunk ids from ``checkpoint_dir`` (no re-checksum pass at
     all — the reference's resume reuses its chunk report the same way)
-    and row-joins ONLY those chunks, picked by a ``chunk_id IN (...)``
-    filter after the scan.
+    and row-joins ONLY those chunks, picked by :func:`targeted_row_diff`'s
+    broadcast join against their ids after the scan.
 
     The row-diff OUTCOMES are themselves checkpointed (checkpoints.go
     SavedState persists report + row results alongside chunk state): once
@@ -477,8 +485,9 @@ def resume_row_diff(
     if not bad:
         diff = row_diff(src.limit(0), dst.limit(0), pk, cols)
     else:
-        pred = chunk_id_col(pk, width).isin(*bad)
-        diff = row_diff(src.filter(pred), dst.filter(pred), pk, cols)
+        diff = targeted_row_diff(
+            src, dst, pk, cols, width, checksums=_failed_chunks(spark, bad)
+        )
     if not complete:
         return diff
     staging = rd_dir + ".staging"
