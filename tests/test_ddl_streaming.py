@@ -347,3 +347,89 @@ def test_partition_routing_composes_with_live_ddl(spark, sf_dir, tmp_path):
     # every surviving p1 row's winner predates the DROP PARTITION
     p1_keys = j.filter(F.col("key").cast("bigint") % 2 == 1)
     assert p1_keys.filter(F.col("_win_ts") >= mid).count() == 0
+
+
+def test_ddl_changefeed_writes_progress(spark, tmp_path, chunks):
+    """A DDL changefeed applies through the one apply loop, so it writes
+    one progress record per micro-batch, and a replayed batch overwrites
+    its own record."""
+    import os
+
+    from tiflow_spark.streaming.pipeline import (
+        ENVELOPE_SCHEMA,
+        run_changefeed_with_ddl,
+        transform_stream,
+    )
+    from tiflow_spark.tools import changefeed_status
+
+    src, events, _ = chunks
+    work = str(tmp_path / "work_progress")
+    _, target = run_changefeed_with_ddl(
+        spark, src, TaskConfig(), work, ddl_stream(events), max_files=1
+    )
+    assert sorted(
+        f for f in os.listdir(target.progress_path) if f.startswith("batch-")
+    ) == [f"batch-{i}.parquet" for i in range(3)]
+    expected = transform_stream(
+        spark.read.schema(ENVELOPE_SCHEMA).parquet(src), TaskConfig()
+    ).agg(F.count(F.lit(1)).alias("n"), F.max("commit_ts").alias("ts"))
+    expected = expected.collect()[0]
+    status = changefeed_status(spark, work)
+    assert status["batches"] == 3
+    assert status["events_applied"] == expected.n
+    assert status["resolved_ts"] == expected.ts
+
+    # replay batch 1 (the second file by arrival) after a crash
+    files = sorted(
+        (os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")),
+        key=os.path.getmtime,
+    )
+    assert len(files) == 3
+    second = spark.read.schema(ENVELOPE_SCHEMA).parquet(files[1])
+    target.merge_batch(transform_stream(second, TaskConfig()), 1)
+    prog = spark.read.parquet(target.progress_path)
+    assert prog.filter(F.col("batch_id") == 1).count() == 1
+    again = changefeed_status(spark, work)
+    assert again["batches"] == 3
+    assert again["events_applied"] == expected.n
+
+
+def test_ddl_target_compacts_deltas(spark, tmp_path, chunks):
+    """``compact_every`` folds a delta-mode DDL target's deltas, and the
+    folded state equals the rewrite-mode state of the same run, evolved
+    columns included."""
+    import os
+
+    from tiflow_spark.sinks.bucketed import list_deltas, read_state
+    from tiflow_spark.sources.ddl_stream import registry_from_ddl
+    from tiflow_spark.streaming.pipeline import (
+        DDLStreamingTarget,
+        _start_changefeed,
+    )
+
+    src, events, _ = chunks
+    registry = registry_from_ddl(ddl_stream(events)).filter(
+        F.col("table") == "events"
+    )
+    states = {}
+    for mode in ("delta", "rewrite"):
+        work = str(tmp_path / f"work_{mode}")
+        target = DDLStreamingTarget(
+            target_path=os.path.join(work, "target"),
+            progress_path=os.path.join(work, "progress"),
+            registry=registry,
+            merge_mode=mode,
+            compact_every=2,
+        )
+        _start_changefeed(
+            spark, src, TaskConfig(), work, target, max_files=1
+        ).awaitTermination()
+        states[mode] = read_state(spark, target.target_path)
+        if mode == "delta":
+            assert list_deltas(target.target_path) == []
+    cols = sorted(states["rewrite"].columns)
+    assert "tier" in cols and sorted(states["delta"].columns) == cols
+    a = states["delta"].select(cols)
+    b = states["rewrite"].select(cols)
+    assert b.count() > 0
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

@@ -97,19 +97,6 @@ def test_shipping_priority_broadcasts_dimension(spark, sf_dir):
     assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
 
 
-def test_salted_last_state_matches_unsalted(spark, sf_dir):
-    """Skew remedy must be a pure optimization: salted two-phase winner ==
-    single-window winner."""
-    from tiflow_spark.operators.compactor import last_state_per_key
-    from tiflow_spark.operators.skew import salted_last_state
-    from tiflow_spark.plans.parity import _env
-
-    env = _env(spark, sf_dir)
-    a = last_state_per_key(env).select("table", "key", "op", "commit_ts", "seq")
-    b = salted_last_state(env).select("table", "key", "op", "commit_ts", "seq")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_lsh_scale_paths_avoid_cartesian(spark, sf_dir):
     """MinHash-LSH dedup and LSH ANN are the 100-TB paths: candidate pairs
     must come from hash-bucket equi-joins (one exchange), never a cartesian
@@ -119,24 +106,6 @@ def test_lsh_scale_paths_avoid_cartesian(spark, sf_dir):
         p = plan_of(REGISTRY[name][0](spark, sf_dir))
         assert "CartesianProduct" not in p, name
         assert "BroadcastNestedLoop" not in p, name
-
-
-def test_salted_count_matches_plain_count(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    from tiflow_spark.operators.skew import salted_count
-    from tiflow_spark.plans.parity import _env
-
-    env = _env(spark, sf_dir)
-    plain = {
-        (r["table"],): r["cnt"]
-        for r in env.groupBy("table").agg(F.count("*").alias("cnt")).collect()
-    }
-    salted = {
-        (r["table"],): r["cnt"]
-        for r in salted_count(env, ["table"], n_salts=8).collect()
-    }
-    assert plain == salted
 
 
 def test_asof_resolve_is_shuffle_free(spark, sf_dir):

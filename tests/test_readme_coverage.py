@@ -47,3 +47,64 @@ def test_every_registry_query_is_documented():
         if not any(q.startswith(w + "_") for w in wildcards)
     ]
     assert not undocumented, f"README missing queries: {undocumented}"
+
+
+def _top_level_names(path):
+    import ast
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, ast.Assign):
+            names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.add(node.target.id)
+    return names
+
+
+def test_every_cited_module_exists():
+    """Every `<path>.py` the README cites resolves to exactly one file
+    (`tests/...` from the repo root, anything else under `tiflow_spark/`,
+    a bare name by path suffix), and every `<path>.py::<name>` names a
+    top-level def, class or assignment of that file. `a/b` cites two
+    names, `(...)` call arguments are ignored, `*` is a wildcard and
+    `{x,y}` expands to one path per alternative."""
+    import fnmatch
+    import os
+
+    text = _readme()
+    modules = sorted(
+        os.path.relpath(os.path.join(root, f), "tiflow_spark")
+        for root, _, files in os.walk("tiflow_spark")
+        for f in files
+        if f.endswith(".py")
+    )
+    cited = re.findall(r"`([\w/{},.]+\.py)(?:::([^`]+))?`", text)
+    assert cited
+    problems = []
+    for path, names in cited:
+        alts = re.match(r"(.*)\{([^}]*)\}(.*)", path)
+        paths = (
+            [alts[1] + a + alts[3] for a in alts[2].split(",")] if alts else [path]
+        )
+        for p in paths:
+            if p.startswith("tests/"):
+                hits = [p] if os.path.isfile(p) else []
+            else:
+                hits = [
+                    os.path.join("tiflow_spark", m)
+                    for m in modules
+                    if m == p or m.endswith("/" + p)
+                ]
+            if len(hits) != 1:
+                problems.append(f"{p}: {len(hits)} files")
+                continue
+            defined = _top_level_names(hits[0])
+            for name in filter(None, names.split("/")):
+                name = name.split("(")[0]
+                if not fnmatch.filter(defined, name):
+                    problems.append(f"{p}::{name}: not defined")
+    assert not problems, f"README cites missing code: {sorted(set(problems))}"

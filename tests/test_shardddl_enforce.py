@@ -109,3 +109,24 @@ def test_conflicted_table_pauses_then_resumes(spark, tmp_path):
     # batch 3: reconciling DDL seen — parked rows flush with the live batch
     assert snapshots[2] == {"1", "2", "11", "3", "12", "13", "4", "14"}
     assert not os.path.isdir(target.pending_path), "pending store drained"
+
+
+def test_empty_batch_writes_progress_record(spark, tmp_path):
+    """A batch with no events still gets its (None, 0) progress record,
+    as on the base StreamingTarget."""
+    work = str(tmp_path / "work")
+    target = OptimisticShardTarget(
+        target_path=os.path.join(work, "target"),
+        progress_path=os.path.join(work, "progress"),
+        shard_ddl=_shard_ddl(spark),
+        pending_path=os.path.join(work, "pending"),
+        n_buckets=4,
+    )
+    batch = transform_stream(_envelope(spark, _env_rows()), TaskConfig())
+    target.merge_batch(batch, 0)
+    target.merge_batch(batch.filter(F.col("seq") < 0), 1)
+    rows = {
+        r.batch_id: (r.resolved_ts, r.events)
+        for r in spark.read.parquet(target.progress_path).collect()
+    }
+    assert rows[1] == (None, 0)

@@ -143,8 +143,7 @@ class StreamingTarget:
     """Hash-bucket-partitioned parquet MERGE target + progress bookkeeping.
 
     Per-batch cost is O(batch + touched buckets), never O(target) — see
-    sinks/bucketed.merge_hash_bucketed. The old full-rewrite path was the
-    one scale-killer in the streaming apply at 100x target growth.
+    sinks/bucketed.merge_hash_bucketed.
     """
 
     target_path: str
@@ -259,6 +258,28 @@ class StreamingTarget:
                 )
 
 
+def _start_changefeed(
+    spark: SparkSession,
+    source_dir: str,
+    cfg: TaskConfig,
+    work_dir: str,
+    target: StreamingTarget,
+    max_files: int = 8,
+    processing_time: str | None = None,
+):
+    """Start the stream ``readStream → transform_stream →
+    foreachBatch(target.merge_batch)``, checkpointed under ``work_dir``:
+    an availableNow drain, or a standing query on ``processing_time``."""
+    writer = (
+        transform_stream(read_change_stream(spark, source_dir, max_files), cfg)
+        .writeStream.foreachBatch(target.merge_batch)
+        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+    )
+    if processing_time is not None:
+        return writer.trigger(processingTime=processing_time).start()
+    return writer.trigger(availableNow=True).start()
+
+
 def run_changefeed(
     spark: SparkSession,
     source_dir: str,
@@ -285,17 +306,10 @@ def run_changefeed(
         merge_mode=merge_mode,
         syncpoint_every=syncpoint_every,
     )
-    stream = read_change_stream(spark, source_dir)
-    transformed = transform_stream(stream, cfg)
-    writer = (
-        transformed.writeStream.foreachBatch(target.merge_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+    q = _start_changefeed(
+        spark, source_dir, cfg, work_dir, target,
+        processing_time=processing_time,
     )
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
     if await_termination and processing_time is None:
         q.awaitTermination()
     return q, target
@@ -311,8 +325,14 @@ class DDLStreamingTarget(StreamingTarget):
     and a column introduced by an ADD COLUMN DDL reaches the target only
     once a batch contains events at-or-past that DDL — i.e. after every
     earlier DML has drained, which is exactly the barrier ordering. The
-    per-batch max-version probe is a tiny driver-side aggregate (the same
-    role the owner's barrier tick plays)."""
+    decoded batch then goes through the one apply loop,
+    ``StreamingTarget.merge_batch`` (merge, compaction, progress,
+    syncpoints).
+
+    The per-batch max-version probe (the role the owner's barrier tick
+    plays) is a second scan of each micro-batch, so ``numInputRows`` reads
+    twice the events: the applied version must be known before the merge
+    is planned, because it fixes the target's columns at the barrier."""
 
     def __init__(
         self,
@@ -365,13 +385,14 @@ class DDLStreamingTarget(StreamingTarget):
         return vers[pick]
 
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
-        from tiflow_spark.sinks.bucketed import merge_hash_bucketed
         from tiflow_spark.sources.schema_registry import (
             asof_resolve,
             decode_with_schema,
         )
 
         env = batch.withColumn("logical_table", F.lit(self.logical_table))
+        # asof_resolve is a left join: every event of the batch survives,
+        # so the observed progress counts the batch's events
         dec = decode_with_schema(
             asof_resolve(env, self.registry), self.registry
         )
@@ -385,27 +406,16 @@ class DDLStreamingTarget(StreamingTarget):
         # target schema (the reference checkpoints executed DDL the same
         # way, ddl_manager's checkpointTs)
         applied = max(vmax, self._load_applied_version())
-        cols = [
-            F.col(self.table_col).alias("target_table"),
-            F.col("key"),
-            F.col("op"),
-            F.col("commit_ts"),
-            F.col("seq"),
-        ]
-        key_names = {"target_table", "key", "op", "commit_ts", "seq"}
-        cols += [
-            F.col(f"{c}_resolved").alias(c)
-            for c in self._columns_at(applied)
-            if c not in key_names
-        ]
-        merge_hash_bucketed(
-            dec.select(*cols),
-            self.target_path,
-            n_buckets=self.n_buckets,
-            key_cols=("target_table", self.key_col),
-            table_col="target_table",
-            batch_id=batch_id,
-            mode=self.merge_mode,
+        # the base loop projects `after` minus the envelope's own columns
+        after = F.struct(
+            *[F.col(f"{c}_resolved").alias(c) for c in self._columns_at(applied)]
+        )
+        super().merge_batch(
+            dec.select(
+                self.table_col, "key", "op", "commit_ts", "seq",
+                after.alias("after"),
+            ),
+            batch_id,
         )
         # truncate DDLs whose barrier this batch reached: metadata-only
         # watermark, monotone → replay-idempotent, O(1) in target size
@@ -452,14 +462,7 @@ def run_changefeed_with_ddl(
             (t, ts) for t, ts in truncate_events(ddl) if t == logical_table
         ],
     )
-    stream = read_change_stream(spark, source_dir, max_files)
-    transformed = transform_stream(stream, cfg)
-    q = (
-        transformed.writeStream.foreachBatch(target.merge_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = _start_changefeed(spark, source_dir, cfg, work_dir, target, max_files)
     q.awaitTermination()
     return q, target
 
@@ -502,6 +505,8 @@ class OptimisticShardTarget(StreamingTarget):
         spark = batch.sparkSession
         hwm = batch.agg(F.max("commit_ts")).collect()[0][0]
         if hwm is None:
+            # an empty batch still gets its (None, 0) progress record
+            super().merge_batch(batch, batch_id)
             return
         paused = conflicted_tables_asof(self.shard_ddl, hwm)
         gate = F.col(self.gate_col)
@@ -520,7 +525,7 @@ class OptimisticShardTarget(StreamingTarget):
                 if paused
                 else pend
             )
-            if resumed.limit(1).count() > 0:
+            if not resumed.isEmpty():
                 live = live.unionByName(resumed)
                 still = (
                     pend.filter(F.col(self.gate_col).isin(*paused))
@@ -535,7 +540,7 @@ class OptimisticShardTarget(StreamingTarget):
             import shutil
 
             tmp = f"{self.pending_path}.tmp"
-            if still.limit(1).count() > 0:
+            if not still.isEmpty():
                 still.write.mode("overwrite").parquet(tmp)
                 shutil.rmtree(self.pending_path)
                 os.rename(tmp, self.pending_path)
