@@ -194,9 +194,9 @@ def test_summary_report_counter_semantics(spark, sf_dir):
 
 
 def test_summary_report_leaves_no_cache_entry(spark, sf_dir):
-    """summary_report collects its checksum pass instead of persisting
-    it: Spark's cache manager holds no entry afterwards, and collecting
-    the returned frame launches no job."""
+    """summary_report collects its one aggregate instead of persisting
+    anything: Spark's cache manager holds no entry afterwards, and
+    collecting the returned frame launches no job."""
     from conftest import count_jobs
 
     from tiflow_spark.plans.parity import CUSTOMER_COLS, _corrupt_customer
@@ -217,24 +217,70 @@ def test_summary_report_leaves_no_cache_entry(spark, sf_dir):
     assert row["chunk_failed"] > 0
 
 
-def test_summary_report_on_equal_tables_runs_no_row_diff(spark, sf_dir):
-    """When every chunk checksum matches, the report runs the checksum
-    pass and nothing else."""
-    from conftest import count_jobs
+def test_summary_report_runs_one_action(spark, sf_dir):
+    """The report is one SQL execution whether or not a chunk fails: no
+    checksum pre-pass, no second row-diff pass."""
+    from conftest import executed_plans
 
-    from tiflow_spark.plans.parity import CUSTOMER_COLS
-    from tiflow_spark.validation.syncdiff import (
-        compare_checksums,
-        summary_report,
-    )
+    from tiflow_spark.plans.parity import CUSTOMER_COLS, _corrupt_customer
+    from tiflow_spark.validation.syncdiff import summary_report
 
     cust = load_table(spark, sf_dir, "customer")
-    args = ("c_custkey", CUSTOMER_COLS, 64)
-    with count_jobs(spark) as checksum_jobs:
-        compare_checksums(cust, cust, *args).collect()
-    with count_jobs(spark) as report_jobs:
-        summary_report(cust, cust, *args, "test", "customer")
-    assert report_jobs.n == checksum_jobs.n
+    for dst in (cust, _corrupt_customer(spark, sf_dir)):
+        with executed_plans(spark) as plans:
+            summary_report(cust, dst, "c_custkey", CUSTOMER_COLS, 64)
+        assert len(plans) == 1, plans
+
+
+_EDGE_ROWS = {
+    "both_empty": ("test", "t", True, None, None, None, 0, None, 0, 0, 0, 0, 0),
+    "dst_empty": ("test", "t", True, False, 1000, 0, 100, 100, 1000, 0, 0, 1000, 0),
+    "src_empty": ("test", "t", True, False, 0, 1000, 100, 100, 0, 1000, 0, 0, 1000),
+    "equal": ("test", "t", True, True, 1000, 1000, 100, 0, 0, 0, 0, 0, 0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_ROWS))
+@pytest.mark.parametrize("from_checkpoint", [False, True])
+def test_summary_report_edge_rows(spark, tmp_path, case, from_checkpoint):
+    """Empty sides and equal tables give the same exact row, NULLs over
+    zero chunks included, from both report functions."""
+    from tiflow_spark.validation import syncdiff
+
+    full = spark.range(1000).select("id", (F.col("id") * 3).alias("v"))
+    empty = full.limit(0)
+    src, dst = {
+        "both_empty": (empty, empty),
+        "dst_empty": (full, empty),
+        "src_empty": (empty, full),
+        "equal": (full, full),
+    }[case]
+    args = (src, dst, "id", ["id", "v"], 10)
+    if from_checkpoint:
+        report = syncdiff.summary_report_from_checkpoint(
+            spark, *args, str(tmp_path / "ck")
+        )
+    else:
+        report = syncdiff.summary_report(*args)
+    assert tuple(report.collect()[0]) == _EDGE_ROWS[case]
+
+
+def test_summary_report_struct_equal_ignores_nullability(spark, tmp_path):
+    """A table checked against its own parquet copy is structurally equal,
+    although the parquet read marks every column nullable; a column of
+    another type is not."""
+    from tiflow_spark.validation.syncdiff import summary_report
+
+    src = spark.range(100).select(
+        "id", F.when(F.col("id") > 0, F.col("id") * 2).otherwise(0).alias("v")
+    )
+    src.write.parquet(str(tmp_path / "t"))
+    copy = spark.read.parquet(str(tmp_path / "t"))
+    args = ("id", ["id", "v"], 10)
+    row = summary_report(src, copy, *args).collect()[0]
+    assert row["struct_equal"] and row["data_equal"]
+    cast = copy.withColumn("v", F.col("v").cast("int"))
+    assert not summary_report(src, cast, *args).collect()[0]["struct_equal"]
 
 
 def test_summary_report_with_many_failed_chunks(spark):

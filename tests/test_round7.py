@@ -76,6 +76,36 @@ def test_resume_skips_completed_batches(spark, sf_dir, ckpt_dir):
     assert {tuple(r) for r in again.collect()} == want
 
 
+def test_resume_with_other_geometry_raises(spark, ckpt_dir):
+    """A chunk checkpoint is pinned to its pk, cols and width: resuming a
+    width-10 run at width 100 (or from a checkpoint that never recorded
+    its geometry) raises instead of returning a partial compare."""
+    import json
+    import os
+
+    from tiflow_spark.validation.syncdiff import resumable_chunk_compare
+
+    src = spark.range(1000).select("id", (F.col("id") * 3).alias("v"))
+    dst = src.filter(F.col("id") != 500)
+    args = (spark, src, dst, "id", ["id", "v"])
+    with pytest.raises(RuntimeError, match="injected crash"):
+        resumable_chunk_compare(*args, 10, ckpt_dir, fail_after_batches=1)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        resumable_chunk_compare(*args, 100, ckpt_dir)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        resumable_chunk_compare(
+            spark, src, dst, "id", ["id"], 10, ckpt_dir
+        )
+    meta_path = os.path.join(ckpt_dir, "_chunks.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["pk"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        resumable_chunk_compare(*args, 10, ckpt_dir)
+
+
 def test_resume_row_diff_reads_checkpoint_only(spark, sf_dir, ckpt_dir):
     """The row-diff phase resumes FROM the chunk checkpoint (no
     re-checksum pass) and equals the direct targeted diff."""

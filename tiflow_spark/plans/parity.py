@@ -7098,8 +7098,8 @@ _install_clustering_sql()
 def q_validate_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sync_diff final per-table report (report/report.go:58-76
     TableResult + ChunkResult; rows-add/rows-delete semantics from
-    diff.go:740-768) — the §3.3 lifecycle composed end-to-end: chunk
-    checksums → row-diff over mismatched chunks only → one summary row
+    diff.go:740-768) — the §3.3 lifecycle composed end-to-end: one full
+    outer join on the pk, aggregated into one summary row
     (validation/syncdiff.summary_report)."""
     from tiflow_spark.validation.syncdiff import summary_report
 

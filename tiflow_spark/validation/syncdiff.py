@@ -5,18 +5,18 @@ Reference: sync_diff_inspector/
     bucket.go (stats buckets) → here: approxQuantile on the PK
   - per-chunk checksum compare ....... diff/diff.go:618-651 + utils/utils.go:860-918
   - mismatch → row-level compare ..... diff/diff.go:652-791 (merge iteration)
-    → here: full outer join on PK within mismatched chunks only
+    → here: full outer join on PK
   - repair SQL generation ............ diff/diff.go:793 (writeSQLs)
 
-Scale shape: checksums aggregate map-side (one row per chunk crosses the
-shuffle); the row-level join runs ONLY over mismatched chunks — at 100 TB the
-expensive join touches a tiny fraction of the data, mirroring the reference's
-binary-search narrowing. The row diff's scan still reads every row: the
-mismatched chunks are picked after it, by a join against a broadcast of
-their ids (:func:`targeted_row_diff`, which :func:`summary_report` and
-:func:`resume_row_diff` call). Only
-:func:`resumable_chunk_compare` and :func:`bin_search_diff` put pk RANGE
-predicates on the scan, which parquet can push down.
+Scale shape: :func:`summary_report` is ONE full outer join on the pk,
+aggregated in the same job: it shuffles O(rows) of (pk, payload). The
+two-phase path — :func:`compare_checksums`, then :func:`targeted_row_diff`
+over the mismatched chunks, as the reference runs against remote databases
+— shuffles O(chunks) plus the failed chunks' rows but scans both sides
+twice. For tables too large for one shuffle, the checkpointed
+:func:`resumable_chunk_compare` / :func:`summary_report_from_checkpoint`
+path (pk-range batch jobs) and :func:`bin_search_diff` are the tools; only
+they put pk RANGE predicates on the scan, which parquet pushes down.
 """
 
 from __future__ import annotations
@@ -61,31 +61,49 @@ def compare_checksums(
     )
 
 
-def row_diff(
+def _row_compare(
     src: DataFrame, dst: DataFrame, pk: str, cols: list[str]
 ) -> DataFrame:
-    """Row-level diff on PK: classify missing (in src only) / extra (in dst
-    only) / different (both, payload differs). compareRows (diff.go:652)
-    as one full outer join."""
+    """compareRows (diff.go:652) as one full outer join on PK: every
+    joined row with its ``kind`` — missing (in src only) / extra (in dst
+    only) / different (both, payload differs) / NULL (equal) — and the
+    markers ``_src`` / ``_dst``, non-null on the side(s) holding the row."""
     payload = [c for c in cols if c != pk]
-    s = src.select(*cols).alias("s")
-    d = dst.select(*cols).alias("d")
+    s = src.select(*cols, F.lit(True).alias("_src")).alias("s")
+    d = dst.select(*cols, F.lit(True).alias("_dst")).alias("d")
     j = s.join(d, on=F.col(f"s.{pk}") == F.col(f"d.{pk}"), how="full_outer")
     differs = F.lit(False)
     for c in payload:
         differs = differs | ~F.col(f"s.{c}").eqNullSafe(F.col(f"d.{c}"))
     kind = (
-        F.when(F.col(f"d.{pk}").isNull(), "missing")
-        .when(F.col(f"s.{pk}").isNull(), "extra")
+        F.when(F.col("_dst").isNull(), "missing")
+        .when(F.col("_src").isNull(), "extra")
         .when(differs, "different")
     )
-    out = j.select(
+    return j.select(
         F.coalesce(F.col(f"s.{pk}"), F.col(f"d.{pk}")).alias(pk),
         kind.alias("kind"),
+        "_src", "_dst",
         *[F.col(f"s.{c}").alias(f"src_{c}") for c in payload],
         *[F.col(f"d.{c}").alias(f"dst_{c}") for c in payload],
     )
-    return out.filter(F.col("kind").isNotNull())
+
+
+def _kind_counts() -> list[Column]:
+    """One count per row-diff kind, over a frame with a ``kind`` column."""
+    return [
+        F.count(F.when(F.col("kind") == k, 1)).alias(f"n_{k}")
+        for k in ("missing", "extra", "different")
+    ]
+
+
+def row_diff(
+    src: DataFrame, dst: DataFrame, pk: str, cols: list[str]
+) -> DataFrame:
+    """Row-level diff on PK: the rows of :func:`_row_compare` that differ,
+    as (pk, kind, src_<payload>..., dst_<payload>...)."""
+    diff = _row_compare(src, dst, pk, cols).filter(F.col("kind").isNotNull())
+    return diff.drop("_src", "_dst")
 
 
 def targeted_row_diff(
@@ -169,6 +187,42 @@ def repair_sql(
     return diff.select(F.col(pk), F.col("kind"), stmt.alias("sql"))
 
 
+def _report_frame(
+    src: DataFrame, dst: DataFrame, cols: list[str],
+    schema: str, table: str, counts: dict,
+) -> DataFrame:
+    """The report row (report/report.go:58-76 TableResult) from ``counts``
+    (up_count, down_count, chunk_total, chunk_failed, n_<kind>).
+    ``struct_equal`` compares column names and types in order, not Spark's
+    plan-derived nullability (a parquet read is always nullable). Literals
+    over VALUES fold into a LocalTableScan: collecting the row runs no job."""
+    src_shape, dst_shape = (
+        [(f.name, f.dataType.simpleString()) for f in df.select(*cols).schema]
+        for df in (src, dst)
+    )
+    n = dict(counts)
+    if not n["chunk_total"]:  # sums over zero chunks stay NULL, as in SQL
+        n.update(up_count=None, down_count=None, chunk_failed=None)
+    values = [
+        ("schema_name", schema, "string"),
+        ("table_name", table, "string"),
+        ("struct_equal", src_shape == dst_shape, "boolean"),
+        ("data_equal", n["chunk_failed"] == 0 if n["chunk_total"] else None, "boolean"),
+        ("up_count", n["up_count"], "bigint"),
+        ("down_count", n["down_count"], "bigint"),
+        ("chunk_total", n["chunk_total"], "bigint"),
+        ("chunk_failed", n["chunk_failed"], "bigint"),
+        ("n_missing", n["n_missing"], "bigint"),
+        ("n_extra", n["n_extra"], "bigint"),
+        ("n_different", n["n_different"], "bigint"),
+        ("rows_add", n["n_missing"] + n["n_different"], "bigint"),
+        ("rows_delete", n["n_extra"] + n["n_different"], "bigint"),
+    ]
+    return src.sparkSession.sql("VALUES (0)").select(
+        *[F.lit(v).cast(t).alias(name) for name, v, t in values]
+    )
+
+
 def summary_report(
     src: DataFrame,
     dst: DataFrame,
@@ -184,55 +238,25 @@ def summary_report(
     report.go:147-152; counter semantics from diff.go:740-768: missing →
     rows-add, extra → rows-delete, different → both).
 
-    One row out. Composition of the full §3.3 lifecycle, run EAGERLY when
-    called — at most two Spark actions:
-
-    1. the chunk checksum compare, collected (bounded: one row per
-       chunk); the chunk and row counts come from it;
-    2. only if some chunk failed: :func:`targeted_row_diff` over the
-       failed chunk ids (:func:`_failed_chunks`), collected as one count
-       per kind.
-
-    The result is a local one-row frame: collecting it runs no job.
+    One row out, run EAGERLY as ONE Spark action: a single aggregate over
+    :func:`_row_compare`'s full outer join counts the rows of each side,
+    the ``width``-wide chunks, the chunks holding a differing row and each
+    kind. This shuffles O(rows) of (pk, payload); checksumming chunks first
+    shuffles O(chunks) plus the failed chunks' rows, but scans both sides
+    twice. For tables too large for one shuffle, use the checkpointed
+    :func:`resumable_chunk_compare` / :func:`summary_report_from_checkpoint`
+    path (pk-range batch jobs) or :func:`bin_search_diff`.
     """
-    struct_equal = src.select(*cols).schema == dst.select(*cols).schema
-    chunks = compare_checksums(src, dst, pk, cols, width).collect()
-    bad = [r.chunk_id for r in chunks if not r.match]
-    kinds: dict = {}
-    if bad:
-        diff = targeted_row_diff(
-            src, dst, pk, cols, width,
-            checksums=_failed_chunks(src.sparkSession, bad),
-        )
-        counts = diff.groupBy("kind").count().collect()
-        kinds = {r["kind"]: r["count"] for r in counts}
-    # sums over zero chunks stay NULL, as SQL's sum() does
-    chunk_failed = len(bad) if chunks else None
-    up_count = sum(r.src_cnt for r in chunks) if chunks else None
-    down_count = sum(r.dst_cnt for r in chunks) if chunks else None
-    n_missing = kinds.get("missing", 0)
-    n_extra = kinds.get("extra", 0)
-    n_different = kinds.get("different", 0)
-    values = [
-        ("schema_name", schema, "string"),
-        ("table_name", table, "string"),
-        ("struct_equal", struct_equal, "boolean"),
-        ("data_equal", chunk_failed == 0 if chunks else None, "boolean"),
-        ("up_count", up_count, "bigint"),
-        ("down_count", down_count, "bigint"),
-        ("chunk_total", len(chunks), "bigint"),
-        ("chunk_failed", chunk_failed, "bigint"),
-        ("n_missing", n_missing, "bigint"),
-        ("n_extra", n_extra, "bigint"),
-        ("n_different", n_different, "bigint"),
-        ("rows_add", n_missing + n_different, "bigint"),
-        ("rows_delete", n_extra + n_different, "bigint"),
-    ]
-    # literals over an inline VALUES row fold into a LocalTableScan;
-    # createDataFrame(list) would plan a job over a parallelized RDD
-    return src.sparkSession.sql("VALUES (0)").select(
-        *[F.lit(v).cast(t).alias(name) for name, v, t in values]
-    )
+    chunk = chunk_id_col(pk, width)
+    failed = F.when(F.col("kind").isNotNull(), chunk)
+    counts = _row_compare(src, dst, pk, cols).agg(
+        F.count("_src").alias("up_count"),
+        F.count("_dst").alias("down_count"),
+        F.count_distinct(chunk).alias("chunk_total"),
+        F.count_distinct(failed).alias("chunk_failed"),
+        *_kind_counts(),
+    ).collect()[0]
+    return _report_frame(src, dst, cols, schema, table, counts.asDict())
 
 
 def resumable_chunk_compare(
@@ -277,9 +301,18 @@ def resumable_chunk_compare(
 
     _os.makedirs(checkpoint_dir, exist_ok=True)
     bounds_path = _os.path.join(checkpoint_dir, "_chunks.json")
+    geometry = {"pk": pk, "cols": list(cols), "width": width}
     if _os.path.exists(bounds_path):
         with open(bounds_path) as f:
             meta = _json.load(f)
+        # batch files hold chunks of the geometry they were computed under;
+        # one lacking it is untrusted too, as in resume_row_diff
+        saved = {k: meta.get(k) for k in geometry}
+        if saved != geometry:
+            raise ValueError(
+                "chunk checkpoint geometry mismatch: "
+                f"saved {saved}, requested {geometry}"
+            )
         # batching geometry is part of the checkpoint: a resumed run must
         # slice the worklist identically or batch files would misalign
         worklist, chunks_per_batch = meta["chunks"], meta["chunks_per_batch"]
@@ -312,7 +345,7 @@ def resumable_chunk_compare(
             _json.dump(
                 {
                     "chunks": worklist,
-                    "width": width,
+                    **geometry,
                     "chunks_per_batch": chunks_per_batch,
                 },
                 f,
@@ -522,46 +555,22 @@ def summary_report_from_checkpoint(
     table scans); the row-diff phase reads its own checkpointed outcomes
     when present (:func:`resume_row_diff`'s rowdiff parquet) — a fully
     checkpointed diff assembles this report touching NO table data at
-    all. Column-identical to :func:`summary_report`."""
+    all. Both aggregates are tiny and collected here; the row is built by
+    :func:`summary_report`'s own builder, so it is column-identical."""
     cc = resumable_chunk_compare(
         spark, src, dst, pk, cols, width, checkpoint_dir
     )
-    struct_equal = src.select(*cols).schema == dst.select(*cols).schema
-    chunk_agg = cc.agg(
+    chunks = cc.agg(
         F.count(F.lit(1)).alias("chunk_total"),
-        F.sum(F.when(~F.col("match"), 1).otherwise(0)).alias("chunk_failed"),
+        F.count(F.when(~F.col("match"), 1)).alias("chunk_failed"),
         F.sum("src_cnt").alias("up_count"),
         F.sum("dst_cnt").alias("down_count"),
-    )
+    ).collect()[0]
     kinds = resume_row_diff(
         spark, src, dst, pk, cols, width, checkpoint_dir
-    ).agg(
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "missing", 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_missing"),
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "extra", 1).otherwise(0)), F.lit(0)
-        ).alias("n_extra"),
-        F.coalesce(
-            F.sum(F.when(F.col("kind") == "different", 1).otherwise(0)),
-            F.lit(0),
-        ).alias("n_different"),
-    )
-    return chunk_agg.crossJoin(F.broadcast(kinds)).select(
-        F.lit(schema).alias("schema_name"),
-        F.lit(table).alias("table_name"),
-        F.lit(struct_equal).alias("struct_equal"),
-        (F.col("chunk_failed") == 0).alias("data_equal"),
-        "up_count",
-        "down_count",
-        "chunk_total",
-        "chunk_failed",
-        "n_missing",
-        "n_extra",
-        "n_different",
-        (F.col("n_missing") + F.col("n_different")).alias("rows_add"),
-        (F.col("n_extra") + F.col("n_different")).alias("rows_delete"),
+    ).agg(*_kind_counts()).collect()[0]
+    return _report_frame(
+        src, dst, cols, schema, table, {**chunks.asDict(), **kinds.asDict()}
     )
 
 
