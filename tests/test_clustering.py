@@ -237,14 +237,16 @@ _EDGE_ROWS = {
     "dst_empty": ("test", "t", True, False, 1000, 0, 100, 100, 1000, 0, 0, 1000, 0),
     "src_empty": ("test", "t", True, False, 0, 1000, 100, 100, 0, 1000, 0, 0, 1000),
     "equal": ("test", "t", True, True, 1000, 1000, 100, 0, 0, 0, 0, 0, 0),
+    "dst_dup_key": ("test", "t", True, False, 1000, 1001, 100, 1, 0, 0, 0, 0, 0),
 }
 
 
 @pytest.mark.parametrize("case", sorted(_EDGE_ROWS))
 @pytest.mark.parametrize("from_checkpoint", [False, True])
 def test_summary_report_edge_rows(spark, tmp_path, case, from_checkpoint):
-    """Empty sides and equal tables give the same exact row, NULLs over
-    zero chunks included, from both report functions."""
+    """Empty sides, equal tables and a key written twice downstream give
+    the same exact row, NULLs over zero chunks included, from both report
+    functions."""
     from tiflow_spark.validation import syncdiff
 
     full = spark.range(1000).select("id", (F.col("id") * 3).alias("v"))
@@ -254,6 +256,7 @@ def test_summary_report_edge_rows(spark, tmp_path, case, from_checkpoint):
         "dst_empty": (full, empty),
         "src_empty": (empty, full),
         "equal": (full, full),
+        "dst_dup_key": (full, full.unionByName(full.filter("id = 5"))),
     }[case]
     args = (src, dst, "id", ["id", "v"], 10)
     if from_checkpoint:

@@ -79,11 +79,15 @@ def test_resume_skips_completed_batches(spark, sf_dir, ckpt_dir):
 def test_resume_with_other_geometry_raises(spark, ckpt_dir):
     """A chunk checkpoint is pinned to its pk, cols and width: resuming a
     width-10 run at width 100 (or from a checkpoint that never recorded
-    its geometry) raises instead of returning a partial compare."""
+    its geometry) raises instead of returning a partial compare, and the
+    row-diff phase will not read its failed chunk ids at another width."""
     import json
     import os
 
-    from tiflow_spark.validation.syncdiff import resumable_chunk_compare
+    from tiflow_spark.validation.syncdiff import (
+        resumable_chunk_compare,
+        resume_row_diff,
+    )
 
     src = spark.range(1000).select("id", (F.col("id") * 3).alias("v"))
     dst = src.filter(F.col("id") != 500)
@@ -92,6 +96,8 @@ def test_resume_with_other_geometry_raises(spark, ckpt_dir):
         resumable_chunk_compare(*args, 10, ckpt_dir, fail_after_batches=1)
     with pytest.raises(ValueError, match="geometry mismatch"):
         resumable_chunk_compare(*args, 100, ckpt_dir)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        resume_row_diff(*args, 100, ckpt_dir)
     with pytest.raises(ValueError, match="geometry mismatch"):
         resumable_chunk_compare(
             spark, src, dst, "id", ["id"], 10, ckpt_dir

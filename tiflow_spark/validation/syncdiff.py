@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -67,10 +67,19 @@ def _row_compare(
     """compareRows (diff.go:652) as one full outer join on PK: every
     joined row with its ``kind`` — missing (in src only) / extra (in dst
     only) / different (both, payload differs) / NULL (equal) — and the
-    markers ``_src`` / ``_dst``, non-null on the side(s) holding the row."""
+    markers ``_src`` / ``_dst``, NULL on a side not holding the key and
+    else (n, i): the key is on ``n`` rows of that side, this is the
+    ``i``-th. A key on m rows upstream and n downstream joins m·n times.
+    The markers' window runs on the join's own exchange and sort."""
     payload = [c for c in cols if c != pk]
-    s = src.select(*cols, F.lit(True).alias("_src")).alias("s")
-    d = dst.select(*cols, F.lit(True).alias("_dst")).alias("d")
+    key = Window.partitionBy(pk).orderBy(pk)
+    whole = key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    marker = F.struct(
+        F.count(F.lit(1)).over(whole).alias("n"),
+        F.row_number().over(key).alias("i"),
+    )
+    s = src.select(*cols, marker.alias("_src")).alias("s")
+    d = dst.select(*cols, marker.alias("_dst")).alias("d")
     j = s.join(d, on=F.col(f"s.{pk}") == F.col(f"d.{pk}"), how="full_outer")
     differs = F.lit(False)
     for c in payload:
@@ -240,23 +249,45 @@ def summary_report(
 
     One row out, run EAGERLY as ONE Spark action: a single aggregate over
     :func:`_row_compare`'s full outer join counts the rows of each side,
-    the ``width``-wide chunks, the chunks holding a differing row and each
-    kind. This shuffles O(rows) of (pk, payload); checksumming chunks first
-    shuffles O(chunks) plus the failed chunks' rows, but scans both sides
-    twice. For tables too large for one shuffle, use the checkpointed
+    the ``width``-wide chunks, the chunks holding a differing row or a key
+    on another number of rows per side (a key written twice downstream)
+    and each kind. This shuffles O(rows) of (pk, payload); checksumming
+    chunks first shuffles O(chunks) plus the failed chunks' rows, but
+    scans both sides twice. For tables too large for one shuffle, use the checkpointed
     :func:`resumable_chunk_compare` / :func:`summary_report_from_checkpoint`
     path (pk-range batch jobs) or :func:`bin_search_diff`.
     """
     chunk = chunk_id_col(pk, width)
-    failed = F.when(F.col("kind").isNotNull(), chunk)
+    # a key on another number of rows on each side fails its chunk too
+    failed = F.when(
+        F.col("kind").isNotNull() | (F.col("_src.n") != F.col("_dst.n")), chunk
+    )
+
+    def rows(side: str, other: str) -> Column:
+        """The side's rows, each counted once among its key's m·n joined
+        rows: where the other side's row is absent or its first."""
+        first = F.coalesce(F.col(f"{other}.i"), F.lit(1)) == 1
+        return F.count(F.when(first, F.col(side)))
+
     counts = _row_compare(src, dst, pk, cols).agg(
-        F.count("_src").alias("up_count"),
-        F.count("_dst").alias("down_count"),
+        rows("_src", "_dst").alias("up_count"),
+        rows("_dst", "_src").alias("down_count"),
         F.count_distinct(chunk).alias("chunk_total"),
         F.count_distinct(failed).alias("chunk_failed"),
         *_kind_counts(),
     ).collect()[0]
     return _report_frame(src, dst, cols, schema, table, counts.asDict())
+
+
+def _check_geometry(what: str, meta: dict, geometry: dict) -> None:
+    """Raise unless checkpoint ``meta`` was written under ``geometry``
+    (pk, cols, width); a checkpoint lacking any of them is untrusted."""
+    saved = {k: meta.get(k) for k in geometry}
+    if saved != geometry:
+        raise ValueError(
+            f"{what} checkpoint geometry mismatch: "
+            f"saved {saved}, requested {geometry}"
+        )
 
 
 def resumable_chunk_compare(
@@ -305,14 +336,8 @@ def resumable_chunk_compare(
     if _os.path.exists(bounds_path):
         with open(bounds_path) as f:
             meta = _json.load(f)
-        # batch files hold chunks of the geometry they were computed under;
-        # one lacking it is untrusted too, as in resume_row_diff
-        saved = {k: meta.get(k) for k in geometry}
-        if saved != geometry:
-            raise ValueError(
-                "chunk checkpoint geometry mismatch: "
-                f"saved {saved}, requested {geometry}"
-            )
+        # batch files hold chunks of the geometry they were computed under
+        _check_geometry("chunk", meta, geometry)
         # batching geometry is part of the checkpoint: a resumed run must
         # slice the worklist identically or batch files would misalign
         worklist, chunks_per_batch = meta["chunks"], meta["chunks_per_batch"]
@@ -484,12 +509,7 @@ def resume_row_diff(
             _shutil.rmtree(rd_dir, ignore_errors=True)
         else:
             with open(rd_meta) as f:
-                saved = _json.load(f)
-            if saved != geometry:
-                raise ValueError(
-                    "rowdiff checkpoint geometry mismatch: "
-                    f"saved {saved}, requested {geometry}"
-                )
+                _check_geometry("rowdiff", _json.load(f), geometry)
             return spark.read.parquet(rd_dir).drop("chunk_id")
 
     bad: list[int] = []
@@ -510,6 +530,8 @@ def resume_row_diff(
     if _os.path.exists(bounds_path):
         with open(bounds_path) as f:
             meta = _json.load(f)
+        # the failed chunk ids are only meaningful at their own width
+        _check_geometry("chunk", meta, geometry)
         cpb = meta["chunks_per_batch"]
         complete = batch_files >= max(
             1, (len(meta["chunks"]) + cpb - 1) // cpb
