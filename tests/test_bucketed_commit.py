@@ -11,6 +11,7 @@ import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from tiflow_spark.sinks.bucketed import (
     _atomic_write_json,
@@ -473,3 +474,74 @@ def test_untracked_meta_is_widened_from_the_files_once(spark, tmp_path):
     with count_jobs(spark) as jobs:
         read_state(spark, target)
     assert jobs.n == 0
+
+
+def _crash_first_meta_write(monkeypatch):
+    """The next write of ``_target_meta.json`` raises, once: a crash at the
+    point where a commit records the target metadata."""
+    from tiflow_spark.sinks import bucketed
+
+    real = bucketed._atomic_write_json
+    fired = []
+
+    def write(path, payload):
+        if path.endswith("_target_meta.json") and not fired:
+            fired.append(path)
+            raise RuntimeError("injected crash: _target_meta.json write")
+        real(path, payload)
+
+    monkeypatch.setattr(bucketed, "_atomic_write_json", write)
+    return fired
+
+
+def test_creation_crash_keeps_truncate_watermark(spark, tmp_path, monkeypatch):
+    """Creating a target is a staged commit: a crash where it records the
+    sizing leaves a watermark recorded before creation in place, and the
+    replayed batch rolls forward to the never-crashed state."""
+    from tiflow_spark.sinks.bucketed import truncate_table
+
+    path = str(tmp_path / "t")
+    truncate_table(path, "a", 50)
+    fired = _crash_first_meta_write(monkeypatch)
+    batch = spark.createDataFrame(
+        [("a", "k0", "I", 40, 5, 5), ("a", "k9", "I", 60, 6, 6)],
+        "target_table string, key string, op string, commit_ts long, "
+        "seq long, v long",
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge_hash_bucketed(batch, path, n_buckets=4, batch_id=0)
+    assert fired
+    merge_hash_bucketed(batch, path, n_buckets=4, batch_id=0)  # the replay
+    assert {r.key for r in read_state(spark, path).collect()} == {"k9"}
+    assert read_target_meta(path)["truncates"]["a"] == 50
+
+
+def test_resize_crash_rolls_forward_to_new_sizing(spark, tmp_path, monkeypatch):
+    """resize_buckets changes the sizing at its commit point: after a crash
+    where the swap records the metadata, recover() ends with the new layout
+    AND the new n_buckets, so a merge at the old count is refused and one
+    at the new count keeps one row per key."""
+    target = str(tmp_path / "t")
+    _seed(spark, target, n=40, n_buckets=4)
+    fired = _crash_first_meta_write(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        resize_buckets(spark, target, 8)
+    assert fired
+    recover(target)
+    assert read_target_meta(target)["n_buckets"] == 8
+    with pytest.raises(ValueError):
+        merge_hash_bucketed(
+            _chg(spark, [("t", "5", "U", 300, 2000, 5, 9.0, "old")]),
+            target, n_buckets=4, batch_id=1,
+        )
+    merge_hash_bucketed(
+        _chg(
+            spark,
+            [("t", str(k), "U", 300, 2000 + k, k, -1.0, "new") for k in range(40)],
+        ),
+        target, n_buckets=8, batch_id=1,
+    )
+    state = read_state(spark, target)
+    assert state.count() == 40
+    assert state.select("key").distinct().count() == 40
+    assert {r.note for r in state.select("note").distinct().collect()} == {"new"}

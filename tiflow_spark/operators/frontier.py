@@ -3,9 +3,10 @@
 The reference tracks per-span resolved timestamps in a skiplist+fib-heap
 frontier (cdc/puller/frontier/frontier.go:31-90) and takes the min as the
 table's resolved-ts; the changefeed checkpoint is the min over tables
-(cdc/owner/changefeed.go:379-536). As a declarative computation this is two
-levels of min-aggregation — partial-aggregated map-side, so the shuffle
-carries one row per table regardless of event volume.
+(cdc/owner/changefeed.go:379-536), which
+``streaming/metrics.changefeed_checkpoint`` computes. Per table this is one
+aggregation, partial-aggregated map-side, so the shuffle carries one row
+per table regardless of event volume.
 """
 
 from __future__ import annotations
@@ -23,10 +24,3 @@ def table_resolved_ts(env: DataFrame, table_col: str = "table") -> DataFrame:
         F.count(F.lit(1)).alias("events"),
     )
 
-
-def checkpoint_ts(env: DataFrame, table_col: str = "table") -> DataFrame:
-    """Changefeed-level checkpoint: min over per-table resolved-ts."""
-    return table_resolved_ts(env, table_col).agg(
-        F.min("resolved_ts").alias("checkpoint_ts"),
-        F.count(F.lit(1)).alias("tables"),
-    )

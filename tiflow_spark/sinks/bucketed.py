@@ -17,9 +17,13 @@ buckets, then an atomic ``_COMMIT`` marker, and only then swaps staged dirs
 into place. A crash BEFORE the marker leaves the target untouched (the
 foreachBatch replay redoes the batch); a crash AFTER the marker is completed
 by :func:`recover` on the next merge/read — so the documented
-replay-idempotent contract holds across every crash window. This is the
-parquet-native miniature of a Delta/Iceberg transaction log, which remains
-the production seam of foreachBatch.
+replay-idempotent contract holds across every crash window. Creation
+and :func:`resize_buckets` are such commits too: the manifest carries the
+sizing (``n_buckets``, ``key_cols``) and schema, which the swap records in
+``_target_meta.json``, keeping its other keys (truncate watermarks). This
+is the parquet-native miniature of a Delta/Iceberg transaction log, which
+remains the production seam of foreachBatch. (The delta append has its
+own stage-and-rename protocol, :func:`_append_delta`.)
 
 ``tests/test_plan_contracts.py`` pins that single exchange.
 """
@@ -75,30 +79,11 @@ def _read_json(path: str) -> dict | None:
 
 
 def read_target_meta(path: str) -> dict | None:
-    """Target sizing metadata written at creation (n_buckets is a TARGET
-    property, not a caller opinion — callers are validated against it)."""
+    """Target metadata: sizing (n_buckets is a TARGET property, not a
+    caller opinion — callers are validated against it), the recorded
+    schema and truncate watermarks. Sizing and schema are written only by
+    a commit's swap (:func:`_apply_commit`)."""
     return _read_json(os.path.join(path, _META))
-
-
-def _write_target_meta(
-    path: str,
-    n_buckets: int,
-    key_cols,
-    base: dict | None = None,
-    schema_json: str | None = None,
-) -> None:
-    """Write sizing metadata, preserving any other keys already present (or
-    passed via ``base`` when the caller captured them before a destructive
-    write) — e.g. truncate watermarks recorded before first data.
-    ``schema_json`` records the creation schema: every read of the bucket
-    data uses it instead of footer inference, and a fully-GC'd (empty)
-    target stays readable. Merges that widen it record the wider schema
-    in their commit manifest (see :func:`_apply_commit`)."""
-    meta = dict(base or read_target_meta(path) or {})
-    meta.update({"n_buckets": n_buckets, "key_cols": list(key_cols)})
-    if schema_json is not None:
-        meta.update(schema=schema_json, schema_tracked=True)
-    _atomic_write_json(os.path.join(path, _META), meta)
 
 
 def _has_bucket_files(path: str) -> bool:
@@ -123,14 +108,13 @@ def _recorded_schema(spark: SparkSession, path: str) -> T.StructType:
     meta = read_target_meta(path) or {}
     sj = meta.get("schema")
     schema = T.StructType.fromJson(json.loads(sj)) if sj else T.StructType()
-    if meta.get("schema_tracked"):
+    if meta.get("schema_tracked") or not _has_bucket_files(path):
         return schema
-    if _has_bucket_files(path):
-        inferred = spark.read.option("mergeSchema", "true").parquet(path).schema
-        known = set(schema.fieldNames())
-        schema = T.StructType(
-            schema.fields + [f for f in inferred.fields if f.name not in known]
-        )
+    inferred = spark.read.option("mergeSchema", "true").parquet(path).schema
+    known = set(schema.fieldNames())
+    schema = T.StructType(
+        schema.fields + [f for f in inferred.fields if f.name not in known]
+    )
     meta.update(schema=schema.json(), schema_tracked=True)
     _atomic_write_json(os.path.join(path, _META), meta)
     return schema
@@ -196,16 +180,21 @@ def _truncated_predicate(meta: dict | None, table_col: str = "target_table"):
     return cond
 
 
+# target metadata a commit manifest may carry; the swap records it
+_RECORDED = ("schema", "n_buckets", "key_cols")
+
+
 def _apply_commit(path: str, stage: str, manifest: dict) -> None:
-    """Swap staged bucket dirs into the target and record the committed
-    schema in the target metadata. Idempotent: safe to re-run from any
-    crash point after the _COMMIT marker exists."""
-    if "schema" in manifest:
-        meta = read_target_meta(path) or {}
-        recorded = {"schema": manifest["schema"], "schema_tracked": True}
-        if any(meta.get(k) != v for k, v in recorded.items()):
-            meta.update(recorded)
-            _atomic_write_json(os.path.join(path, _META), meta)
+    """Record the commit's schema and sizing in the target metadata, then
+    swap staged bucket dirs into the target. Idempotent: safe to re-run
+    from any crash point after the _COMMIT marker exists."""
+    recorded = {k: manifest[k] for k in _RECORDED if k in manifest}
+    if "schema" in recorded:
+        recorded["schema_tracked"] = True
+    meta = read_target_meta(path) or {}
+    if any(meta.get(k) != v for k, v in recorded.items()):
+        meta.update(recorded)
+        _atomic_write_json(os.path.join(path, _META), meta)
     staged = set(manifest["staged"])
     for b in manifest["affected"]:
         name = f"bucket={b}"
@@ -249,17 +238,18 @@ def _commit_staged(
     stage: str,
     affected: list[int],
     deltas: list[str] = (),
-    schema_json: str | None = None,
+    recorded: dict | None = None,
 ) -> None:
     """manifest → fsynced _COMMIT marker → swap. The marker is the commit
-    point; everything after it is re-runnable. ``schema_json`` is the
-    staged data's schema, recorded in the target metadata at swap time."""
+    point; everything after it is re-runnable. ``recorded`` holds the
+    target metadata this commit sets (keys of ``_RECORDED``: the staged
+    data's schema, the target's sizing), written at swap time."""
     staged = sorted(
         d for d in os.listdir(stage) if d.startswith("bucket=")
     )
-    manifest = {"affected": affected, "staged": staged, "deltas": list(deltas)}
-    if schema_json is not None:
-        manifest["schema"] = schema_json
+    manifest = dict(
+        recorded or {}, affected=affected, staged=staged, deltas=list(deltas)
+    )
     _atomic_write_json(os.path.join(stage, "manifest.json"), manifest)
     _atomic_write_json(os.path.join(stage, "_COMMIT"), {"ok": True})
     _apply_commit(path, stage, manifest)
@@ -278,12 +268,15 @@ def merge_hash_bucketed(
     O(target): the target is a parquet directory hash-partitioned on
     ``bucket = pmod(xxhash64(key), n_buckets)``. Each batch
 
-    1. completes/rolls back any interrupted prior commit (recover),
-    2. computes the buckets its keys touch (a tiny distinct on the batch),
-    3. reads ONLY those partitions (partition-pruned, under the recorded
-       target schema),
-    4. resolves max-(commit_ts, seq, op)-wins per key, and
-    5. stages + atomically commits only the touched buckets.
+    1. creates the dir and completes/rolls back any interrupted prior
+       commit (recover), then checks ``n_buckets`` against the recorded
+       sizing, if any, and stamps each change with its bucket;
+    2. on a target with a bucket layout, ``mode="delta"`` appends a delta;
+    3. otherwise computes the buckets its keys touch (a tiny distinct on
+       the batch), reads ONLY those partitions (under the recorded target
+       schema), resolves max-(commit_ts, seq, op)-wins per key, and stages
+       + atomically commits only the touched buckets. Creation is this
+       step's first commit; its manifest records the sizing.
 
     Untouched buckets are never read or written — the property that makes a
     standing changefeed viable when the target is 1000x the batch. The
@@ -302,72 +295,41 @@ def merge_hash_bucketed(
     cheapest reads; delta mode makes a high-frequency changefeed's steady
     state O(batch) on BOTH sides of the write-amplification trade.
 
-    Sizing: n_buckets is fixed at target creation (persisted in
+    Sizing: n_buckets is fixed by the target's first commit (recorded in
     _target_meta.json; callers are validated against it) and should scale
     with target size so one bucket ~ a few hundred MB (100 TB target /
     256 MB ≈ 400k buckets). Use :func:`resize_buckets` to re-home a target
     that outgrew its layout. Replaying a batch re-merges the same winners —
     idempotent, same contract as the reference's safe-mode REPLACE.
     """
-    from tiflow_spark.operators.compactor import last_state_per_key
-
-    spark = changes.sparkSession
-    meta0 = read_target_meta(path) if os.path.isdir(path) else None
-    # a dir holding only metadata (e.g. a truncate watermark recorded before
-    # first data) is still "uncreated" — no bucket layout exists yet
-    exists = os.path.isdir(path) and bool((meta0 or {}).get("n_buckets"))
-    if exists:
-        recover(path)
-        meta = read_target_meta(path)
-        if meta and meta["n_buckets"] != n_buckets:
-            raise ValueError(
-                f"target {path} was created with n_buckets="
-                f"{meta['n_buckets']}, merge called with {n_buckets}; "
-                "use resize_buckets() to change the layout"
-            )
+    os.makedirs(path, exist_ok=True)
+    recover(path)
+    recorded = (read_target_meta(path) or {}).get("n_buckets")
+    if recorded is not None and recorded != n_buckets:
+        raise ValueError(
+            f"target {path} was created with n_buckets={recorded}, "
+            f"merge called with {n_buckets}; "
+            "use resize_buckets() to change the layout"
+        )
     chg = changes.withColumn(
         "bucket",
         F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast(
             "int"
         ),
-    ).persist()
+    )
+    if recorded is not None and mode == "delta":
+        _append_delta(chg, path, table_col, batch_id)
+        return
+    chg = chg.persist()
     try:
-        if not exists:
-            # D winners are RETAINED as tombstones: without them, a
-            # late-arriving event OLDER than an applied delete would
-            # resurrect the row (the reference never sees this — its sorter
-            # + resolved-ts contract delivers per-key in order; a file
-            # source across restarts does not). read_state() filters them;
-            # purge_tombstones() reclaims them below the GC safepoint.
-            # one exchange, hashpartitioning(bucket), serves the winner
-            # window and the writer: one file per bucket dir. Explicit
-            # partition count — see _bucket_write_partitions.
-            result = last_state_per_key(
-                chg.repartition(
-                    _bucket_write_partitions(spark, n_buckets), F.col("bucket")
-                ),
-                table_col,
-                partition_cols=("bucket",),
-            )
-            result.write.mode("overwrite").partitionBy("bucket").parquet(path)
-            # base=meta0: Spark's overwrite wiped the dir — restore any
-            # pre-creation metadata (truncate watermarks) alongside sizing;
-            # record the creation schema for the empty-target read fallback
-            _write_target_meta(
-                path,
-                n_buckets,
-                key_cols,
-                base=meta0,
-                schema_json=result.schema.json(),
-            )
-            return
-        if mode == "delta":
-            _append_delta(chg, path, table_col, batch_id)
-            return
         affected = sorted(
             r.bucket for r in chg.select("bucket").distinct().collect()
         )
-        _merge_rewrite(spark, chg, path, affected, table_col, f"batch-{batch_id}")
+        sizing = {"n_buckets": n_buckets, "key_cols": list(key_cols)}
+        _merge_rewrite(
+            changes.sparkSession, chg, path, affected, table_col,
+            f"batch-{batch_id}", sizing=sizing,
+        )
     finally:
         chg.unpersist()
 
@@ -423,11 +385,13 @@ def _merge_rewrite(
     table_col: str,
     commit_name: str,
     consume_deltas: list[str] = (),
+    sizing: dict | None = None,
 ) -> None:
     """Copy-on-write merge body: fold ``chg`` (already bucket-stamped) into
     its touched buckets through the staged-manifest commit. ``consume_deltas``
     lists delta dirs whose rows are included in ``chg`` — the commit removes
-    them atomically with the bucket swap.
+    them atomically with the bucket swap. ``sizing`` (``n_buckets``,
+    ``key_cols``) rides in the manifest (a target's first commit).
 
     stored ∪ batch crosses ONE exchange, ``hashpartitioning(bucket)``: the
     winner window is keyed on ``(bucket, table, key)``, which that
@@ -462,6 +426,12 @@ def _merge_rewrite(
         .withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1)))
         .withColumn("commit_ts", F.coalesce(F.col("commit_ts"), F.lit(-1)))
     )
+    # D winners are RETAINED as tombstones: without them, a late-arriving
+    # event OLDER than an applied delete would resurrect the row (the
+    # reference never sees this — its sorter + resolved-ts contract
+    # delivers per-key in order; a file source across restarts does not).
+    # read_state() filters them; purge_tombstones() reclaims them below
+    # the GC safepoint. Partition count: see _bucket_write_partitions.
     winner = last_state_per_key(
         src.repartition(
             _bucket_write_partitions(spark, len(affected)), F.col("bucket")
@@ -481,7 +451,7 @@ def _merge_rewrite(
         stage,
         affected,
         deltas=consume_deltas,
-        schema_json=winner.schema.json(),
+        recorded={"schema": winner.schema.json(), **(sizing or {})},
     )
 
 
@@ -577,7 +547,7 @@ def resize_buckets(
     target that outgrew its layout (the 100 TB sizing math above). One full
     read + one full write, committed atomically through the same staged
     manifest; steady-state merges are untouched. key_cols defaults to the
-    creation-time metadata."""
+    recorded metadata; the new sizing is recorded by the same commit."""
     compact_deltas(spark, path)  # deltas must fold before a full rewrite
     recover(path)
     meta = read_target_meta(path)
@@ -594,14 +564,17 @@ def resize_buckets(
             ).cast("int"),
         )
     )
-    _rewrite_all(path, df, stage_name="resize")
-    _write_target_meta(path, n_buckets_new, cols)
+    sizing = {"n_buckets": n_buckets_new, "key_cols": list(cols)}
+    _rewrite_all(path, df, stage_name="resize", sizing=sizing)
 
 
-def _rewrite_all(path: str, df: DataFrame, stage_name: str) -> None:
+def _rewrite_all(
+    path: str, df: DataFrame, stage_name: str, sizing: dict | None = None
+) -> None:
     """Full-target rewrite through the staged-manifest commit: affected =
     every current bucket ∪ every staged bucket, so stale dirs vanish and the
-    swap is crash-recoverable like any batch commit."""
+    swap is crash-recoverable like any batch commit. A resize's new
+    ``sizing`` rides in the manifest: layout and metadata change together."""
     stage = os.path.join(path, _STAGING, stage_name)
     shutil.rmtree(stage, ignore_errors=True)
     n_buckets = (read_target_meta(path) or {}).get("n_buckets") or 1_000_000
@@ -618,7 +591,7 @@ def _rewrite_all(path: str, df: DataFrame, stage_name: str) -> None:
         for d in os.listdir(stage)
         if d.startswith("bucket=")
     }
-    _commit_staged(path, stage, sorted(old | new))
+    _commit_staged(path, stage, sorted(old | new), recorded=sizing)
 
 
 def snapshot_target(path: str, snap_path: str, info: dict | None = None) -> dict:

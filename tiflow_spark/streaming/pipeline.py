@@ -161,9 +161,8 @@ class StreamingTarget:
     compact_every: int = 8
     # every N batches, hardlink-snapshot the target at the batch's
     # resolved_ts (syncpointstore consistent reads; 0 = off). Snapshots
-    # land under ``syncpoints_root`` (defaults to <target>/../syncpoints).
+    # land under <target>/../syncpoints.
     syncpoint_every: int = 0
-    syncpoints_root: str | None = None
 
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         """Idempotent MERGE of one micro-batch (runs on the driver inside
@@ -245,13 +244,12 @@ class StreamingTarget:
             if frontier is not None:
                 from tiflow_spark.sinks.bucketed import syncpoint_snapshot
 
-                root = self.syncpoints_root or os.path.join(
-                    os.path.dirname(self.target_path.rstrip("/")),
-                    "syncpoints",
-                )
                 syncpoint_snapshot(
                     self.target_path,
-                    root,
+                    os.path.join(
+                        os.path.dirname(self.target_path.rstrip("/")),
+                        "syncpoints",
+                    ),
                     int(frontier),
                     info={"batch_id": batch_id},
                     key=f"b{batch_id}",
@@ -285,15 +283,14 @@ def run_changefeed(
     source_dir: str,
     cfg: TaskConfig,
     work_dir: str,
-    await_termination: bool = True,
     merge_mode: str = "rewrite",
     syncpoint_every: int = 0,
     processing_time: str | None = None,
 ):
     """End-to-end streaming changefeed.
 
-    Default trigger is availableNow (drain the source then stop — the
-    batch-boundary semantics most integration tests use). Pass
+    Default trigger is availableNow: the call returns once the source is
+    drained (the batch-boundary semantics most integration tests use). Pass
     ``processing_time`` (e.g. ``"500 milliseconds"``) for a STANDING
     changefeed that tails the source live — the reference's normal
     changefeed lifecycle; stop it with ``q.stop()`` (graceful: the
@@ -310,7 +307,7 @@ def run_changefeed(
         spark, source_dir, cfg, work_dir, target,
         processing_time=processing_time,
     )
-    if await_termination and processing_time is None:
+    if processing_time is None:
         q.awaitTermination()
     return q, target
 

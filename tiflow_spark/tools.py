@@ -145,10 +145,12 @@ def create_changefeed(
     import os
 
     from tiflow_spark.config import parse_sink_uri
-    from tiflow_spark.operators import filters as flt
-    from tiflow_spark.operators import transforms as tfm
     from tiflow_spark.operators.dispatchers import dispatch
-    from tiflow_spark.streaming.pipeline import ENVELOPE_SCHEMA, run_changefeed
+    from tiflow_spark.streaming.pipeline import (
+        ENVELOPE_SCHEMA,
+        run_changefeed,
+        transform_stream,
+    )
 
     spec = parse_sink_uri(sink_uri)
     params = dict(spec.params)
@@ -171,7 +173,7 @@ def create_changefeed(
         return spec, result
 
     env = spark.read.schema(ENVELOPE_SCHEMA).parquet(source_dir)
-    env = tfm.split_updates(tfm.route(flt.apply_filters(env, cfg), cfg))
+    env = transform_stream(env, cfg)
     if spec.kind == "mq":
         from tiflow_spark.sinks.mq import MESSAGE_COLS, produce_file_broker
 
