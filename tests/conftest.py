@@ -44,6 +44,24 @@ def count_jobs(spark: SparkSession):
         out.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def crash_once(monkeypatch, obj, attr: str, when):
+    """Patch ``obj.<attr>`` so that the first call whose arguments satisfy
+    ``when(*args, **kwargs)`` raises ``RuntimeError`` (an injected crash)
+    and every other call delegates to the original. Returns a list that
+    holds the crashed call's arguments once it has fired."""
+    real = getattr(obj, attr)
+    fired = []
+
+    def call(*args, **kwargs):
+        if not fired and when(*args, **kwargs):
+            fired.append(args)
+            raise RuntimeError(f"injected crash: {attr}{args}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(obj, attr, call)
+    return fired
+
+
 def _final_plan(description: str) -> str:
     """The final plan of an adaptive plan description. It lists its tree
     twice, the final plan first, then the initial plan, and the node

@@ -479,19 +479,14 @@ def test_untracked_meta_is_widened_from_the_files_once(spark, tmp_path):
 def _crash_first_meta_write(monkeypatch):
     """The next write of ``_target_meta.json`` raises, once: a crash at the
     point where a commit records the target metadata."""
+    from conftest import crash_once
+
     from tiflow_spark.sinks import bucketed
 
-    real = bucketed._atomic_write_json
-    fired = []
-
-    def write(path, payload):
-        if path.endswith("_target_meta.json") and not fired:
-            fired.append(path)
-            raise RuntimeError("injected crash: _target_meta.json write")
-        real(path, payload)
-
-    monkeypatch.setattr(bucketed, "_atomic_write_json", write)
-    return fired
+    return crash_once(
+        monkeypatch, bucketed, "_atomic_write_json",
+        lambda path, payload: path.endswith("_target_meta.json"),
+    )
 
 
 def test_creation_crash_keeps_truncate_watermark(spark, tmp_path, monkeypatch):

@@ -12,6 +12,7 @@ the reference's pebble db-sorter (docs/design/2022-03-16-ticdc-db-sorter.md).
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from tiflow_spark.sinks.bucketed import (
     _atomic_write_json,
@@ -270,3 +271,72 @@ def test_streaming_target_delta_mode(spark, tmp_path):
         results[mode] = _state(spark, tgt.target_path)
     assert results["delta"] == results["rewrite"]
     assert len(results["delta"]) == 1  # key 1 updated, key 2 deleted
+
+
+def test_delta_commit_rolls_forward_after_its_marker(spark, tmp_path, monkeypatch):
+    """A delta append is a staged commit: a crash after its _COMMIT marker
+    and before the delta is moved into place is completed by recover(), so
+    a plain read shows the batch with no replay."""
+    from conftest import crash_once
+
+    target = str(tmp_path / "t")
+    merge_hash_bucketed(_chg(spark, SEED), target, n_buckets=4, batch_id=0)
+    published = os.path.join("_delta", "batch-1")
+    fired = crash_once(
+        monkeypatch, os, "rename", lambda src, dst: dst.endswith(published)
+    )
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge_hash_bucketed(
+            _chg(spark, B1), target, n_buckets=4, batch_id=1, mode="delta"
+        )
+    assert fired
+    got = {r.key: r.balance for r in read_state(spark, target).collect()}
+    assert got["3"] == 33.0 and got["99"] == 9.9 and "7" not in got
+    assert list_deltas(target) == ["batch-1"]
+
+
+def test_read_state_over_a_delta_runs_no_job(spark, tmp_path):
+    """Deltas are read under the recorded schema, which every delta commit
+    widens: building the merge-on-read frame infers no schema."""
+    from conftest import count_jobs
+
+    target = str(tmp_path / "t")
+    _build(spark, target, "delta", batches=(B1,))
+    with count_jobs(spark) as jobs:
+        read_state(spark, target)
+    assert jobs.n == 0
+
+
+def test_untracked_delta_columns_are_widened_once(spark, tmp_path):
+    """Metadata written before delta appends recorded their schema may miss
+    a column that only a delta holds. The first read widens the recorded
+    schema from the delta footers once; later reads run no job."""
+    import json
+
+    from conftest import count_jobs
+
+    from tiflow_spark.sinks.bucketed import read_target_meta
+
+    target = str(tmp_path / "t")
+    merge_hash_bucketed(_chg(spark, SEED), target, n_buckets=4, batch_id=0)
+    creation = read_target_meta(target)["schema"]
+    merge_hash_bucketed(
+        spark.createDataFrame(
+            [("t", "3", "U", 200, 100, 3, 33.0, "y", "gold")],
+            CHG_SCHEMA + ", tier string",
+        ),
+        target, n_buckets=4, batch_id=1, mode="delta",
+    )
+    meta = read_target_meta(target)
+    meta["schema"] = creation
+    meta.pop("deltas_tracked")
+    _atomic_write_json(os.path.join(target, "_target_meta.json"), meta)
+
+    got = {r.key: r.tier for r in read_state(spark, target).collect()}
+    assert got["3"] == "gold" and got["5"] is None
+    meta = read_target_meta(target)
+    assert meta["deltas_tracked"]
+    assert "tier" in [f["name"] for f in json.loads(meta["schema"])["fields"]]
+    with count_jobs(spark) as jobs:
+        read_state(spark, target)
+    assert jobs.n == 0

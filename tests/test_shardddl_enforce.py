@@ -9,6 +9,7 @@ import os
 import time
 
 import pyspark.sql.functions as F
+import pytest
 
 from tiflow_spark.config import TaskConfig
 from tiflow_spark.sinks.bucketed import read_state
@@ -130,3 +131,56 @@ def test_empty_batch_writes_progress_record(spark, tmp_path):
         for r in spark.read.parquet(target.progress_path).collect()
     }
     assert rows[1] == (None, 0)
+
+
+def test_pending_shrink_crash_keeps_parked_rows(spark, tmp_path, monkeypatch):
+    """A crash inside the pending-store shrink, after the merge committed,
+    followed by the foreachBatch replay, keeps every row parked for a table
+    that is still paused: the run ends with the never-crashed keys."""
+    from conftest import crash_once
+
+    ddl = _shard_ddl(spark).unionByName(
+        spark.createDataFrame(
+            [
+                ("shard_0", "other", 100, "add column", "g", "varchar"),
+                ("shard_1", "other", 255, "add column", "g", "int"),
+                ("shard_1", "other", 300, "modify column", "g", "varchar"),
+            ],
+            _shard_ddl(spark).schema,
+        )
+    )
+    batches = [
+        # scratch and other paused: 21 and 31 park
+        [("events", 1, 50), ("scratch", 21, 252), ("other", 31, 258)],
+        # other resumes and flushes 31; scratch stays paused: 21, 22 held
+        [("events", 2, 150), ("scratch", 22, 320), ("other", 32, 340)],
+        # scratch resumes: 21 and 22 flush
+        [("events", 3, 460)],
+    ]
+    work = str(tmp_path / "work")
+    target = OptimisticShardTarget(
+        target_path=os.path.join(work, "target"),
+        progress_path=os.path.join(work, "progress"),
+        shard_ddl=ddl,
+        pending_path=os.path.join(work, "pending"),
+        n_buckets=4,
+    )
+    fired = crash_once(
+        monkeypatch, os, "rename", lambda src, dst: src.endswith("pending.tmp")
+    )
+
+    def merge(batch_id):
+        rows = _envelope(spark, batches[batch_id])
+        target.merge_batch(transform_stream(rows, TaskConfig()), batch_id)
+
+    merge(0)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge(1)
+    assert fired
+    merge(1)  # the foreachBatch replay
+    merge(2)
+    keys = {r.key for r in read_state(spark, target.target_path).collect()}
+    assert keys == {"1", "2", "3", "21", "22", "31", "32"}
+    assert not any(
+        os.path.exists(target.pending_path + s) for s in ("", ".tmp", ".old")
+    )

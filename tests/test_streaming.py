@@ -358,17 +358,23 @@ def _run_crashing_changefeed(spark, src, work_dir, crash, merge_mode="rewrite"):
 
 @pytest.mark.parametrize(
     "point,mode",
-    [("pre", "rewrite"), ("staged", "rewrite"), ("pre", "delta")],
+    [("pre", "rewrite"), ("staged", "rewrite"), ("pre", "delta"),
+     ("staged", "delta")],
 )
-def test_crash_resume_reaches_oracle_state(spark, sf_dir, work_dir, point, mode):
+def test_crash_resume_reaches_oracle_state(
+    spark, sf_dir, work_dir, monkeypatch, point, mode
+):
     """THE reference e2e guarantee (135 integration scenarios + redo
     design): kill a RUNNING changefeed mid-batch — either before any
     staging ('pre') or between staged-write and the _COMMIT marker
-    ('staged') — restart from the Structured Streaming checkpoint, and the
+    ('staged': the first commit in rewrite mode, a delta batch's in delta
+    mode) — restart from the Structured Streaming checkpoint, and the
     final target must hash-equal the never-crashed run. recover() rolls
     back the uncommitted staging; checkpoint replay redoes the batch;
     idempotent MERGE makes the redo safe."""
     import os
+
+    from conftest import crash_once
 
     from tiflow_spark.sinks import bucketed
     from tiflow_spark.sinks.bucketed import read_state
@@ -380,30 +386,23 @@ def test_crash_resume_reaches_oracle_state(spark, sf_dir, work_dir, point, mode)
             "append"
         ).parquet(src)
 
-    crash_at = {"armed": True}
+    fired = []
+    if point == "staged":
+        # a one-shot crash between the staged write and _COMMIT; batch 0
+        # creates the target, so batch 1 is the first delta commit
+        marker = "_COMMIT" if mode == "rewrite" else "batch-1/_COMMIT"
+        fired = crash_once(
+            monkeypatch, bucketed, "_atomic_write_json",
+            lambda path, payload: path.endswith(marker),
+        )
 
     def crash(batch_id, where):
-        if point == "pre" and where == "pre" and batch_id == 1 and crash_at["armed"]:
-            crash_at["armed"] = False
+        if point == "pre" and where == "pre" and batch_id == 1 and not fired:
+            fired.append(batch_id)
             raise RuntimeError("injected crash: mid-batch before staging")
 
-    if point == "staged":
-        # arm a one-shot crash between the staged write and _COMMIT
-        real = bucketed._atomic_write_json
-
-        def wedge(path, obj):
-            if path.endswith("_COMMIT") and crash_at["armed"]:
-                crash_at["armed"] = False
-                raise RuntimeError("injected crash: staged, no _COMMIT")
-            real(path, obj)
-
-        bucketed._atomic_write_json = wedge
-    try:
-        target = _run_crashing_changefeed(spark, src, work_dir, crash, mode)
-    finally:
-        if point == "staged":
-            bucketed._atomic_write_json = real
-    assert not crash_at["armed"], "injection never fired"
+    target = _run_crashing_changefeed(spark, src, work_dir, crash, mode)
+    assert fired, "injection never fired"
 
     if point == "staged":
         # the crash left an uncommitted staging dir behind (the exact

@@ -10,20 +10,20 @@ max-(commit_ts, seq, op) winner per key in one window over stored ∪ batch
 and crosses one exchange, ``hashpartitioning(bucket)``, which the window
 and the bucket-partitioned write share (one file per bucket).
 
-Commit protocol (crash-atomic, replay-recoverable): each batch stages its
-rewritten buckets under ``<path>/_staging/batch-<id>/`` (invisible to Spark
-reads — underscore prefix), writes a manifest listing affected + staged
-buckets, then an atomic ``_COMMIT`` marker, and only then swaps staged dirs
-into place. A crash BEFORE the marker leaves the target untouched (the
+Commit protocol (crash-atomic, replay-recoverable): every write stages
+its data under ``<path>/_staging/<commit>/`` (invisible to Spark reads —
+underscore prefix), writes a manifest naming what the commit publishes,
+then an atomic ``_COMMIT`` marker, and only then moves the staged dirs into
+place. A crash BEFORE the marker leaves the target untouched (the
 foreachBatch replay redoes the batch); a crash AFTER the marker is completed
 by :func:`recover` on the next merge/read — so the documented
-replay-idempotent contract holds across every crash window. Creation
-and :func:`resize_buckets` are such commits too: the manifest carries the
+replay-idempotent contract holds across every crash window. A batch commit
+publishes rewritten buckets or, in merge-on-read mode, one delta; creation
+and :func:`resize_buckets` are commits too: the manifest carries the
 sizing (``n_buckets``, ``key_cols``) and schema, which the swap records in
 ``_target_meta.json``, keeping its other keys (truncate watermarks). This
 is the parquet-native miniature of a Delta/Iceberg transaction log, which
-remains the production seam of foreachBatch. (The delta append has its
-own stage-and-rename protocol, :func:`_append_delta`.)
+remains the production seam of foreachBatch.
 
 ``tests/test_plan_contracts.py`` pins that single exchange.
 """
@@ -41,6 +41,8 @@ from pyspark.sql import types as T
 _META = "_target_meta.json"
 _STAGING = "_staging"
 _DELTA = "_delta"
+# the target key: rows are resolved and bucketed on (table, key)
+_KEY = ("target_table", "key")
 
 
 # ------------------------------------------------ atomic-commit machinery
@@ -96,26 +98,37 @@ def _has_bucket_files(path: str) -> bool:
     )
 
 
+def _widened(schema: T.StructType, other: T.StructType) -> T.StructType:
+    """``schema`` with the columns of ``other`` it lacks appended."""
+    known = set(schema.fieldNames())
+    return T.StructType(
+        schema.fields + [f for f in other.fields if f.name not in known]
+    )
+
+
 def _recorded_schema(spark: SparkSession, path: str) -> T.StructType:
     """The target schema recorded in its metadata: the creation schema,
-    widened by every committed merge that added a column.
+    widened by every commit that added a column, delta appends included.
 
-    ``schema_tracked`` marks metadata whose schema merges keep up to date.
-    Metadata without it holds only the creation schema, while a merge may
-    have added columns to the files since; such a target is migrated once:
-    the columns the file footers add (one ``mergeSchema`` inference) are
-    appended to the recorded schema, which is then marked tracked."""
+    ``schema_tracked`` marks metadata whose schema bucket commits keep up
+    to date, ``deltas_tracked`` metadata whose schema delta commits keep up
+    to date. Metadata without them may miss columns that bucket files or
+    deltas added since; such a target is migrated once: the columns the
+    untracked footers add (one ``mergeSchema`` inference) are appended to
+    the recorded schema, which is then marked tracked."""
     meta = read_target_meta(path) or {}
     sj = meta.get("schema")
     schema = T.StructType.fromJson(json.loads(sj)) if sj else T.StructType()
-    if meta.get("schema_tracked") or not _has_bucket_files(path):
+    untracked = [] if meta.get("deltas_tracked") else [
+        os.path.join(path, _DELTA, n) for n in list_deltas(path)
+    ]
+    if not meta.get("schema_tracked") and _has_bucket_files(path):
+        untracked.append(path)
+    if not untracked:
         return schema
-    inferred = spark.read.option("mergeSchema", "true").parquet(path).schema
-    known = set(schema.fieldNames())
-    schema = T.StructType(
-        schema.fields + [f for f in inferred.fields if f.name not in known]
-    )
-    meta.update(schema=schema.json(), schema_tracked=True)
+    inferred = spark.read.option("mergeSchema", "true").parquet(*untracked)
+    schema = _widened(schema, inferred.schema)
+    meta.update(schema=schema.json(), schema_tracked=True, deltas_tracked=True)
     _atomic_write_json(os.path.join(path, _META), meta)
     return schema
 
@@ -170,12 +183,12 @@ def recover_table(path: str, table: str) -> None:
     _atomic_write_json(os.path.join(path, _META), meta)
 
 
-def _truncated_predicate(meta: dict | None, table_col: str = "target_table"):
+def _truncated_predicate(meta: dict | None):
     """Column predicate matching rows erased by a truncate watermark, or
     None when no truncate was ever applied."""
     cond = None
     for t, ts in ((meta or {}).get("truncates") or {}).items():
-        c = (F.col(table_col) == t) & (F.col("commit_ts") < F.lit(ts))
+        c = (F.col(_KEY[0]) == t) & (F.col("commit_ts") < F.lit(ts))
         cond = c if cond is None else (cond | c)
     return cond
 
@@ -184,30 +197,46 @@ def _truncated_predicate(meta: dict | None, table_col: str = "target_table"):
 _RECORDED = ("schema", "n_buckets", "key_cols")
 
 
+def _move(src: str, dest: str) -> None:
+    """Replace ``dest`` by the staged ``src``; a no-op once a previous
+    (crashed) attempt has moved it."""
+    if os.path.isdir(src):
+        shutil.rmtree(dest, ignore_errors=True)
+        os.rename(src, dest)
+
+
 def _apply_commit(path: str, stage: str, manifest: dict) -> None:
     """Record the commit's schema and sizing in the target metadata, then
-    swap staged bucket dirs into the target. Idempotent: safe to re-run
-    from any crash point after the _COMMIT marker exists."""
+    move the staged bucket dirs and delta into the target. Idempotent: safe
+    to re-run from any crash point after the _COMMIT marker exists."""
     recorded = {k: manifest[k] for k in _RECORDED if k in manifest}
-    if "schema" in recorded:
-        recorded["schema_tracked"] = True
     meta = read_target_meta(path) or {}
+    if "schema" in recorded:
+        # a commit's schema covers the deltas if the recorded one did (a
+        # target whose deltas predate delta commits is migrated once)
+        recorded.update(
+            schema_tracked=True,
+            deltas_tracked=bool(meta.get("deltas_tracked"))
+            or not list_deltas(path),
+        )
     if any(meta.get(k) != v for k, v in recorded.items()):
         meta.update(recorded)
         _atomic_write_json(os.path.join(path, _META), meta)
     staged = set(manifest["staged"])
     for b in manifest["affected"]:
         name = f"bucket={b}"
-        dest = os.path.join(path, name)
-        src = os.path.join(stage, name)
         if name in staged:
-            if os.path.isdir(src):
-                shutil.rmtree(dest, ignore_errors=True)
-                os.rename(src, dest)
-            # else: already swapped by a previous (crashed) attempt
+            _move(os.path.join(stage, name), os.path.join(path, name))
         else:
             # every row of this bucket was deleted — bucket dir goes away
-            shutil.rmtree(dest, ignore_errors=True)
+            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+    if "delta" in manifest:
+        # a merge-on-read batch: its delta replaces a replayed batch's
+        os.makedirs(os.path.join(path, _DELTA), exist_ok=True)
+        _move(
+            os.path.join(stage, _DELTA),
+            os.path.join(path, _DELTA, manifest["delta"]),
+        )
     # delta files folded into buckets by this commit are consumed with it
     # (post-marker → re-runnable; a replayed removal is a no-op)
     for name in manifest.get("deltas", []):
@@ -243,13 +272,16 @@ def _commit_staged(
     """manifest → fsynced _COMMIT marker → swap. The marker is the commit
     point; everything after it is re-runnable. ``recorded`` holds the
     target metadata this commit sets (keys of ``_RECORDED``: the staged
-    data's schema, the target's sizing), written at swap time."""
+    data's schema, the target's sizing), written at swap time. A staged
+    ``_delta`` dir is published as the delta named after the commit."""
     staged = sorted(
         d for d in os.listdir(stage) if d.startswith("bucket=")
     )
     manifest = dict(
         recorded or {}, affected=affected, staged=staged, deltas=list(deltas)
     )
+    if os.path.isdir(os.path.join(stage, _DELTA)):
+        manifest["delta"] = os.path.basename(stage)
     _atomic_write_json(os.path.join(stage, "manifest.json"), manifest)
     _atomic_write_json(os.path.join(stage, "_COMMIT"), {"ok": True})
     _apply_commit(path, stage, manifest)
@@ -259,23 +291,19 @@ def merge_hash_bucketed(
     changes: DataFrame,
     path: str,
     n_buckets: int = 32,
-    key_cols: tuple[str, ...] = ("target_table", "key"),
-    table_col: str = "target_table",
     batch_id: int = 0,
     mode: str = "rewrite",
 ) -> None:
     """Streaming MERGE with per-batch cost O(batch + touched buckets), not
     O(target): the target is a parquet directory hash-partitioned on
-    ``bucket = pmod(xxhash64(key), n_buckets)``. Each batch
+    ``bucket = pmod(xxhash64(target_table, key), n_buckets)``. Each batch
 
     1. creates the dir and completes/rolls back any interrupted prior
        commit (recover), then checks ``n_buckets`` against the recorded
        sizing, if any, and stamps each change with its bucket;
-    2. on a target with a bucket layout, ``mode="delta"`` appends a delta;
-    3. otherwise computes the buckets its keys touch (a tiny distinct on
-       the batch), reads ONLY those partitions (under the recorded target
-       schema), resolves max-(commit_ts, seq, op)-wins per key, and stages
-       + atomically commits only the touched buckets. Creation is this
+    2. on a target with a bucket layout, ``mode="delta"`` commits a delta;
+    3. otherwise folds the batch into the buckets its keys touch
+       (:func:`_merge_rewrite`) and commits only those. Creation is this
        step's first commit; its manifest records the sizing.
 
     Untouched buckets are never read or written — the property that makes a
@@ -286,14 +314,15 @@ def merge_hash_bucketed(
     ``mode="delta"`` is the merge-on-read fast path (the LSM shape of the
     reference's pebble db-sorter, docs/design/2022-03-16-ticdc-db-sorter.md):
     instead of rewriting every touched bucket, the batch's per-key winners
-    are appended as ONE delta file under ``_delta/`` — per-batch write cost
-    O(batch) with a single rename, zero bucket reads. Readers resolve
-    winners across base ∪ deltas at scan time (max-order-key-wins is
-    associative, so resolution order is immaterial); :func:`compact_deltas`
-    folds accumulated deltas into the buckets at maintenance cadence,
-    restoring resolve-free reads. Copy-on-write ("rewrite") keeps the
-    cheapest reads; delta mode makes a high-frequency changefeed's steady
-    state O(batch) on BOTH sides of the write-amplification trade.
+    are committed as ONE delta file under ``_delta/`` — per-batch write cost
+    O(batch), zero bucket reads, and the same staged commit as every other
+    write. Readers resolve winners across base ∪ deltas at scan time
+    (max-order-key-wins is associative, so resolution order is immaterial);
+    :func:`compact_deltas` folds accumulated deltas into the buckets at
+    maintenance cadence, restoring resolve-free reads. Copy-on-write
+    ("rewrite") keeps the cheapest reads; delta mode makes a high-frequency
+    changefeed's steady state O(batch) on BOTH sides of the
+    write-amplification trade.
 
     Sizing: n_buckets is fixed by the target's first commit (recorded in
     _target_meta.json; callers are validated against it) and should scale
@@ -311,56 +340,48 @@ def merge_hash_bucketed(
             f"merge called with {n_buckets}; "
             "use resize_buckets() to change the layout"
         )
-    chg = changes.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast(
-            "int"
-        ),
-    )
+    chg = changes.withColumn("bucket", _bucket(n_buckets))
     if recorded is not None and mode == "delta":
-        _append_delta(chg, path, table_col, batch_id)
-        return
-    chg = chg.persist()
-    try:
-        affected = sorted(
-            r.bucket for r in chg.select("bucket").distinct().collect()
-        )
-        sizing = {"n_buckets": n_buckets, "key_cols": list(key_cols)}
-        _merge_rewrite(
-            changes.sparkSession, chg, path, affected, table_col,
-            f"batch-{batch_id}", sizing=sizing,
-        )
-    finally:
-        chg.unpersist()
+        _append_delta(chg, path, batch_id)
+    else:
+        sizing = {"n_buckets": n_buckets, "key_cols": list(_KEY)}
+        _merge_rewrite(chg, path, f"batch-{batch_id}", sizing=sizing)
 
 
-def _append_delta(
-    chg: DataFrame, path: str, table_col: str, batch_id: int
-) -> None:
-    """Merge-on-read append: the batch's winners land as one delta file.
+def _bucket(n_buckets: int):
+    """The bucket column of a row: a hash of its target key."""
+    return F.pmod(F.xxhash64(*_KEY), F.lit(n_buckets)).cast("int")
 
-    Single coalesced write into staging, then a dir rename into
-    ``_delta/batch-<id>`` — no bucket is read or rewritten. Replaying a
-    batch id REPLACES its delta (idempotent); a crash between remove and
-    rename loses only a delta the replayed batch re-creates (the
-    foreachBatch replay contract, same as an uncommitted staged batch)."""
+
+def _winners(df: DataFrame, partition_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The max-(commit_ts, seq, op) row per target key — the one winner
+    rule of the target. A NULL ``seq``/``commit_ts`` ranks as -1.
+    ``partition_cols`` lead the window key (see ``last_state_per_key``)."""
     from tiflow_spark.operators.compactor import last_state_per_key
 
-    winner = last_state_per_key(
-        chg.withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1))).withColumn(
+    return last_state_per_key(
+        df.withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1))).withColumn(
             "commit_ts", F.coalesce(F.col("commit_ts"), F.lit(-1))
         ),
-        table_col,
+        _KEY[0],
+        partition_cols=partition_cols,
     )
-    name = f"batch-{batch_id}"
-    stage = os.path.join(path, _STAGING, f"delta-{name}")
+
+
+def _append_delta(chg: DataFrame, path: str, batch_id: int) -> None:
+    """Merge-on-read append: the batch's winners land as one delta file.
+
+    One coalesced write into ``_staging/batch-<id>/_delta``, then the
+    staged commit with no affected bucket, which records the recorded ∪
+    batch schema and moves the delta to ``_delta/batch-<id>``. No bucket is
+    read or rewritten; replaying a batch id REPLACES its delta
+    (idempotent)."""
+    winner = _winners(chg)
+    schema = _widened(_recorded_schema(chg.sparkSession, path), winner.schema)
+    stage = os.path.join(path, _STAGING, f"batch-{batch_id}")
     shutil.rmtree(stage, ignore_errors=True)
-    winner.coalesce(1).write.mode("overwrite").parquet(stage)
-    dest_root = os.path.join(path, _DELTA)
-    os.makedirs(dest_root, exist_ok=True)
-    dest = os.path.join(dest_root, name)
-    shutil.rmtree(dest, ignore_errors=True)
-    os.rename(stage, dest)
+    winner.coalesce(1).write.parquet(os.path.join(stage, _DELTA))
+    _commit_staged(path, stage, [], recorded={"schema": schema.json()})
 
 
 def list_deltas(path: str) -> list[str]:
@@ -372,90 +393,91 @@ def list_deltas(path: str) -> list[str]:
 
 
 def _read_deltas(spark: SparkSession, path: str, names: list[str]) -> DataFrame:
-    return spark.read.option("mergeSchema", "true").parquet(
+    """The named deltas under the recorded schema — no footer inference."""
+    return spark.read.schema(_recorded_schema(spark, path)).parquet(
         *[os.path.join(path, _DELTA, n) for n in names]
     )
 
 
 def _merge_rewrite(
-    spark: SparkSession,
     chg: DataFrame,
     path: str,
-    affected: list[int],
-    table_col: str,
     commit_name: str,
     consume_deltas: list[str] = (),
     sizing: dict | None = None,
 ) -> None:
     """Copy-on-write merge body: fold ``chg`` (already bucket-stamped) into
-    its touched buckets through the staged-manifest commit. ``consume_deltas``
-    lists delta dirs whose rows are included in ``chg`` — the commit removes
-    them atomically with the bucket swap. ``sizing`` (``n_buckets``,
-    ``key_cols``) rides in the manifest (a target's first commit).
+    the buckets it touches through the staged-manifest commit. The batch is
+    persisted for the one job that lists those buckets and the fold that
+    reads it again. ``consume_deltas`` lists delta dirs whose rows are
+    included in ``chg`` — the commit removes them atomically with the
+    bucket swap. ``sizing`` (``n_buckets``, ``key_cols``) rides in the
+    manifest (a target's first commit).
 
     stored ∪ batch crosses ONE exchange, ``hashpartitioning(bucket)``: the
     winner window is keyed on ``(bucket, table, key)``, which that
     partitioning already clusters (bucket is a function of the key), and
     the window's sort leads with bucket, which the partitioned writer
     needs — so each bucket is written by one task as one file."""
-    from tiflow_spark.operators.compactor import last_state_per_key
+    spark = chg.sparkSession
+    chg = chg.persist()
+    try:
+        affected = sorted(
+            r.bucket for r in chg.select("bucket").distinct().collect()
+        )
+        # list ONLY the touched bucket dirs (basePath keeps the partition
+        # column) — full-tree partition discovery is O(n_buckets) listing
+        # per batch, the metadata analog of the full-table scan. (Delta/
+        # Iceberg get this from the transaction log; plain parquet gets it
+        # from the explicit dir list.)
+        existing = [
+            p
+            for b in affected
+            if os.path.isdir(p := os.path.join(path, f"bucket={b}"))
+        ]
+        # stored rows keep their op (D rows are tombstones and must keep
+        # outranking older late arrivals). Stored rows are read under the
+        # recorded schema — also when no touched bucket exists yet (a
+        # zero-path read is an empty scan of that schema) — so a replayed
+        # pre-DDL batch never narrows a schema-evolved target: the union
+        # schema, recorded at commit, is the widest of target ∪ batch.
+        current = (
+            spark.read.schema(_recorded_schema(spark, path))
+            .option("basePath", path)
+            .parquet(*existing)
+        )
+        # D winners are RETAINED as tombstones: without them, a
+        # late-arriving event OLDER than an applied delete would resurrect
+        # the row (the reference never sees this — its sorter + resolved-ts
+        # contract delivers per-key in order; a file source across restarts
+        # does not). read_state() filters them; purge_tombstones() reclaims
+        # them below the GC safepoint. Partition count: see
+        # _bucket_write_partitions.
+        winner = _winners(
+            current.unionByName(chg, allowMissingColumns=True).repartition(
+                _bucket_write_partitions(spark, len(affected)), F.col("bucket")
+            ),
+            partition_cols=("bucket",),
+        )
+        # stage inside the target dir (same filesystem → rename is atomic;
+        # underscore prefix → invisible to Spark scans), then manifest +
+        # marker + swap. A bucket whose rows were ALL deleted has no staged
+        # dir and is removed at swap time.
+        stage = os.path.join(path, _STAGING, commit_name)
+        shutil.rmtree(stage, ignore_errors=True)
+        winner.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+        _commit_staged(
+            path,
+            stage,
+            affected,
+            deltas=consume_deltas,
+            recorded={"schema": winner.schema.json(), **(sizing or {})},
+        )
+    finally:
+        chg.unpersist()
 
-    # list ONLY the touched bucket dirs (basePath keeps the partition
-    # column) — full-tree partition discovery is O(n_buckets) listing
-    # per batch, the metadata analog of the full-table scan. (Delta/
-    # Iceberg get this from the transaction log; plain parquet gets it
-    # from the explicit dir list.)
-    existing = [
-        p
-        for b in affected
-        if os.path.isdir(p := os.path.join(path, f"bucket={b}"))
-    ]
-    # stored rows keep their op (D rows are tombstones and must keep
-    # outranking older late arrivals). Stored rows are read under the
-    # recorded schema — also when no touched bucket exists yet (a
-    # zero-path read is an empty scan of that schema) — so a replayed
-    # pre-DDL batch never narrows a schema-evolved target: the union
-    # schema, recorded at commit, is the widest of target ∪ batch.
-    current = (
-        spark.read.schema(_recorded_schema(spark, path))
-        .option("basePath", path)
-        .parquet(*existing)
-    )
-    src = (
-        current.unionByName(chg, allowMissingColumns=True)
-        .withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1)))
-        .withColumn("commit_ts", F.coalesce(F.col("commit_ts"), F.lit(-1)))
-    )
-    # D winners are RETAINED as tombstones: without them, a late-arriving
-    # event OLDER than an applied delete would resurrect the row (the
-    # reference never sees this — its sorter + resolved-ts contract
-    # delivers per-key in order; a file source across restarts does not).
-    # read_state() filters them; purge_tombstones() reclaims them below
-    # the GC safepoint. Partition count: see _bucket_write_partitions.
-    winner = last_state_per_key(
-        src.repartition(
-            _bucket_write_partitions(spark, len(affected)), F.col("bucket")
-        ),
-        table_col,
-        partition_cols=("bucket",),
-    )
-    # stage inside the target dir (same filesystem → rename is atomic;
-    # underscore prefix → invisible to Spark scans), then manifest +
-    # marker + swap. A bucket whose rows were ALL deleted has no staged
-    # dir and is removed at swap time.
-    stage = os.path.join(path, _STAGING, commit_name)
-    shutil.rmtree(stage, ignore_errors=True)
-    winner.write.mode("overwrite").partitionBy("bucket").parquet(stage)
-    _commit_staged(
-        path,
-        stage,
-        affected,
-        deltas=consume_deltas,
-        recorded={"schema": winner.schema.json(), **(sizing or {})},
-    )
 
-
-def compact_deltas(spark: SparkSession, path: str, table_col: str | None = None) -> int:
+def compact_deltas(spark: SparkSession, path: str) -> int:
     """Fold accumulated merge-on-read deltas into their buckets — the
     maintenance pass that restores resolve-free reads. Cost O(deltas +
     touched buckets); untouched buckets stay untouched. The staged commit
@@ -465,20 +487,11 @@ def compact_deltas(spark: SparkSession, path: str, table_col: str | None = None)
     is idempotent anyway). Returns the number of deltas folded."""
     recover(path)
     names = list_deltas(path)
-    if not names:
-        return 0
-    meta = read_target_meta(path) or {}
-    tcol = table_col or (meta.get("key_cols") or ["target_table"])[0]
-    chg = _read_deltas(spark, path, names).persist()
-    try:
-        affected = sorted(
-            r.bucket for r in chg.select("bucket").distinct().collect()
-        )
+    if names:
         _merge_rewrite(
-            spark, chg, path, affected, tcol, "compact", consume_deltas=names
+            _read_deltas(spark, path, names), path, "compact",
+            consume_deltas=names,
         )
-    finally:
-        chg.unpersist()
     return len(names)
 
 
@@ -490,27 +503,16 @@ def read_state(spark: SparkSession, path: str) -> DataFrame:
     Merge-on-read: when unconsumed ``_delta`` appends exist, base ∪ deltas
     is winner-resolved at scan time (one extra shuffle, proportional to the
     data read — not to the target, since base buckets are still pruned by
-    any pushed key predicate). A compacted target skips the resolve
-    entirely."""
+    any pushed key predicate). Both sides read under the recorded schema,
+    so building the frame runs no job. A compacted target skips the
+    resolve entirely."""
     recover(path)
     df = _read_base(spark, path)
-    meta = read_target_meta(path)
     deltas = list_deltas(path)
     if deltas:
-        from tiflow_spark.operators.compactor import last_state_per_key
-
-        tcol = ((meta or {}).get("key_cols") or ["target_table"])[0]
-        df = df.withColumn("seq", F.coalesce(F.col("seq"), F.lit(-1))).withColumn(
-            "commit_ts", F.coalesce(F.col("commit_ts"), F.lit(-1))
-        )
-        df = last_state_per_key(
-            df.unionByName(
-                _read_deltas(spark, path, deltas), allowMissingColumns=True
-            ),
-            tcol,
-        )
+        df = _winners(df.unionByName(_read_deltas(spark, path, deltas)))
     live = df.filter(F.col("op") != "D")
-    trunc = _truncated_predicate(meta)
+    trunc = _truncated_predicate(read_target_meta(path))
     return live.filter(~trunc) if trunc is not None else live
 
 
@@ -537,34 +539,18 @@ def purge_tombstones(
     _rewrite_all(path, kept, stage_name="purge")
 
 
-def resize_buckets(
-    spark: SparkSession,
-    path: str,
-    n_buckets_new: int,
-    key_cols: tuple[str, ...] | None = None,
-) -> None:
+def resize_buckets(spark: SparkSession, path: str, n_buckets_new: int) -> None:
     """Re-home the target into a new bucket count — the maintenance op for a
     target that outgrew its layout (the 100 TB sizing math above). One full
     read + one full write, committed atomically through the same staged
-    manifest; steady-state merges are untouched. key_cols defaults to the
-    recorded metadata; the new sizing is recorded by the same commit."""
+    manifest; steady-state merges are untouched. The new sizing is recorded
+    by the same commit."""
     compact_deltas(spark, path)  # deltas must fold before a full rewrite
     recover(path)
-    meta = read_target_meta(path)
-    cols = tuple(key_cols or (meta or {}).get("key_cols") or ())
-    if not cols:
-        raise ValueError(f"no key_cols given and no metadata at {path}")
-    df = (
-        _read_base(spark, path)
-        .drop("bucket")
-        .withColumn(
-            "bucket",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets_new)
-            ).cast("int"),
-        )
+    df = _read_base(spark, path).drop("bucket").withColumn(
+        "bucket", _bucket(n_buckets_new)
     )
-    sizing = {"n_buckets": n_buckets_new, "key_cols": list(cols)}
+    sizing = {"n_buckets": n_buckets_new, "key_cols": list(_KEY)}
     _rewrite_all(path, df, stage_name="resize", sizing=sizing)
 
 
@@ -574,24 +560,21 @@ def _rewrite_all(
     """Full-target rewrite through the staged-manifest commit: affected =
     every current bucket ∪ every staged bucket, so stale dirs vanish and the
     swap is crash-recoverable like any batch commit. A resize's new
-    ``sizing`` rides in the manifest: layout and metadata change together."""
+    ``sizing`` rides in the manifest: layout and metadata change together,
+    and the write is sized from the layout it commits."""
     stage = os.path.join(path, _STAGING, stage_name)
     shutil.rmtree(stage, ignore_errors=True)
-    n_buckets = (read_target_meta(path) or {}).get("n_buckets") or 1_000_000
+    n_buckets = (sizing or read_target_meta(path))["n_buckets"]
     df.repartition(
         _bucket_write_partitions(df.sparkSession, n_buckets), F.col("bucket")
     ).write.mode("overwrite").partitionBy("bucket").parquet(stage)
-    old = {
+    buckets = {
         int(d.split("=", 1)[1])
-        for d in os.listdir(path)
+        for root in (path, stage)
+        for d in os.listdir(root)
         if d.startswith("bucket=")
     }
-    new = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(stage)
-        if d.startswith("bucket=")
-    }
-    _commit_staged(path, stage, sorted(old | new), recorded=sizing)
+    _commit_staged(path, stage, sorted(buckets), recorded=sizing)
 
 
 def snapshot_target(path: str, snap_path: str, info: dict | None = None) -> dict:

@@ -24,6 +24,7 @@ MERGE INTO or a JDBC upsert — the batch function is the pluggable seam.
 from __future__ import annotations
 
 import os
+import shutil
 from dataclasses import dataclass
 
 import pyarrow as pa
@@ -148,11 +149,11 @@ class StreamingTarget:
 
     target_path: str
     progress_path: str
-    key_col: str = "key"
-    table_col: str = "target_table"
+    # batches carry the target key (target_table, key); n_buckets sizes a
+    # new target and must match an existing one
     n_buckets: int = 32
     # "rewrite" = copy-on-write (cheapest reads); "delta" = merge-on-read
-    # O(batch) appends, fold with sinks/bucketed.compact_deltas at
+    # O(batch) delta commits, folded by sinks/bucketed.compact_deltas at
     # maintenance cadence (see merge_hash_bucketed docstring)
     merge_mode: str = "rewrite"
     # delta mode: fold accumulated deltas every N batches (0 = manual).
@@ -187,19 +188,14 @@ class StreamingTarget:
         )
         # payload columns come from the batch's own `after` struct — the
         # envelope schema is per-deployment data, not engine constants
-        meta = {"target_table", "key", "op", "commit_ts", "seq"}
+        meta = ("target_table", "key", "op", "commit_ts", "seq")
         payload = [
             f.name
             for f in observed.schema["after"].dataType.fields
             if f.name not in meta
         ]
         changes = observed.select(
-            F.col(self.table_col).alias("target_table"),
-            F.col("key"),
-            F.col("op"),
-            F.col("commit_ts"),
-            F.col("seq"),
-            *[F.col(f"after.{c}").alias(c) for c in payload],
+            *meta, *[F.col(f"after.{c}").alias(c) for c in payload]
         )
         # every merge path (create, rewrite, delta) runs an action over
         # `changes`, so the observed plan has run before obs.get
@@ -207,8 +203,6 @@ class StreamingTarget:
             changes,
             self.target_path,
             n_buckets=self.n_buckets,
-            key_cols=("target_table", self.key_col),
-            table_col="target_table",
             batch_id=batch_id,
             mode=self.merge_mode,
         )
@@ -409,7 +403,7 @@ class DDLStreamingTarget(StreamingTarget):
         )
         super().merge_batch(
             dec.select(
-                self.table_col, "key", "op", "commit_ts", "seq",
+                "target_table", "key", "op", "commit_ts", "seq",
                 after.alias("after"),
             ),
             batch_id,
@@ -496,9 +490,23 @@ class OptimisticShardTarget(StreamingTarget):
         self.pending_path = pending_path
         self.gate_col = gate_col
 
+    def _settle_pending(self) -> None:
+        """Finish a pending-store shrink that a crash cut short. The shrink
+        writes the still-held rows to ``.tmp``, moves the old store to
+        ``.old``, then the new one into place: past the first move the new
+        store is complete and is rolled forward; before it, the old store
+        is kept and the replayed batch redoes the shrink."""
+        tmp, old = f"{self.pending_path}.tmp", f"{self.pending_path}.old"
+        moved = os.path.isdir(old) and not os.path.isdir(self.pending_path)
+        if moved and os.path.isdir(tmp):
+            os.rename(tmp, self.pending_path)
+        shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
+
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         from tiflow_spark.streaming.shardddl import conflicted_tables_asof
 
+        self._settle_pending()
         spark = batch.sparkSession
         hwm = batch.agg(F.max("commit_ts")).collect()[0][0]
         if hwm is None:
@@ -533,16 +541,16 @@ class OptimisticShardTarget(StreamingTarget):
         if still is not None:
             # shrink the pending store to the still-held rows only AFTER the
             # merge committed (a crash in between re-flushes on replay — the
-            # merge is idempotent). Bounded by held volume, not target size.
-            import shutil
-
-            tmp = f"{self.pending_path}.tmp"
+            # merge is idempotent), keeping the old store until the new one
+            # is in place (_settle_pending). Bounded by held volume, not
+            # target size.
+            tmp, old = f"{self.pending_path}.tmp", f"{self.pending_path}.old"
             if not still.isEmpty():
                 still.write.mode("overwrite").parquet(tmp)
-                shutil.rmtree(self.pending_path)
+            os.rename(self.pending_path, old)
+            if os.path.isdir(tmp):
                 os.rename(tmp, self.pending_path)
-            else:
-                shutil.rmtree(self.pending_path)
+            shutil.rmtree(old)
 
 
 def windowed_throughput(stream: DataFrame, watermark_delay: str = "10 seconds") -> DataFrame:
