@@ -712,8 +712,8 @@ def test_position_fold_equals_offset_fold_and_oracle(spark, work_dir):
     appended twice; both equal the DuckDB oracle."""
     from pyspark.sql import Window
 
+    from tiflow_spark.codecs.canal_json import _CANAL_SCHEMA
     from tiflow_spark.sinks.mq import consume_file_broker
-    from tiflow_spark.streaming.consumer import _CANAL_SCHEMA
 
     broker = f"{work_dir}/broker_pos"
     rows = _produce_tied_broker(spark, broker)
@@ -793,3 +793,164 @@ def test_canal_key_sticky_contract_spans_topics(spark, work_dir):
         replay_broker_to_state(
             spark, f"{work_dir}/broker_topics", {"id": "bigint"}
         ).collect()
+
+
+def _routed_state(env):
+    """Direct-apply state of the DEMO_CFG-routed change stream, in the
+    (table, key, id, balance, note) shape the replays are compared in."""
+    transformed = tfm.split_updates(
+        tfm.route(flt.apply_filters(env, DEMO_CFG), DEMO_CFG)
+    )
+    return changes_to_state(transformed, table_col="table").select(
+        F.col("target_table").alias("table"),
+        F.col("id").cast("string").alias("key"),
+        "id", "balance", "note",
+    )
+
+
+@pytest.mark.parametrize("protocol", ["canal-json", "debezium"])
+def test_checkpoint_messages_never_replay_as_rows(
+    spark, sf_dir, work_dir, protocol
+):
+    """A topic made with emit-checkpoint=true carries a watermark message
+    on every (topic, partition). Watermarks are control messages: they
+    decode to a NULL op and never win a key, so the replay equals
+    direct apply (no NULL-key live row, no contract failure from the
+    broadcast watermark rows)."""
+    from tiflow_spark.streaming.consumer import (
+        replay_debezium_broker_to_state,
+    )
+
+    env = events_to_changes(load_table(spark, sf_dir, "events"))
+    src = f"{work_dir}/source"
+    env.repartition(2).write.parquet(src)
+    _, broker = create_changefeed(
+        spark, src, DEMO_CFG,
+        f"kafka://broker:9092/cdc-demo?protocol={protocol}"
+        "&partition-num=4&emit-checkpoint=true",
+        work_dir,
+    )
+    if protocol == "canal-json":
+        replayed = replay_broker_to_state(
+            spark, broker,
+            {"id": "bigint", "balance": "double", "note": "string"},
+        )
+    else:
+        replayed = replay_debezium_broker_to_state(spark, broker)
+    replayed = replayed.select("table", "key", "id", "balance", "note")
+    expected = _routed_state(env)
+    assert replayed.count() == expected.count() > 0
+    assert replayed.exceptAll(expected).count() == 0
+    assert expected.exceptAll(replayed).count() == 0
+
+
+def test_contract_message_names_the_contract_for_a_null_key(
+    spark, work_dir
+):
+    """A key-less canal message (pkNames null) folds under a NULL key;
+    seen on two partitions it must fail with the contract's message, not
+    with a NULL one."""
+    from tiflow_spark.sinks.mq import produce_file_broker
+
+    row = (
+        '{{"id":1,"database":"s","table":"t","pkNames":null,'
+        '"isDdl":false,"type":"{t}","es":{es},"ts":{es},"sql":"",'
+        '"data":[{{"id":"1","balance":"{b}","note":"x"}}],"old":null}}'
+    )
+    msgs = spark.createDataFrame(
+        [
+            (100, 0, "tp", 0, row.format(t="INSERT", es=100, b="1.0")),
+            (101, 1, "tp", 1, row.format(t="UPDATE", es=101, b="2.0")),
+        ],
+        "commit_ts long, seq long, topic string, partition int, "
+        "value string",
+    ).withColumn("key", F.lit(None).cast("string"))
+    produce_file_broker(msgs, f"{work_dir}/broker_nokey", batch_id=0)
+    with pytest.raises(Exception, match="contract violated"):
+        replay_broker_to_state(
+            spark, f"{work_dir}/broker_nokey", {"id": "bigint"}
+        ).collect()
+
+
+@pytest.mark.parametrize(
+    "protocol", ["debezium", "avro", "simple", "open-protocol"]
+)
+def test_key_sticky_contract_fires_for_every_protocol(
+    spark, work_dir, protocol
+):
+    """The fold's position tiebreak is sound only inside one (topic,
+    partition), for every protocol: one key's insert and update produced
+    to two partitions fail the replay instead of picking a winner across
+    partitions."""
+    from tiflow_spark.codecs.avro import encode_avro
+    from tiflow_spark.codecs.debezium import encode_debezium
+    from tiflow_spark.codecs.open_protocol import encode_open_protocol
+    from tiflow_spark.codecs.simple import encode_simple
+    from tiflow_spark.sinks.mq import produce_file_broker
+    from tiflow_spark.streaming import consumer
+
+    encode, replay = {
+        "debezium": (encode_debezium, consumer.replay_debezium_broker_to_state),
+        "avro": (encode_avro, consumer.replay_avro_broker_to_state),
+        "simple": (encode_simple, consumer.replay_simple_broker_to_state),
+        "open-protocol": (
+            encode_open_protocol,
+            lambda s, b: consumer.replay_open_broker_to_state(
+                s, b, {"id": "bigint", "balance": "double", "note": "string"}
+            ),
+        ),
+    }[protocol]
+    env = spark.createDataFrame(
+        [
+            ("I", "s", "t", 1000, 1, "1", None, (1, 1.0, "a")),
+            ("U", "s", "t", 2000, 2, "1", (1, 1.0, "a"), (1, 2.0, "b")),
+        ],
+        "op string, schema string, table string, commit_ts long, "
+        "seq long, key string, "
+        "before struct<id: bigint, balance: double, note: string>, "
+        "after struct<id: bigint, balance: double, note: string>",
+    )
+    enc = encode(env)
+    if "key" not in enc.columns:
+        enc = enc.withColumn("key", F.lit(None).cast("string"))
+    placed = env.select(
+        "commit_ts", "seq", F.lit("s.t").alias("topic"),
+        (F.col("seq") - 1).cast("int").alias("partition"),
+    )
+    broker = f"{work_dir}/broker_split"
+    produce_file_broker(enc.join(placed, ["commit_ts", "seq"]), broker)
+    with pytest.raises(Exception, match="contract violated"):
+        replay(spark, broker).collect()
+
+
+def test_csv_replay_casts_any_type_string(spark, work_dir):
+    """The CSV replay casts payload columns to any Spark type string, as
+    the broker replays do: an `int` column round-trips through the
+    storage sink."""
+    from tiflow_spark.sinks.storage import (
+        StorageSinkConfig,
+        write_storage_sink,
+    )
+    from tiflow_spark.streaming.consumer import replay_storage_csv_to_state
+
+    env = spark.createDataFrame(
+        [
+            ("I", "s", "t", 100, 1, 1, 1.0, "a"),
+            ("I", "s", "t", 110, 2, 2, 2.0, "b"),
+            ("U", "s", "t", 120, 3, 1, 3.0, "c"),
+        ],
+        "op string, schema string, table string, commit_ts long, "
+        "seq long, id int, balance double, note string",
+    ).select(
+        "op", "schema", "table", "commit_ts", "seq",
+        F.struct("id", "balance", "note").alias("after"),
+        F.struct("id", "balance", "note").alias("before"),
+    )
+    out = f"{work_dir}/storage_int"
+    write_storage_sink(env, out, StorageSinkConfig())
+    got = replay_storage_csv_to_state(
+        spark, out, {"id": "int", "balance": "double", "note": "string"}
+    )
+    assert dict(got.dtypes)["id"] == "int"
+    assert {tuple(r) for r in got.select("key", "id", "balance", "note")
+            .collect()} == {("1", 1, 3.0, "c"), ("2", 2, 2.0, "b")}

@@ -182,6 +182,39 @@ def test_mq_replay_shuffles_once_and_prunes_topics(spark, tmp_path):
     assert m is not None and "topic" in m.group(1)
 
 
+def test_debezium_replay_shuffles_once_and_prunes_topics(spark, tmp_path):
+    """Every broker replay folds through the one shared apply: the
+    debezium replay's (schema, table, key) fold, with its key-sticky
+    contract, is its only exchange, and a topic filter prunes the scan."""
+    from pyspark.sql import functions as F
+
+    from tiflow_spark.codecs.debezium import encode_debezium
+    from tiflow_spark.sinks.mq import produce_file_broker
+    from tiflow_spark.streaming.consumer import (
+        replay_debezium_broker_to_state,
+    )
+
+    env = spark.createDataFrame(
+        [("I", "s", "t", 1000, 1, "1", None, (1, 1.0, "a"))],
+        "op string, schema string, table string, commit_ts long, "
+        "seq long, key string, "
+        "before struct<id: bigint, balance: double, note: string>, "
+        "after struct<id: bigint, balance: double, note: string>",
+    ).withColumns({"topic": F.lit("ta"), "partition": F.lit(0)})
+    broker = str(tmp_path / "broker")
+    produce_file_broker(
+        encode_debezium(env, extra_cols=("topic", "partition")), broker
+    )
+    plan = plan_of(replay_debezium_broker_to_state(spark, broker, topic="ta"))
+    assert n_exchanges(plan) == 1, plan
+    # one Sort for both window functions, and no filter pushed below the
+    # decode (that would parse every message twice)
+    assert len(re.findall(r"^\(\d+\) Sort", plan, flags=re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) Filter", plan, flags=re.M)) == 1, plan
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
+    assert m is not None and "topic" in m.group(1)
+
+
 def test_handle_key_only_is_map_only_single_projection(spark, sf_dir):
     """Large-message dispatch must not join full against handle-key-only
     encodings — both are CASE arms of one projection."""

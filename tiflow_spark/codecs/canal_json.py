@@ -214,6 +214,16 @@ def _changed_only_map(fields: list[T.StructField]) -> Column:
     return F.when(F.col("before").isNotNull(), F.map_from_entries(kept))
 
 
+#: canal-json message shape; `_tidb` is NULL without enable-tidb-extension
+_CANAL_SCHEMA = (
+    "id BIGINT, database STRING, table STRING, pkNames ARRAY<STRING>, "
+    "isDdl BOOLEAN, type STRING, es BIGINT, ts BIGINT, sql STRING, "
+    "sqlType MAP<STRING,INT>, mysqlType MAP<STRING,STRING>, "
+    "data ARRAY<MAP<STRING,STRING>>, old ARRAY<MAP<STRING,STRING>>, "
+    "_tidb STRUCT<commitTs: BIGINT>"
+)
+
+
 def encode_canal_json(
     env: DataFrame,
     pk_names: tuple[str, ...] = ("id",),
@@ -315,21 +325,16 @@ def decode_canal_json(
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Canal-JSON → change rows (consumer-side, cmd/kafka-consumer parity).
-    ``extra_cols`` ride through untouched (e.g. storage-consumer path
-    identity columns)."""
-    schema = (
-        "id BIGINT, database STRING, table STRING, pkNames ARRAY<STRING>, "
-        "isDdl BOOLEAN, type STRING, es BIGINT, ts BIGINT, sql STRING, "
-        "sqlType MAP<STRING,INT>, mysqlType MAP<STRING,STRING>, "
-        "data ARRAY<MAP<STRING,STRING>>, old ARRAY<MAP<STRING,STRING>>"
-    )
+    DDL and TIDB_WATERMARK messages get a NULL op; ``tidb_commit_ts`` is
+    NULL without the TiDB extension. ``extra_cols`` ride through
+    untouched (e.g. storage-consumer path identity columns)."""
     m = messages.select(
-        *extra_cols, F.from_json(F.col(value_col), schema).alias("m")
+        *extra_cols, F.from_json(F.col(value_col), _CANAL_SCHEMA).alias("m")
     )
     op = (
         F.when(F.col("m.type") == "INSERT", "I")
         .when(F.col("m.type") == "UPDATE", "U")
-        .otherwise("D")
+        .when(F.col("m.type") == "DELETE", "D")
     )
     return m.select(
         *extra_cols,
@@ -339,6 +344,9 @@ def decode_canal_json(
         (F.col("m.es") * 1000).alias("commit_ts_ms_scaled"),
         F.element_at(F.col("m.data"), 1).alias("image"),
         F.element_at(F.col("m.old"), 1).alias("old_image"),
+        F.col("m.pkNames").alias("pk_names"),
+        F.col("m.mysqlType").alias("mysql_type"),
+        F.col("m._tidb.commitTs").alias("tidb_commit_ts"),
     )
 
 

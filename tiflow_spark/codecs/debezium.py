@@ -442,6 +442,7 @@ def decode_debezium(
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Debezium envelope JSON → change rows (debezium consumer parity).
+    Schema-change and watermark (op m) messages get a NULL op.
 
     ``extra_cols`` passes message-frame columns (partition/offset broker
     metadata) through the decode — join-free composition, same
@@ -459,7 +460,7 @@ def decode_debezium(
     op = (
         F.when(F.col("m.payload.op") == "c", "I")
         .when(F.col("m.payload.op") == "u", "U")
-        .otherwise("D")
+        .when(F.col("m.payload.op") == "d", "D")
     )
     return m.select(
         *extra_cols,
@@ -777,7 +778,8 @@ def decode_debezium_typed(
 ) -> DataFrame:
     """Debezium envelope JSON with TYPED field values → engine change
     rows: from_json against the wire types writeDebeziumFieldValue
-    emits, then the per-type inverse render. One map stage, no UDF."""
+    emits, then the per-type inverse render. One map stage, no UDF.
+    Non-row messages get a NULL op, as in :func:`decode_debezium`."""
     img = ", ".join(
         f"`{s.name}`: {_debezium_wire_type(s)}" for s in specs
     )
@@ -805,7 +807,7 @@ def decode_debezium_typed(
     op = (
         F.when(F.col("m.payload.op") == "c", "I")
         .when(F.col("m.payload.op") == "u", "U")
-        .otherwise("D")
+        .when(F.col("m.payload.op") == "d", "D")
     )
     return m.select(
         op.alias("op"),

@@ -455,10 +455,13 @@ def decode_open_protocol(
     messages: DataFrame,
     key_col: str = "key",
     value_col: str = "value",
+    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Open-protocol key/value JSON → change rows (open_protocol_decoder.go /
     cmd/kafka-consumer parity). Column objects come back as
-    map<col, struct{t,h,v}> so any payload schema decodes."""
+    map<col, struct{t,h,v}> so any payload schema decodes. DDL and
+    resolved messages get a NULL op class. ``extra_cols`` ride through
+    untouched (e.g. the broker position a consumer folds on)."""
     key_schema = "ts BIGINT, scm STRING, tbl STRING, t INT"
     col_obj = "STRUCT<t: INT, h: BOOLEAN, v: STRING>"
     val_schema = (
@@ -467,11 +470,15 @@ def decode_open_protocol(
     )
     k = F.from_json(F.col(key_col), key_schema)
     v = F.from_json(F.col(value_col), val_schema)
+    op_class = F.when(
+        k["t"] == 1, F.when(v["d"].isNotNull(), "D").otherwise("U")
+    )
     return messages.select(
+        *extra_cols,
         k["scm"].alias("schema"),
         k["tbl"].alias("table"),
         k["ts"].alias("commit_ts"),
-        F.when(v["d"].isNotNull(), "D").otherwise("U").alias("op_class"),
+        op_class.alias("op_class"),
         F.coalesce(v["u"], v["d"]).alias("image"),
         v["p"].alias("pre_image"),
     )

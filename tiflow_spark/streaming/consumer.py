@@ -7,14 +7,23 @@ change stream (cmd/kafka-consumer/, tests/mq_protocol_tests/). Here the
 same round trip is: file-broker segments → decode → typed images →
 last-writer-wins fold → applied state.
 
-Correctness contract (same as the reference consumer):
+Every broker replay decodes with its codec's own decoder, projects to
+(schema, table, key, _op_class, commit_ts, topic, partition, position,
+payload...) and ends in `_last_writer_fold`, as writer.go sends every
+decoder through one downstream apply. Decoders give control messages
+(DDL, watermark, BOOTSTRAP) a NULL op, and the fold lets no NULL-op row
+into the applied state.
+
+Correctness contract (every broker protocol, same as the reference
+consumer):
 - the producer dispatches key-sticky (index-value/table dispatchers), so
   one key's events share a (topic, partition), and the segment position
   (batch_id, batch_offset) is that partition's append order — the order
   a Kafka consumer reads its offsets in;
 - the fold orders by (commit ts, batch_id, batch_offset), which is total
   per key. canal-json `es` is millisecond-truncated; the position breaks
-  ms ties, which is exactly the information a Kafka consumer has.
+  ms ties, which is exactly the information a Kafka consumer has. A key
+  seen in more than one (topic, partition) fails the replay.
 
 Scale shape: the broker is read under its fixed segment schema (no
 inference job) and prunes by topic; decode is one map stage; the fold is
@@ -27,18 +36,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-#: canal-json message shape (pkg/sink/codec/canal; decoder parity with
-#: codecs/canal_json.decode_canal_json, plus consumer-side columns)
-_CANAL_SCHEMA = (
-    "id BIGINT, database STRING, table STRING, pkNames ARRAY<STRING>, "
-    "isDdl BOOLEAN, type STRING, es BIGINT, ts BIGINT, sql STRING, "
-    "sqlType MAP<STRING,INT>, mysqlType MAP<STRING,STRING>, "
-    "data ARRAY<MAP<STRING,STRING>>, old ARRAY<MAP<STRING,STRING>>"
-)
+from tiflow_spark.sinks.mq import read_segments
 
 #: a message's segment position: its append order within one
 #: (topic, partition)
 _POSITION = ("batch_id", "batch_offset")
+#: the broker columns every replay carries through its decoder to the fold
+_FRAME = ("topic", "partition", *_POSITION)
 
 
 def replay_broker_to_state(
@@ -66,27 +70,20 @@ def replay_broker_to_state(
     commit ts in ``_tidb.commitTs`` — the decoder restores it
     (canal_json_decoder.go:248,265-267) and the fold orders by it
     directly instead of the (ms-truncated es, position) surrogate; a
-    message missing the extension fails the replay loudly.
+    row message missing the extension fails the replay loudly.
 
     Output: (schema, table, key, <typed payload...>) — live rows only.
     """
-    from tiflow_spark.sinks.mq import read_segments
+    from tiflow_spark.codecs.canal_json import decode_canal_json
 
-    schema = _CANAL_SCHEMA
-    if use_tidb_extension:
-        schema += ", _tidb STRUCT<commitTs: BIGINT>"
-    msgs = read_segments(spark, broker_dir, topic)
-    m = msgs.select(
-        "topic",
-        "partition",
-        *_POSITION,
-        F.from_json("value", schema).alias("m"),
-    ).filter(~F.col("m.isDdl"))
+    dec = decode_canal_json(
+        read_segments(spark, broker_dir, topic), extra_cols=_FRAME
+    )
     if payload_types is None:
         from tiflow_spark.types import spark_cast_for_mysql_type
 
         peek = (
-            m.select(F.col("m.mysqlType").alias("mt"))
+            dec.select(F.col("mysql_type").alias("mt"))
             .filter(F.col("mt").isNotNull())
             .limit(1)
             .collect()
@@ -100,76 +97,38 @@ def replay_broker_to_state(
             name: spark_cast_for_mysql_type(t)
             for name, t in sorted(peek[0].mt.items())
         }
-    img = F.element_at(F.col("m.data"), 1)
-    key = F.array_join(
-        F.transform(F.col("m.pkNames"), lambda pk: F.element_at(img, pk)),
-        "|",
-    )
     if use_tidb_extension:
-        # decoder parity: the extension is mandatory on an
-        # extension-enabled changefeed — null means a foreign message
-        es = F.coalesce(
+        # decoder parity: the extension is mandatory on an extension-enabled
+        # changefeed — a row message without it is foreign
+        order = F.coalesce(
             F.assert_true(
-                F.col("m._tidb.commitTs").isNotNull(),
+                F.col("tidb_commit_ts").isNotNull() | F.col("op").isNull(),
                 F.lit("canal replay: message without _tidb.commitTs "
                       "on an extension-enabled topic"),
             ).cast("long"),
-            F.col("m._tidb.commitTs"),
+            F.col("tidb_commit_ts"),
         )
     else:
-        es = F.col("m.es")
-    rows = m.select(
-        F.col("m.database").alias("schema"),
-        F.col("m.table").alias("table"),
+        order = F.col("commit_ts_ms_scaled")
+    key = F.array_join(
+        F.transform(
+            F.col("pk_names"), lambda pk: F.element_at("image", pk)
+        ),
+        "|",
+    )
+    rows = dec.select(
+        "schema",
+        "table",
         key.alias("key"),
-        F.col("m.type").alias("etype"),
-        es.alias("es"),
-        "topic",
-        "partition",
-        *_POSITION,
+        F.col("op").alias("_op_class"),
+        order.alias("commit_ts"),
+        *_FRAME,
         *[
-            F.element_at(img, name).cast(t).alias(name)
+            F.element_at("image", name).cast(t).alias(name)
             for name, t in payload_types.items()
         ],
     )
-    w = Window.partitionBy("schema", "table", "key").orderBy(
-        F.col("es").desc(), *[F.col(c).desc() for c in _POSITION]
-    )
-    # segment positions are only comparable WITHIN one (topic, partition);
-    # the ms-truncated `es` tiebreak is sound only under the dispatcher's
-    # key-sticky contract (same key → same topic and partition). Enforce
-    # it instead of assuming it: a key observed in >1 (topic, partition)
-    # fails the replay loudly rather than silently picking a stale row.
-    # collect_set rides the same window partitioning — no extra shuffle.
-    # The assert is folded INTO the row-number filter (null-on-success +
-    # coalesce true): a free-standing asserted column that is later
-    # .drop()ped is pruned by Catalyst and the guard silently dies.
-    n_parts = F.size(
-        F.collect_set(F.struct("topic", "partition")).over(
-            w.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-    )
-    contract = F.coalesce(
-        F.assert_true(
-            F.col("_nparts") <= 1,
-            F.concat(
-                F.lit("replay contract violated: key observed in "
-                      "multiple broker (topic, partition)s: "),
-                F.col("schema"), F.lit("."), F.col("table"),
-                F.lit("/"), F.col("key"),
-            ),
-        ).cast("boolean"),
-        F.lit(True),
-    )
-    last = (
-        rows.withColumn("_nparts", n_parts)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(contract & (F.col("_rn") == 1))
-        .drop("_rn", "_nparts", "es", "topic", "partition", *_POSITION)
-    )
-    return last.filter(F.col("etype") != "DELETE").drop("etype")
+    return _last_writer_fold(rows)
 
 
 def replay_simple_broker_with_ddl(
@@ -181,8 +140,8 @@ def replay_simple_broker_with_ddl(
     capability the protocol's DDL messages exist for (simple/decoder.go
     MessageTypeDDL path feeding the consumer's schema tracker):
 
-    1. split broker messages by the `type` discriminator (DML kinds vs
-       DDL kinds vs WATERMARK/BOOTSTRAP);
+    1. pick the DDL messages by the `type` discriminator (all messages
+       decode as DML too; DDL/WATERMARK/BOOTSTRAP get a NULL op there);
     2. fold the (metadata-scale) DDL messages into the SAME versioned
        registry the producer uses (registry_from_ddl over the decoded
        `sql` statements — parse-derived kinds, consumer needs no side
@@ -194,12 +153,11 @@ def replay_simple_broker_with_ddl(
        last-writer state ordered by (commitTs, segment position).
 
     Output: (schema, table, key, <typed column universe...>) live rows.
-    Scale shape: the DML side is one from_json map stage + the broadcast
+    Scale shape: the DML side is one JSON decode map stage + the broadcast
     as-of join + one keyed fold shuffle; only DDL messages (bounded like
     the owner's schema storage) are collected.
     """
     from tiflow_spark.codecs.simple import decode_simple, decode_simple_ddl
-    from tiflow_spark.sinks.mq import read_segments
     from tiflow_spark.sources.ddl_parse import parse_ddl
     from tiflow_spark.sources.ddl_stream import registry_from_ddl
     from tiflow_spark.sources.schema_registry import (
@@ -213,8 +171,6 @@ def replay_simple_broker_with_ddl(
     ddl_msgs = msgs.filter(
         ~kind.isin("INSERT", "UPDATE", "DELETE", "WATERMARK", "BOOTSTRAP")
     )
-    dml_msgs = msgs.filter(kind.isin("INSERT", "UPDATE", "DELETE"))
-
     # DDL side: metadata-scale by the same bound as the reference owner's
     # schema storage; kinds re-derived by parsing the statement itself
     ddl_rows = decode_simple_ddl(ddl_msgs).collect()
@@ -242,9 +198,7 @@ def replay_simple_broker_with_ddl(
     registry = registry_from_ddl(ddl_frame)
     plan = registry_column_plan(registry)
 
-    dml = decode_simple(
-        dml_msgs.select(*_POSITION, "value"), extra_cols=_POSITION
-    )
+    dml = decode_simple(msgs, extra_cols=_FRAME)
     resolved = asof_resolve(
         dml, registry, event_table_col="table", with_keys=True
     )
@@ -298,7 +252,7 @@ def replay_simple_broker_with_ddl(
     )
     rows = resolved.select(
         "schema", "table", key.alias("key"), F.col("op").alias("_op_class"),
-        "commit_ts", *_POSITION, *typed,
+        "commit_ts", *_FRAME, *typed,
     )
     return _last_writer_fold(rows)
 
@@ -306,17 +260,53 @@ def replay_simple_broker_with_ddl(
 def _last_writer_fold(rows: DataFrame) -> DataFrame:
     """Shared consumer apply: last-writer state per (schema, table, key)
     ordered by (commit_ts, segment position), live rows only. Every
-    protocol's replay ends here — the consumer-side mirror of the
-    MySQL-sink apply (cmd/kafka-consumer/writer.go funnels all five
-    decoders into the same downstream apply). One keyed fold shuffle."""
+    broker protocol's replay ends here — the consumer-side mirror of the
+    MySQL-sink apply (cmd/kafka-consumer/writer.go funnels all its
+    decoders into the same downstream apply). One keyed fold shuffle.
+
+    Control messages (NULL ``_op_class``) sort after every row message
+    of their key and count toward no contract, so they never win. They
+    are dropped with the deletes after the window: a filter before it
+    would be pushed below the decode and run the decoder twice.
+
+    Segment positions compare only within one (topic, partition), so a
+    key seen in more than one fails the replay (the key-sticky
+    contract). collect_set rides the fold's window partitioning — no
+    extra shuffle. The assert is folded INTO the row-number filter
+    (null-on-success + coalesce true): a free-standing asserted column
+    that is later .drop()ped is pruned by Catalyst and the guard
+    silently dies."""
+    row_msg = F.col("_op_class").isNotNull()
     w = Window.partitionBy("schema", "table", "key").orderBy(
+        row_msg.desc(),
         F.col("commit_ts").desc(),
         *[F.col(c).desc() for c in _POSITION],
     )
+    n_parts = F.size(
+        F.collect_set(F.when(row_msg, F.struct("topic", "partition"))).over(
+            w.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        )
+    )
+    # format_string renders a NULL key as "null"; concat would be NULL
+    contract = F.coalesce(
+        F.assert_true(
+            F.col("_nparts") <= 1,
+            F.format_string(
+                "replay contract violated: key observed in multiple "
+                "broker (topic, partition)s: %s.%s/%s",
+                "schema", "table", "key",
+            ),
+        ).cast("boolean"),
+        F.lit(True),
+    )
+    # both window columns in one projection share the computed sort key,
+    # so the fold pays one Sort
     last = (
-        rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "commit_ts", *_POSITION)
+        rows.withColumns({"_nparts": n_parts, "_rn": F.row_number().over(w)})
+        .filter(contract & (F.col("_rn") == 1))
+        .drop("_rn", "_nparts", "commit_ts", *_FRAME)
     )
     return last.filter(F.col("_op_class") != "D").drop("_op_class")
 
@@ -336,13 +326,12 @@ def replay_debezium_broker_to_state(
     key by the before-image, everything else by after.
 
     Output: (schema, table, key, id, balance, note) live rows.
-    Scale shape: one from_json map stage, one (schema, table, key) fold
+    Scale shape: one JSON decode map stage, one (schema, table, key) fold
     shuffle; broker scan prunes by topic."""
     from tiflow_spark.codecs.debezium import decode_debezium
-    from tiflow_spark.sinks.mq import read_segments
 
     msgs = read_segments(spark, broker_dir, topic)
-    dec = decode_debezium(msgs, extra_cols=_POSITION)
+    dec = decode_debezium(msgs, extra_cols=_FRAME)
     img = F.when(F.col("op") == "D", F.col("before")).otherwise(
         F.col("after")
     )
@@ -352,7 +341,7 @@ def replay_debezium_broker_to_state(
         img["id"].cast("string").alias("key"),
         F.col("op").alias("_op_class"),
         "commit_ts",
-        *_POSITION,
+        *_FRAME,
         img["id"].alias("id"),
         img["balance"].alias("balance"),
         img["note"].alias("note"),
@@ -379,10 +368,9 @@ def replay_avro_broker_to_state(
     the one place a pandas_udf is the right tool), one keyed fold
     shuffle; broker scan prunes by topic."""
     from tiflow_spark.codecs.avro import decode_avro
-    from tiflow_spark.sinks.mq import read_segments
 
     msgs = read_segments(spark, broker_dir, topic, value_type="binary")
-    dec = decode_avro(msgs, extra_cols=("topic", *_POSITION))
+    dec = decode_avro(msgs, extra_cols=_FRAME)
     dot = F.instr(F.col("topic"), ".")
     rows = dec.select(
         F.when(dot > 0, F.substring_index("topic", ".", 1))
@@ -397,7 +385,7 @@ def replay_avro_broker_to_state(
         F.col("id").cast("string").alias("key"),
         F.col("op").alias("_op_class"),
         "commit_ts",
-        *_POSITION,
+        *_FRAME,
         "id",
         "balance",
         "note",
@@ -415,48 +403,38 @@ def replay_open_broker_to_state(
     key JSON carries (ts, scm, tbl, type), value carries u/d column-object
     maps whose ``h`` flag marks HANDLE columns — so the fold key comes
     from the protocol itself (no pkNames side channel, unlike canal-json).
-    Resolved (t=3) keys are dropped. Last-writer fold on (commit_ts,
-    segment position); full-precision ts makes the fold total per key
-    without the canal ms-truncation caveat.
+    DDL (t=2) and resolved (t=3) messages decode to a NULL op and never
+    win a key. Last-writer fold on (commit_ts, segment position);
+    full-precision ts makes the fold total per key without the canal
+    ms-truncation caveat.
 
-    Scale shape: one from_json map stage, one (schema, table, key) fold
+    Scale shape: one JSON decode map stage, one (schema, table, key) fold
     shuffle; broker scan prunes by topic."""
-    from tiflow_spark.sinks.mq import read_segments
+    from tiflow_spark.codecs.open_protocol import decode_open_protocol
 
-    msgs = read_segments(spark, broker_dir, topic)
-    key_schema = "ts BIGINT, scm STRING, tbl STRING, t INT"
-    col_obj = "STRUCT<t: INT, h: BOOLEAN, v: STRING>"
-    val_schema = f"u MAP<STRING, {col_obj}>, d MAP<STRING, {col_obj}>"
-    k = F.from_json(F.col("key"), key_schema)
-    v = F.from_json(F.col("value"), val_schema)
-    rows = msgs.select(
-        *_POSITION,
-        k.alias("k"),
-        v.alias("m"),
-    ).filter(F.col("k.t") == 1)
-    img = F.coalesce(F.col("m.u"), F.col("m.d"))
+    dec = decode_open_protocol(
+        read_segments(spark, broker_dir, topic), extra_cols=_FRAME
+    )
     handle_keys = F.array_sort(
-        F.map_keys(F.map_filter(img, lambda _c, o: o["h"]))
+        F.map_keys(F.map_filter("image", lambda _c, o: o["h"]))
     )
     key = F.array_join(
-        F.transform(handle_keys, lambda c: F.element_at(img, c)["v"]), "|"
+        F.transform(handle_keys, lambda c: F.element_at("image", c)["v"]),
+        "|",
     )
-    typed = [
-        F.element_at(img, F.lit(name))["v"].cast(t).alias(name)
-        for name, t in payload_types.items()
-    ]
-    flat = rows.select(
-        F.col("k.scm").alias("schema"),
-        F.col("k.tbl").alias("table"),
+    rows = dec.select(
+        "schema",
+        "table",
         key.alias("key"),
-        F.when(F.col("m.d").isNotNull(), "D").otherwise("U").alias(
-            "_op_class"
-        ),
-        F.col("k.ts").alias("commit_ts"),
-        *_POSITION,
-        *typed,
+        F.col("op_class").alias("_op_class"),
+        "commit_ts",
+        *_FRAME,
+        *[
+            F.element_at("image", F.lit(name))["v"].cast(t).alias(name)
+            for name, t in payload_types.items()
+        ],
     )
-    return _last_writer_fold(flat)
+    return _last_writer_fold(rows)
 
 
 def replay_storage_csv_to_state(
@@ -480,7 +458,7 @@ def replay_storage_csv_to_state(
     assumption). ENFORCED, not assumed: a key whose winning commit_ts
     carries more than one row fails the replay loudly instead of
     silently picking an arbitrary image (same contract discipline as
-    replay_broker_to_state's key-sticky assert); the check rides the
+    _last_writer_fold's key-sticky assert); the check rides the
     fold's window partitioning — no extra shuffle.
 
     Output: (schema, table, key, <payload cols>) live rows.
@@ -494,10 +472,11 @@ def replay_storage_csv_to_state(
         read_storage_sink,
     )
 
-    _t = {"bigint": T.LongType(), "double": T.DoubleType(),
-          "string": T.StringType()}
     payload = T.StructType(
-        [T.StructField(c, _t[t]) for c, t in payload_types.items()]
+        [
+            T.StructField(c, T.DataType.fromDDL(t))
+            for c, t in payload_types.items()
+        ]
     )
     dec = read_storage_sink(
         spark, base_dir, payload, cfg or StorageSinkConfig()
@@ -530,11 +509,9 @@ def replay_storage_csv_to_state(
     contract = F.coalesce(
         F.assert_true(
             F.col("_top") <= 1,
-            F.concat(
-                F.lit("csv replay contract violated: tied commit_ts "
-                      "for key "),
-                F.col("schema"), F.lit("."), F.col("table"),
-                F.lit("/"), F.col("key"),
+            F.format_string(
+                "csv replay contract violated: tied commit_ts for key "
+                "%s.%s/%s", "schema", "table", "key",
             ),
         ).cast("boolean"),
         F.lit(True),
@@ -565,24 +542,22 @@ def replay_simple_broker_to_state(
     are the protocol's string-rendered images, re-typed for the fold.
 
     Output: (schema, table, key, id, balance, note) live rows.
-    Scale shape: one from_json map stage, one keyed fold shuffle;
+    Scale shape: one JSON decode map stage, one keyed fold shuffle;
     broker scan prunes by topic."""
     from tiflow_spark.codecs.simple import decode_simple
-    from tiflow_spark.sinks.mq import read_segments
 
     msgs = read_segments(spark, broker_dir, topic)
-    dec = decode_simple(msgs, extra_cols=_POSITION)
-    dml = dec.filter(F.col("op").isNotNull())  # bootstrap frames dropped
+    dec = decode_simple(msgs, extra_cols=_FRAME)
     img = F.when(F.col("op") == "D", F.col("old_image")).otherwise(
         F.col("image")
     )
-    rows = dml.select(
+    rows = dec.select(
         "schema",
         "table",
         img["id"].alias("key"),
         F.col("op").alias("_op_class"),
         "commit_ts",
-        *_POSITION,
+        *_FRAME,
         img["id"].cast("long").alias("id"),
         img["balance"].cast("double").alias("balance"),
         img["note"].alias("note"),
