@@ -1,5 +1,6 @@
 import os
 import re
+import threading
 import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
@@ -42,6 +43,28 @@ def count_jobs(spark: SparkSession):
         sc.setLocalProperty("spark.jobGroup.id", prev)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         out.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextmanager
+def count_py4j(spark: SparkSession):
+    """Count the py4j commands the calling thread sends to the JVM inside
+    the block; each is one driver-to-JVM round trip. Counts the commands
+    of plan building as well as of actions."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    caller = threading.get_ident()
+    out = SimpleNamespace(n=0)
+
+    def send_command(*args, **kwargs):
+        if threading.get_ident() == caller:
+            out.n += 1
+        return real(*args, **kwargs)
+
+    client.send_command = send_command
+    try:
+        yield out
+    finally:
+        client.send_command = real
 
 
 def crash_once(monkeypatch, obj, attr: str, when):

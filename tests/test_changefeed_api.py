@@ -127,8 +127,9 @@ def test_mq_in_place_encode_matches_join_path(
 ):
     """Encoding the dispatched frame in place writes the same broker rows
     as encoding the source separately and joining the messages back to
-    their routing columns on (commit_ts, seq). The broker key stays the
-    routed handle key, also for protocols that emit a key of their own."""
+    their routing columns on (commit_ts, seq). The broker key is the
+    protocol's own key where the encoder emits one, else the routed
+    handle key."""
     from tiflow_spark.operators import filters as flt
     from tiflow_spark.operators import transforms as tfm
     from tiflow_spark.operators.dispatchers import dispatch
@@ -146,10 +147,13 @@ def test_mq_in_place_encode_matches_join_path(
         tfm.route(flt.apply_filters(env, DEMO_CFG), DEMO_CFG)
     )
     d = dispatch(env, DEMO_CFG, num_partitions=4)
-    value = _mq_encode(env, protocol).select("commit_ts", "seq", "value")
-    joined = d.select("topic", "partition", "key", "commit_ts", "seq").join(
-        value, ["commit_ts", "seq"]
-    )
+    enc = _mq_encode(env, protocol)
+    key_from_encoder = ["key"] if "key" in enc.columns else []
+    key_from_routing = [] if key_from_encoder else ["key"]
+    value = enc.select("commit_ts", "seq", "value", *key_from_encoder)
+    joined = d.select(
+        "topic", "partition", *key_from_routing, "commit_ts", "seq"
+    ).join(value, ["commit_ts", "seq"])
     ref = str(tmp_path / "ref")
     produce_file_broker(joined, ref, batch_id=0)
 
@@ -160,6 +164,57 @@ def test_mq_in_place_encode_matches_join_path(
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+_PAYLOAD_TYPES = {"id": "bigint", "balance": "double", "note": "string"}
+
+
+def _replays():
+    from tiflow_spark.streaming import consumer
+
+    return {
+        # schema from the wire: the types come from the mysqlType maps
+        "canal-json": lambda s, b: consumer.replay_broker_to_state(s, b),
+        "debezium": consumer.replay_debezium_broker_to_state,
+        "open-protocol": lambda s, b: consumer.replay_open_broker_to_state(
+            s, b, _PAYLOAD_TYPES
+        ),
+        "simple": consumer.replay_simple_broker_to_state,
+    }
+
+
+@pytest.mark.parametrize("protocol", sorted(set(_MQ_ENCODERS) & set(_replays())))
+def test_mq_changefeed_round_trips_every_protocol(
+    spark, sf_dir, source_dir, tmp_path, protocol
+):
+    """A topic made by create_changefeed replays, with its protocol's
+    consumer, to the state of applying the routed changes directly. The
+    consumer reads what the protocol puts on the wire, the message key
+    included: open-protocol keeps table identity and message type in it."""
+    from tiflow_spark.operators import filters as flt
+    from tiflow_spark.operators import transforms as tfm
+    from tiflow_spark.operators.apply import changes_to_state
+
+    _, broker = create_changefeed(
+        spark, source_dir, DEMO_CFG,
+        f"kafka://broker:9092/cdc?protocol={protocol}&partition-num=4",
+        str(tmp_path / "wd"),
+    )
+    replayed = _replays()[protocol](spark, broker).select(
+        "table", "key", "id", "balance", "note"
+    )
+    env = events_to_changes(load_table(spark, sf_dir, "events"))
+    transformed = tfm.split_updates(
+        tfm.route(flt.apply_filters(env, DEMO_CFG), DEMO_CFG)
+    )
+    expected = changes_to_state(transformed, table_col="table").select(
+        F.col("target_table").alias("table"),
+        F.col("id").cast("string").alias("key"),
+        "id", "balance", "note",
+    )
+    assert replayed.count() == expected.count() > 0
+    assert replayed.exceptAll(expected).count() == 0
+    assert expected.exceptAll(replayed).count() == 0
 
 
 def test_changefeed_to_storage_kind(spark, source_dir, tmp_path):

@@ -954,3 +954,128 @@ def test_csv_replay_casts_any_type_string(spark, work_dir):
     assert dict(got.dtypes)["id"] == "int"
     assert {tuple(r) for r in got.select("key", "id", "balance", "note")
             .collect()} == {("1", 1, 3.0, "c"), ("2", 2, 2.0, "b")}
+
+
+_ACCT_TYPES = {"balance": "double", "id": "bigint", "note": "string"}
+
+
+def _produce_canal_tables(spark, broker, topics):
+    """Two tables with different payloads, each canal-json encoded into
+    its own topic: ``acct`` (id, balance, note) and ``inv`` (sku, qty)."""
+    from tiflow_spark.codecs.canal_json import encode_canal_json
+    from tiflow_spark.sinks.mq import produce_file_broker
+
+    acct = spark.createDataFrame(
+        [
+            ("I", "s", "acct", 100, 1, None, (1, 1.0, "a")),
+            ("U", "s", "acct", 200, 2, (1, 1.0, "a"), (1, 2.5, "b")),
+        ],
+        "op string, schema string, table string, commit_ts long, "
+        "seq long, before struct<id: bigint, balance: double, note: string>, "
+        "after struct<id: bigint, balance: double, note: string>",
+    )
+    inv = spark.createDataFrame(
+        [("I", "s", "inv", 300, 3, None, ("k1", 7))],
+        "op string, schema string, table string, commit_ts long, "
+        "seq long, before struct<sku: string, qty: int>, "
+        "after struct<sku: string, qty: int>",
+    )
+    for (env, pk), topic in zip(((acct, ("id",)), (inv, ("sku",))), topics):
+        placed = env.withColumns(
+            {
+                "topic": F.lit(topic),
+                "partition": F.lit(0),
+                "key": F.lit(None).cast("string"),
+            }
+        )
+        produce_file_broker(
+            encode_canal_json(
+                placed, pk_names=pk, extra_cols=("topic", "partition", "key")
+            ),
+            broker,
+        )
+
+
+def _replayed_types(df):
+    return {
+        f.name: f.dataType.simpleString()
+        for f in df.schema.fields
+        if f.name not in ("schema", "table", "key")
+    }
+
+
+def test_schema_from_wire_replay_builds_without_a_spark_job(spark, work_dir):
+    """The mysqlType peek reads the segment files on the driver, so
+    building the schema-from-wire replay launches no Spark job."""
+    from conftest import count_jobs
+
+    broker = f"{work_dir}/broker"
+    _produce_canal_tables(spark, broker, ("ta", "tb"))
+    with count_jobs(spark) as jobs:
+        replayed = replay_broker_to_state(spark, broker, topic="ta")
+    assert jobs.n == 0
+    assert _replayed_types(replayed) == _ACCT_TYPES
+    assert [tuple(r) for r in replayed.collect()] == [
+        ("s", "acct", "1", 2.5, 1, "b")
+    ]
+
+
+def test_schema_from_wire_replay_picks_the_topics_types(spark, work_dir):
+    """With two topics carrying different tables, ``topic=`` takes the
+    types from that topic's messages."""
+    broker = f"{work_dir}/broker"
+    _produce_canal_tables(spark, broker, ("ta", "tb"))
+    assert _replayed_types(
+        replay_broker_to_state(spark, broker, topic="ta")
+    ) == _ACCT_TYPES
+    inv = replay_broker_to_state(spark, broker, topic="tb")
+    assert _replayed_types(inv) == {"qty": "bigint", "sku": "string"}
+    assert [tuple(r) for r in inv.collect()] == [("s", "inv", "k1", 7, "k1")]
+
+
+def test_schema_from_wire_replay_reads_an_escaped_topic(spark, work_dir):
+    """Spark escapes a topic name with '/', ':', '=' or '%' in its
+    ``topic=`` directory; the peek matches the real name and reads the
+    same types as for a plain topic."""
+    import os
+
+    broker = f"{work_dir}/broker"
+    topic = "cdc/acct:v=1%"
+    _produce_canal_tables(spark, broker, (topic, "tb"))
+    assert f"topic={topic}" not in os.listdir(broker)
+    replayed = replay_broker_to_state(spark, broker, topic=topic)
+    assert _replayed_types(replayed) == _ACCT_TYPES
+    assert replayed.count() == 1
+
+
+def test_schema_from_wire_replay_needs_a_dml_message(spark, work_dir):
+    """A topic that holds only DDL and watermark messages has no
+    mysqlType map to type the replay with: it fails loudly, even when
+    another topic of the broker carries DML."""
+    from tiflow_spark.codecs.canal_json import (
+        encode_canal_json_checkpoint,
+        encode_canal_json_ddl,
+    )
+    from tiflow_spark.sinks.mq import produce_file_broker
+
+    broker = f"{work_dir}/broker"
+    _produce_canal_tables(spark, broker, ("ta", "tb"))
+    ddl = spark.createDataFrame(
+        [("s", "acct", 50, 0, "create table",
+          "CREATE TABLE acct (id BIGINT PRIMARY KEY)")],
+        "schema string, table string, commit_ts long, seq long, "
+        "ddl_type string, query string",
+    )
+    frame = {"topic": F.lit("tc"), "partition": F.lit(0),
+             "key": F.lit(None).cast("string")}
+    produce_file_broker(encode_canal_json_ddl(ddl).withColumns(frame), broker)
+    resolved = spark.createDataFrame([(400,)], "resolved_ts long")
+    produce_file_broker(
+        encode_canal_json_checkpoint(resolved).withColumns(
+            {**frame, "commit_ts": F.col("resolved_ts"), "seq": F.lit(0)}
+        ),
+        broker,
+        batch_id=1,
+    )
+    with pytest.raises(ValueError, match="no DML message with a mysqlType map"):
+        replay_broker_to_state(spark, broker, topic="tc")

@@ -1,4 +1,5 @@
-"""``session.materialize_boundary``: the reliable-checkpoint hand-off."""
+"""``session``: the session defaults and ``materialize_boundary``, the
+reliable-checkpoint hand-off."""
 
 import os
 
@@ -33,3 +34,28 @@ def test_reliable_boundary_checkpoints_under_checkpoint_dir(
     out = materialize_boundary(df.filter("id % 2 = 0"))
     assert out.count() == 500
     assert _checkpointed_rdds(spark) > first
+
+
+def test_session_turns_dataframe_origin_capture_off(spark, sf_dir, monkeypatch):
+    """``get_spark`` turns PySpark's per-call origin capture off. With it
+    on, building the transform plan over the demo envelope sends at least
+    twice the py4j round trips."""
+    import pyspark.errors.utils as eu
+    from conftest import count_py4j
+
+    from tiflow_spark.envelope import events_to_changes, load_table
+    from tiflow_spark.plans.parity import DEMO_CFG
+    from tiflow_spark.streaming.pipeline import transform_stream
+
+    assert (
+        spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
+        == "false"
+    )
+    assert eu.is_debugging_enabled() is False
+    env = events_to_changes(load_table(spark, sf_dir, "events"))
+    with count_py4j(spark) as off:
+        transform_stream(env, DEMO_CFG)
+    monkeypatch.setattr(eu, "_enable_debugging_cache", True)
+    with count_py4j(spark) as on:
+        transform_stream(env, DEMO_CFG)
+    assert 0 < off.n <= on.n / 2, (off.n, on.n)

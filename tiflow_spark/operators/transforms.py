@@ -164,11 +164,13 @@ def split_updates(
     the split. The seq sub-sequencing and key assignment still apply so
     raw and split streams stay order-comparable.
     """
+    # one schema fetch (a py4j call plus a JSON parse) serves every use
+    schema = env.schema
+    other_cols = [
+        c for c in schema.names
+        if c not in ("op", "before", "after", "seq", "key")
+    ]
     if output_raw_change_event:
-        other_cols = [
-            c for c in env.columns
-            if c not in ("op", "before", "after", "seq", "key")
-        ]
         return env.select(
             "op",
             *other_cols,
@@ -188,13 +190,13 @@ def split_updates(
     d_part = F.struct(
         F.lit("D").alias("op"),
         F.col("before").alias("before"),
-        F.lit(None).cast(env.schema["after"].dataType).alias("after"),
+        F.lit(None).cast(schema["after"].dataType).alias("after"),
         (F.col("seq") * 2).alias("seq"),
         F.col("before.id").cast("string").alias("key"),
     )
     i_part = F.struct(
         F.lit("I").alias("op"),
-        F.lit(None).cast(env.schema["before"].dataType).alias("before"),
+        F.lit(None).cast(schema["before"].dataType).alias("before"),
         F.col("after").alias("after"),
         (F.col("seq") * 2 + 1).alias("seq"),
         F.col("after.id").cast("string").alias("key"),
@@ -211,9 +213,6 @@ def split_updates(
     parts = F.when(identity_changed, F.array(d_part, i_part)).otherwise(
         F.array(keep)
     )
-    other_cols = [
-        c for c in env.columns if c not in ("op", "before", "after", "seq", "key")
-    ]
     return env.select(*other_cols, F.explode(parts).alias("_p")).select(
         F.col("_p.op").alias("op"),
         *other_cols,

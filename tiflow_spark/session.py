@@ -3,6 +3,17 @@
 Defaults are sized for local[32] testing but every knob is the one you would
 set on a real cluster: AQE handles skew/coalescing at 100 TB, Arrow keeps the
 Python boundary vectorized, UTC keeps epoch math portable across engines.
+
+PySpark's per-call origin capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off. With it on, each
+``DataFrame`` and ``functions`` call walks the Python stack, looks for
+IPython on ``sys.path`` and sends about five extra py4j commands to record
+its call site: building the MQ changefeed's plan
+(``tools.create_changefeed``) took 2,623 round trips instead of 935, a
+median of 406 ms against 253 ms on a 4-core VM. What an error loses is PySpark's
+Python call-site block (the ``== DataFrame ==`` file:line context); Spark's
+own message, error class and JVM stack trace stay. PySpark reads the flag
+once per process, from the first active session.
 """
 
 from __future__ import annotations
@@ -41,6 +52,8 @@ def get_spark(app_name: str = "tiflow-spark", master: str | None = None) -> Spar
             "true",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no per-call origin capture on the driver (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")

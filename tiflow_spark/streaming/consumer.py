@@ -28,7 +28,10 @@ consumer):
 Scale shape: the broker is read under its fixed segment schema (no
 inference job) and prunes by topic; decode is one map stage; the fold is
 the only shuffle, keyed by (schema, table, key). Folds never number
-offsets, so they pay no (topic, partition) exchange. No driver loops.
+offsets, so they pay no (topic, partition) exchange. No driver loops over
+the data: the one driver-side read is metadata-scale, the canal replay's
+schema-from-wire peek at one message's ``mysqlType`` map
+(`_wire_mysql_types`), done with pyarrow instead of a Spark job.
 """
 
 from __future__ import annotations
@@ -62,8 +65,11 @@ def replay_broker_to_state(
     base type via utils.ExtractBasicMySQLType), which by construction
     tolerates BOTH plain lowercase names and content-compatible FULL
     descriptors ('bigint(20) unsigned'-style, mysql_types.go:36-44 cuts
-    at the first '(' or ' '). One single-message driver peek —
-    metadata-scale, never the data.
+    at the first '(' or ' '). The map is read on the driver from the
+    segment files with pyarrow (`_wire_mysql_types`): the first message
+    whose ``mysqlType`` is a string→string map, in the ``topic`` when one
+    is given. That read is metadata-scale (it stops at the first row
+    message) and launches no Spark job.
 
     ``use_tidb_extension``: the topic was produced with
     enable-tidb-extension=true, so every message carries the EXACT
@@ -82,20 +88,9 @@ def replay_broker_to_state(
     if payload_types is None:
         from tiflow_spark.types import spark_cast_for_mysql_type
 
-        peek = (
-            dec.select(F.col("mysql_type").alias("mt"))
-            .filter(F.col("mt").isNotNull())
-            .limit(1)
-            .collect()
-        )
-        if not peek:
-            raise ValueError(
-                "schema-from-wire replay: no DML message with a mysqlType "
-                "map found on the topic"
-            )
         payload_types = {
             name: spark_cast_for_mysql_type(t)
-            for name, t in sorted(peek[0].mt.items())
+            for name, t in sorted(_wire_mysql_types(broker_dir, topic).items())
         }
     if use_tidb_extension:
         # decoder parity: the extension is mandatory on an extension-enabled
@@ -129,6 +124,45 @@ def replay_broker_to_state(
         ],
     )
     return _last_writer_fold(rows)
+
+
+def _wire_mysql_types(broker_dir: str, topic: str | None) -> dict[str, str]:
+    """The ``mysqlType`` map of the first message that carries one as a
+    string→string map, read from the segment files on the driver. The
+    segments are hive-partitioned by Spark, which escapes the topic in its
+    ``topic=`` directory name; pyarrow's hive partitioning unescapes it, so
+    the ``topic`` filter compares the real name. Files are read one at a
+    time and the scan stops at the first hit; DDL and watermark messages
+    carry a null map and are passed over."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    segments = ds.dataset(
+        broker_dir,
+        format="parquet",
+        partitioning=ds.partitioning(
+            pa.schema([("topic", pa.string()), ("partition", pa.int32())]),
+            flavor="hive",
+        ),
+    )
+    only = None if topic is None else ds.field("topic") == topic
+    for fragment in segments.get_fragments(filter=only):
+        for batch in fragment.to_batches(columns=["value"], batch_size=256):
+            for value in batch.column(0).to_pylist():
+                try:
+                    mt = json.loads(value).get("mysqlType")
+                except (TypeError, ValueError, AttributeError):
+                    continue
+                if isinstance(mt, dict) and all(
+                    isinstance(t, str) for t in mt.values()
+                ):
+                    return mt
+    raise ValueError(
+        "schema-from-wire replay: no DML message with a mysqlType "
+        "map found on the topic"
+    )
 
 
 def replay_simple_broker_with_ddl(

@@ -104,6 +104,13 @@ _MQ_ENCODERS = {
     "open-protocol": "open_protocol:encode_open_protocol",
     "simple": "simple:encode_simple",
 }
+#: protocols whose encoder emits the message key the protocol defines:
+#: open-protocol's MessageKey JSON (ts, scm, tbl, t), where its consumer
+#: reads table identity and message type, and debezium's handle-key
+#: envelope ({"payload": {...}}, codec.go EncodeKey). The others define no
+#: row-message key (maxwell's encoder drops its MessageKey, see
+#: codecs/maxwell.py), so their messages carry the routed handle key.
+_OWN_KEY_PROTOCOLS = frozenset({"debezium", "open-protocol"})
 
 
 def _mq_encode(
@@ -210,17 +217,10 @@ def create_changefeed(
         validate_codec_config(codec_config_from_params(params, protocol))
         n_parts = int(params.get("partition-num", "16"))
         d = dispatch(env, cfg, num_partitions=n_parts, scheme=spec.scheme)
-        # the routed handle key rides under a private name because
-        # open-protocol and debezium emit a protocol `key` of their own;
-        # the broker's key stays the handle key
-        enc = _mq_encode(
-            d.withColumn("_handle_key", F.col("key")),
-            protocol,
-            extra_cols=("topic", "partition", "_handle_key"),
-        )
-        msgs = enc.withColumn("key", F.col("_handle_key")).select(
-            *MESSAGE_COLS
-        )
+        key = () if protocol in _OWN_KEY_PROTOCOLS else ("key",)
+        msgs = _mq_encode(
+            d, protocol, extra_cols=("topic", "partition", *key)
+        ).select(*MESSAGE_COLS)
         broker = os.path.join(work_dir, "broker")
         produce_file_broker(msgs, broker, batch_id=0)
         # DDL side-channel → the topic itself (ddlsink/mq: table topic,
